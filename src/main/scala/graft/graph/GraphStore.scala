@@ -24,6 +24,20 @@ class EdgeStore(spark: SparkSession, basePath: String) {
   def getParallelism(edgeCount: Long, taskSize: Long = 25000, minParallelism: Int = 100): Int =
     math.max((edgeCount / taskSize + 1).toInt, minParallelism)
 
+  /** Validates a rule's edge schema, then adds the reversed copy of every
+    * edge when `bidirectional`.
+    */
+  private def oriented(edges: DataFrame, label: String, bidirectional: Boolean): DataFrame = {
+    VertexClassifierRule.validate(edges.schema, label)
+    if (!bidirectional) edges
+    else
+      edges.union(
+        edges.select(
+          col(EdgeColumns.Dst).as(EdgeColumns.Src),
+          col(EdgeColumns.Src).as(EdgeColumns.Dst),
+          col(EdgeColumns.PropVal)))
+  }
+
   /** Writes one rule's edge set, partitioned by edge label.
     *
     * Bidirectionality: the reference writes each edge twice (forward +
@@ -42,18 +56,7 @@ class EdgeStore(spark: SparkSession, basePath: String) {
       bidirectional: Boolean = false,
       mode: SaveMode = SaveMode.Append
   ): Unit = {
-    VertexClassifierRule.validate(edges.schema, label)
-    val oriented =
-      if (bidirectional)
-        edges.union(
-          edges.select(
-            col(EdgeColumns.Dst).as(EdgeColumns.Src),
-            col(EdgeColumns.Src).as(EdgeColumns.Dst),
-            col(EdgeColumns.PropVal)
-          )
-        )
-      else edges
-    oriented
+    oriented(edges, label, bidirectional)
       .repartition(col(EdgeColumns.Src))
       .write
       .mode(mode)
@@ -77,21 +80,13 @@ class EdgeStore(spark: SparkSession, basePath: String) {
       bidirectional: Boolean = false,
       mode: SaveMode = SaveMode.Overwrite
   ): Unit = {
-    VertexClassifierRule.validate(edges.schema, tableName)
-    val oriented =
-      if (bidirectional)
-        edges.union(
-          edges.select(
-            col(EdgeColumns.Dst).as(EdgeColumns.Src),
-            col(EdgeColumns.Src).as(EdgeColumns.Dst),
-            col(EdgeColumns.PropVal)))
-      else edges
+    val edgeSet = oriented(edges, tableName, bidirectional)
     // buckets <= 0: derive the bucket count from the edge count with the
     // reference's writer-parallelism rule (getParallelism) — one count()
     // pass, paid once at layout time so every later src-keyed read gets a
     // properly-sized shuffle-free layout
-    val n = if (buckets > 0) buckets else getParallelism(oriented.count())
-    oriented.write
+    val n = if (buckets > 0) buckets else getParallelism(edgeSet.count())
+    edgeSet.write
       .mode(mode)
       .bucketBy(n, EdgeColumns.Src)
       .sortBy(EdgeColumns.Src)

@@ -120,12 +120,6 @@ class IdManager(spark: SparkSession, config: IdManagerConfig) {
     fs.rename(tmp, sidecarPath)
   }
 
-  /** Last assigned id without touching the data files when the sidecar is
-    * present; full-table `max(id)` fallback otherwise.
-    */
-  def lastAssignedId(schema: StructType): Long =
-    readMaxIdSidecar().getOrElse(fetchId(readAll(schema)))
-
   /** Id-stamps the current batch (continuing from the table's max id),
     * appends it to the vertex table partitioned by year/month/day, and
     * returns (loaded, current-with-ids).
@@ -140,8 +134,7 @@ class IdManager(spark: SparkSession, config: IdManagerConfig) {
     * prunes.
     */
   def process(df: DataFrame, loadedRange: Option[PartitionManager] = None): VertexData = {
-    val full     = readAll(df.schema)
-    val loaded   = loadedRange.map(pm => full.where(pm.partitionPredicate)).getOrElse(full)
+    val loaded = loadedRange.fold(readAll(df.schema))(readRange(df.schema, _))
     // Steady state reads the sidecar, not the table (see readMaxIdSidecar) —
     // but never trusts it alone: an out-of-band writer that appended higher
     // ids would leave the sidecar stale LOW, and reusing ids is the one
@@ -166,15 +159,15 @@ class IdManager(spark: SparkSession, config: IdManagerConfig) {
         else
           log.info(s"id continuation from _last_id sidecar: $sc (scan lower bound $scanned)")
         math.max(sc, scanned)
-      case None => fetchId(full)
+      case None => fetchId(readAll(df.schema))
     }
     // custom plan-integrated operator (InternalRow zipWithIndex, no
     // Row round trip); ZipWithIndex is the public-API equivalent
     val dfWithId = org.apache.spark.sql.graft.DenseId.assign(df, lastMax)
     // tracked, not bare-cached: the id-stamped batch feeds the sidecar
     // count, the append, and the caller's classify+count — all inside one
-    // load — then must not outlive the load in a long session (the shell's
-    // run() epilogue / harness Caches.clear() releases it)
+    // load — then must not outlive the load in a long session (GraftJob.load
+    // releases it; Caches.clear() does for other callers)
     graft.Caches.track(dfWithId)
     // advance the sidecar BEFORE appending (crash ⇒ gap, never reuse)
     writeMaxIdSidecar(lastMax + dfWithId.count())
@@ -202,13 +195,11 @@ class IdManager(spark: SparkSession, config: IdManagerConfig) {
     // a partition whose previous swap died between renames is missing under
     // its live name — heal every candidate dir BEFORE the existence probe,
     // or the crashed partition would be skipped forever
-    (pm.relativePaths ++ pm.copy(padded = !pm.padded).relativePaths).distinct.foreach { r =>
+    pm.relativePaths.foreach { r =>
       val dir = new org.apache.hadoop.fs.Path(s"$tablePath/$r")
       graft.io.AtomicSwap.heal(dir.getFileSystem(conf), dir)
     }
-    // probe both padded/unpadded layouts, like deletePartitions
-    val dirs = pm.existingPaths(spark, tablePath)
-    dirs.foreach { d =>
+    pm.existingPaths(spark, tablePath).foreach { d =>
       val dir = new org.apache.hadoop.fs.Path(d)
       val fs  = dir.getFileSystem(conf)
       graft.io.AtomicSwap.withMaintenanceLock(fs, dir) {
@@ -223,22 +214,13 @@ class IdManager(spark: SparkSession, config: IdManagerConfig) {
     }
   }
 
-  /** Deletes the table partitions matching the given (year, month, day)
-    * triples — the delete-mode analogue of `ALTER TABLE DROP PARTITION`.
+  /** Deletes the date range's table partitions, in either directory
+    * spelling — the delete-mode analogue of `ALTER TABLE DROP PARTITION`.
     * Ref: PartitionManager.scala:100-112 (deletePartitions), Job.scala:128-133.
     */
-  def deletePartitions(partitions: Seq[(Int, Int, Int)]): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration
-    )
-    // Source data uses zero-padded partition dirs (year=2019/month=02/day=01)
-    // while Spark's partitionBy writes int values unpadded — probe both, as
-    // the reference's padded/unpadded PartitionManager asymmetry requires
-    // (Job.scala:76 vs :123).
-    partitions.foreach { case (y, m, d) =>
-      Seq(f"$tablePath/year=$y/month=$m%02d/day=$d%02d", s"$tablePath/year=$y/month=$m/day=$d")
-        .map(new org.apache.hadoop.fs.Path(_))
-        .foreach(p => if (fs.exists(p)) fs.delete(p, true))
+  def deletePartitions(pm: PartitionManager): Unit =
+    pm.existingPaths(spark, tablePath).foreach { d =>
+      val dir = new org.apache.hadoop.fs.Path(d)
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
     }
-  }
 }

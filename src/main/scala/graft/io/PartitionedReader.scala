@@ -28,40 +28,36 @@ object DataFormat {
 
 /** Generates `year=YYYY/month=MM/day=DD` partition paths for a date range.
   *
-  * Ref: core/.../common/PartitionManager.scala:43-90,143-162. `padded=true`
-  * reproduces `PaddedPartitionManager` (zero-padded month/day, used by the
-  * load job); `padded=false` the plain `PartitionManagerImpl` (delete job).
+  * Ref: core/.../common/PartitionManager.scala:43-90,143-162. The reference
+  * has two implementations chosen per job: `PaddedPartitionManager`
+  * (zero-padded month/day, load job, Job.scala:76) and the plain
+  * `PartitionManagerImpl` (delete job, Job.scala:123). Here one manager
+  * knows both spellings: source fixtures use zero-padded dirs (`month=02`)
+  * while Spark's own `partitionBy` writes unpadded (`month=2`), and every
+  * probe looks for both, so either layout is readable, compactable and
+  * deletable.
   */
-case class PartitionManager(startDate: LocalDate, duration: Int, padded: Boolean = true) {
+case class PartitionManager(startDate: LocalDate, duration: Int) {
 
   def dates: Seq[LocalDate] = (0 until duration).map(startDate.plusDays(_))
 
+  /** Every spelling of each date's directory: zero-padded, then unpadded. */
   def relativePaths: Seq[String] =
-    dates.map { d =>
-      if (padded) f"year=${d.getYear}/month=${d.getMonthValue}%02d/day=${d.getDayOfMonth}%02d"
-      else s"year=${d.getYear}/month=${d.getMonthValue}/day=${d.getDayOfMonth}"
+    dates.flatMap { d =>
+      Seq(
+        f"year=${d.getYear}/month=${d.getMonthValue}%02d/day=${d.getDayOfMonth}%02d",
+        s"year=${d.getYear}/month=${d.getMonthValue}/day=${d.getDayOfMonth}")
     }
 
-  /** Paths that actually exist under basePath — the reference's FS-existence
-    * pre-filter, which (unlike a partition-pruning predicate over a plain
-    * `load(basePath)`) tolerates missing day directories without listing the
-    * full table. Ref: Reader.scala:56-70, PartitionManager.scala:72-90.
-    *
-    * Each date is probed in the configured padding first, then the other
-    * layout: source fixtures use zero-padded dirs (`month=02`) while Spark's
-    * own `partitionBy` writes unpadded (`month=2`) — the reference handles
-    * this with two separate PartitionManager impls chosen per job
-    * (Job.scala:76 vs :123); probing both makes either layout readable.
+  /** The [[relativePaths]] that actually exist under basePath, on basePath's
+    * file system — the reference's FS-existence pre-filter, which (unlike a
+    * partition-pruning predicate over a plain `load(basePath)`) tolerates
+    * missing day directories without listing the full table.
+    * Ref: Reader.scala:56-70, PartitionManager.scala:72-90.
     */
   def existingPaths(spark: SparkSession, basePath: String): Seq[String] = {
-    val base = new Path(basePath)
-    val fs   = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val alt  = copy(padded = !padded).relativePaths
-    relativePaths.zip(alt).flatMap { case (pref, fallback) =>
-      Seq(pref, fallback).distinct
-        .map(r => s"$basePath/$r")
-        .find(p => fs.exists(new Path(p)))
-    }
+    val fs = new Path(basePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    relativePaths.map(r => s"$basePath/$r").filter(p => fs.exists(new Path(p)))
   }
 
   /** Equivalent partition-pruning predicate, for reading through the catalog
@@ -77,8 +73,8 @@ case class PartitionManager(startDate: LocalDate, duration: Int, padded: Boolean
 
 object PartitionManager {
   private val fmt = DateTimeFormatter.ofPattern("yyyy-MM-dd")
-  def forRange(startDate: String, duration: Int, padded: Boolean = true): PartitionManager =
-    PartitionManager(LocalDate.parse(startDate, fmt), duration, padded)
+  def forRange(startDate: String, duration: Int): PartitionManager =
+    PartitionManager(LocalDate.parse(startDate, fmt), duration)
 }
 
 /** Configuration of the reader pipeline: which columns to keep, how to
@@ -120,11 +116,14 @@ class PartitionedReader(spark: SparkSession, config: ReaderConfig) {
       .load(paths: _*)
   }
 
-  /** read + keep/rename/derive; partition columns are always appended.
+  /** read + [[project]]. Ref: Reader.scala:75-103. */
+  def readAndProcess(pm: PartitionManager): DataFrame = project(read(pm))
+
+  /** keep/rename/derive over a raw frame (a [[read]], or one micro-batch of
+    * a stream of the same source); partition columns are always appended.
     * Ref: Reader.scala:75-103.
     */
-  def readAndProcess(pm: PartitionManager): DataFrame = {
-    val df = read(pm)
+  def project(df: DataFrame): DataFrame = {
     val partitionCols = List("year", "month", "day")
     val kept =
       config.keepCols.map(c => col(c)) ++

@@ -25,7 +25,7 @@ case class RulesConfig(
 
 /** Full job configuration: reader + id manager + edge store + rules.
   *
-  * `loadedDays`: default loaded-side date horizon for [[GraftJob.process]]
+  * `loadedDays`: loaded-side date horizon of [[GraftJob.process]]
   * (None = full history, the reference semantics; see
   * [[graft.ids.IdManager.readRange]] for the scale rationale).
   */
@@ -83,43 +83,50 @@ class GraftJob(spark: SparkSession, config: GraftConfig) {
         throw new IllegalArgumentException(s"Unknown rule: $other")
     }
 
-  /** One incremental load run over `[startDate, startDate + duration)`.
-    * Ref: Job.scala:71-115 (process), PaddedPartitionManager at :76.
+  /** One incremental load run over `[startDate, startDate + duration)`:
+    * [[PartitionedReader.readAndProcess]] then [[load]].
+    * Ref: Job.scala:71-115 (process).
     *
-    * `loadedDays`: restrict the loaded side of the edge-rule joins to the
-    * `loadedDays` days ending at `startDate + duration` (exclusive) via
+    * `config.loadedDays` restricts the loaded side of the edge-rule joins to
+    * the `loadedDays` days ending at `startDate + duration` (exclusive) via
     * [[IdManager.readRange]] — partition pruning instead of the reference's
     * full-history re-read (its own TODO, IDManagerSparkService.scala:135).
-    * `None` falls back to `config.loadedDays`, and an absent config value
-    * keeps exact reference semantics (join against all history); rules
-    * whose matches can only occur within a bounded time horizon (the
-    * common case for alert streams) should set one of the two.
+    * Unset keeps exact reference semantics (join against all history);
+    * rules whose matches can only occur within a bounded time horizon (the
+    * common case for alert streams) should set it.
     */
-  def process(startDate: String, duration: Int, loadedDays: Option[Int] = None): JobResult = {
-    val pm     = PartitionManager.forRange(startDate, duration, padded = true)
-    val reader = new PartitionedReader(spark, config.reader)
-    val df     = reader.readAndProcess(pm)
-
-    val loadedRange = loadedDays.orElse(config.loadedDays).map { days =>
+  def process(startDate: String, duration: Int): JobResult = {
+    val pm = PartitionManager.forRange(startDate, duration)
+    val loadedRange = config.loadedDays.map { days =>
       PartitionManager(pm.startDate.plusDays(duration.toLong - days), days)
     }
-    val vertexData: VertexData = idManager.process(df, loadedRange)
-    val rules = buildRules()
+    load(new PartitionedReader(spark, config.reader).readAndProcess(pm), loadedRange)
+  }
 
-    // Per-run counts, matching the reference (EdgeProcessor.scala:166): the
-    // classified set is cached so the count and the write share one
-    // computation, and the accumulated store — which grows without bound —
-    // is never re-read in the hot path.
-    val edgeCounts = rules.map { rule =>
+  /** Loads one projected batch: id-stamps and appends it
+    * ([[IdManager.process]], loaded side restricted to `loadedRange`), then
+    * runs every configured rule over (loaded, batch) and appends its edges.
+    * The one load path of both [[process]] and
+    * [[graft.streaming.StreamingIngest]].
+    *
+    * Per-run counts, matching the reference (EdgeProcessor.scala:166): each
+    * classified set is cached so the count and the write share one
+    * computation, and the accumulated store — which grows without bound —
+    * is never re-read in the hot path. The id-stamped batch is released at
+    * the end: it feeds nothing after the load.
+    */
+  def load(batch: DataFrame, loadedRange: Option[PartitionManager]): JobResult = {
+    val vertexData: VertexData = idManager.process(batch, loadedRange)
+    val edgeCounts = buildRules().map { rule =>
       val edges = rule.classify(vertexData.loaded, vertexData.current).cache()
-      VertexClassifierRule.validate(edges.schema, rule.name)
       val n = edges.count()
       edgeStore.write(edges, rule.getEdgeLabel, bidirectional = config.bidirectionalEdges)
       edges.unpersist()
       rule.getEdgeLabel -> (if (config.bidirectionalEdges) n * 2 else n)
     }.toMap
-
-    JobResult(vertexData.current.count(), edgeCounts)
+    val result = JobResult(vertexData.current.count(), edgeCounts)
+    vertexData.current.unpersist()
+    result
   }
 
   /** Maintenance mode: compacts the date range's vertex partitions and
@@ -134,15 +141,14 @@ class GraftJob(spark: SparkSession, config: GraftConfig) {
   }
 
   /** Delete mode: removes the date range's vertices and their incident
-    * edges. Ref: Job.scala:117-134 (unpadded PartitionManagerImpl at :123 —
-    * our int-valued partition dirs make padded/unpadded equivalent);
+    * edges, in either partition-dir spelling. Ref: Job.scala:117-134;
     * edge cleanup is the relational analogue of per-vertex `remove()` and
     * uses the file-restricted rewrite ([[EdgeStore.deleteForVerticesRestricted]])
     * — a day's deletion rewrites only the files holding incident edges,
     * not the whole accumulated store.
     */
   def delete(startDate: String, duration: Int, clearOnDelete: Boolean): Unit = {
-    val pm = PartitionManager.forRange(startDate, duration, padded = false)
+    val pm = PartitionManager.forRange(startDate, duration)
     val vertexTable = s"${config.idManager.dataPath}/${config.idManager.tableName}"
     val doomed: DataFrame =
       try spark.read.parquet(vertexTable).where(pm.partitionPredicate).select(col("id"))
@@ -152,10 +158,7 @@ class GraftJob(spark: SparkSession, config: GraftConfig) {
       try edgeStore.deleteForVerticesRestricted(label, doomed)
       catch { case _: org.apache.spark.sql.AnalysisException => () } // label never written
     }
-    if (clearOnDelete) {
-      val parts = pm.dates.map(d => (d.getYear, d.getMonthValue, d.getDayOfMonth))
-      idManager.deletePartitions(parts)
-    }
+    if (clearOnDelete) idManager.deletePartitions(pm)
   }
 }
 
@@ -196,9 +199,10 @@ object Main {
     }
     val opts = pairs.toMap ++ args.filter(bareFlags.contains).map(_ -> "true").toMap
     val preexisting = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).isDefined
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -230,7 +234,7 @@ object Main {
         fixedVertexCsvPath = opts.get("--fixed-csv").orElse(base.flatMap(_.rules.fixedVertexCsvPath))
       ),
       bidirectionalEdges = base.forall(_.bidirectionalEdges),
-      loadedDays = base.flatMap(_.loadedDays)
+      loadedDays = opts.get("--loaded-days").map(_.toInt).orElse(base.flatMap(_.loadedDays))
     )
     val job      = new GraftJob(spark, config)
     val start    = opts.getOrElse("--startdate",
@@ -243,7 +247,7 @@ object Main {
       job.delete(start, duration, clearOnDelete = opts.contains("--clear"))
       println(s"""{"deleted":"$start+$duration"}""")
     } else {
-      val r = job.process(start, duration, loadedDays = opts.get("--loaded-days").map(_.toInt))
+      val r = job.process(start, duration)
       println(s"""{"vertices":${r.vertexCount},"edges":{${r.edgeCounts.map { case (k, v) => s""""$k":$v""" }.mkString(",")}}}""")
     }
     if (!preexisting) spark.stop() // embedded callers (tests) keep their session

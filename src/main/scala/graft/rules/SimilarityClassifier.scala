@@ -5,16 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Configuration for [[SimilarityClassifier]].
   * Ref: common/.../models/Config.scala (SimilarityConfig).
-  *
-  * @param autoRewriteFlatOr when the expression is a flat OR of two or more
-  *        leaves, route through the union-of-equi-joins rewrite instead of
-  *        the literal theta-join: the OR predicate has no equi-conjunct, so
-  *        Spark plans BroadcastNestedLoopJoin — O(n²) at scale (the
-  *        reference's 55-minute edge phase, docs/Benchmarks.md:36-39). The
-  *        rewrite is result-identical (spec-proven A/B) and plans one hash
-  *        join per leaf. Disable to reproduce the reference's physical plan.
   */
-case class SimilarityConfig(similarityExp: String, autoRewriteFlatOr: Boolean = true)
+case class SimilarityConfig(similarityExp: String)
 
 /** Connects "similar" vertices: a self-theta-join of the new batch against
   * (loaded ∪ new) under the compiled similarity expression, with edge value =
@@ -35,14 +27,14 @@ case class SimilarityConfig(similarityExp: String, autoRewriteFlatOr: Boolean = 
   * plans as BroadcastNestedLoopJoin / CartesianProduct. Instead of the
   * reference's always-BNL plan we:
   *  - express the whole predicate as Catalyst columns (codegen-friendly, no
-  *    UDF), so when the expression contains top-level AND-ed equality leaves
+  *    UDF), so when a disjunct contains top-level AND-ed equality leaves
   *    Catalyst extracts them as join keys and plans a shuffled hash /
   *    sort-merge join automatically;
   *  - keep only the referenced leaf columns + `id` in the join inputs
   *    (column pruning before the shuffle/broadcast);
-  *  - for the common OR-of-equalities shape, see
-  *    [[SimilarityClassifier.classifyUnionOfEquiJoins]], a rewrite into a
-  *    union of equi-joins that avoids the cartesian entirely.
+  *  - join once per top-level disjunct ([[SimilarityClassifier.join]]), so
+  *    an OR of equalities becomes a union of equi-joins instead of one
+  *    cartesian.
   */
 class SimilarityClassifier(config: SimilarityConfig) extends VertexClassifierRule {
 
@@ -53,78 +45,32 @@ class SimilarityClassifier(config: SimilarityConfig) extends VertexClassifierRul
   override def getEdgePropertyKey: String = "value"
 
   override def classify(loadedDf: DataFrame, df: DataFrame): DataFrame = {
-    val parsed      = SimilarityExp.parse(config.similarityExp)
-    val joinColumns = parsed.columns
-    val disjuncts   = SimilarityExp.disjuncts(parsed.ast)
-
-    if (config.autoRewriteFlatOr && disjuncts.size >= 2)
-      return SimilarityClassifier.classifyViaDisjuncts(parsed, disjuncts, loadedDf, df)
-
-    val selectColsNoId = joinColumns.flatMap(SimilarityExp.leafSelectColumns).distinct
-    val selectColsList = "id" :: selectColsNoId
-
-    def withSuffix(num: Int): List[Column] =
-      selectColsList.map(x => col(x).as(s"$x$num"))
-
-    // Prune to referenced columns *before* the join: at scale this is the
-    // difference between shuffling 2 columns and shuffling 100.
-    val df1New = df.select(withSuffix(1): _*)
-    val df2Old = loadedDf
-      .select(selectColsList.map(col): _*)
-      .union(df.select(selectColsList.map(col): _*))
-      .select(withSuffix(2): _*)
-
-    // Plain relational join (not joinWith + struct unwrap as in the
-    // reference): same semantics, one fewer projection, and the flat shape
-    // lets Catalyst extract equi-conjuncts from parsed.condition.
-    val joinCondition = (col("id1") > col("id2")) && parsed.condition
-    val joined = df1New.join(df2Old, joinCondition).withColumn("similarity", lit(0))
-
-    // +1 per satisfied leaf condition, matching the reference's fold
-    // (SimilarityClassifer.scala:91-106).
-    val computed = joinColumns.foldLeft(joined) { (curr, name) =>
-      curr.withColumn(
-        "similarity",
-        when(SimilarityExp.colNameToCondition(name), col("similarity") + 1)
-          .otherwise(col("similarity"))
-      )
-    }
-
-    computed.select(
-      col("id1").as(EdgeColumns.Src),
-      col("id2").as(EdgeColumns.Dst),
-      col("similarity").as(EdgeColumns.PropVal)
-    )
+    val parsed = SimilarityExp.parse(config.similarityExp)
+    SimilarityClassifier.join(parsed, SimilarityExp.disjuncts(parsed.ast), loadedDf, df)
   }
 }
 
 object SimilarityClassifier {
 
-  /** A flat OR chain of leaves: no AND, no grouping — the shape where the
-    * union-of-equi-joins rewrite is exactly result-equivalent.
-    */
-  def isFlatOr(expression: String): Boolean =
-    !expression.contains("AND") && !expression.contains("(")
-
-  /** General union-of-disjunct-joins rewrite, valid for ANY expression whose
-    * top level is an OR of two or more disjuncts (each disjunct may itself
-    * be an AND tree).
+  /** The similarity join: one join per disjunct, unioned.
     *
-    * The literal theta-join predicate `id1 > id2 AND (d1 OR d2 OR ...)` has
-    * no extractable equi-conjunct, so Spark plans a BroadcastNestedLoopJoin
-    * — the O(n²) shape behind the reference's 55-minute edge phase
-    * (docs/Benchmarks.md:36-39). Per-disjunct joins restore the structure
-    * Catalyst can use: equality-style leaves (`<=>`, cdsxmatch, mulens)
-    * become hash-join keys, and single-side range leaves (score > 0.9)
-    * are pushed below the join as filters, shrinking even the disjuncts
-    * that remain nested-loop.
+    * `disjuncts` must together be equivalent to `parsed.ast` under OR. With
+    * one disjunct this is the literal theta-join `id1 > id2 AND condition`
+    * (pass `List(parsed.ast)` to get it for any expression). With two or
+    * more, each disjunct gets its own join: the literal predicate
+    * `id1 > id2 AND (d1 OR d2 OR ...)` has no extractable equi-conjunct, so
+    * Spark would plan a BroadcastNestedLoopJoin — the O(n²) shape behind the
+    * reference's 55-minute edge phase (docs/Benchmarks.md:36-39). Per
+    * disjunct, equality-style leaves (`<=>`, cdsxmatch, mulens) become
+    * hash-join keys, and single-side range leaves (score > 0.9) are pushed
+    * below the join as filters, shrinking even the disjuncts that remain
+    * nested-loop. A pair that satisfies several disjuncts is kept once.
     *
-    * Candidate pairs = ∪ per-disjunct joins, deduplicated; leaf columns are
-    * re-attached by two id hash-joins and the similarity value is the same
-    * per-leaf fold as the direct path — result-identical by construction
-    * (and by A/B spec).
+    * The similarity value is the per-leaf fold of the reference
+    * (SimilarityClassifer.scala:91-106) either way, so the result does not
+    * depend on how the expression is split.
     */
-  def classifyViaDisjuncts(
+  def join(
       parsed: SimilarityExp.ParseResult,
       disjuncts: List[SimilarityExp.Expr],
       loadedDf: DataFrame,
@@ -134,31 +80,39 @@ object SimilarityClassifier {
     val selectColsList = "id" :: selectColsNoId
     def withSuffix(num: Int): List[Column] = selectColsList.map(x => col(x).as(s"$x$num"))
 
+    // Prune to referenced columns *before* the join: at scale this is the
+    // difference between shuffling 2 columns and shuffling 100.
     val df1 = df.select(withSuffix(1): _*)
     val df2 = loadedDf
       .select(selectColsList.map(col): _*)
       .union(df.select(selectColsList.map(col): _*))
       .select(withSuffix(2): _*)
 
-    // Each disjunct join already has every leaf column in scope — keep them,
-    // and dedup candidate pairs with ONE aggregation on (id1, id2) instead
-    // of distinct + two re-attach id joins (which re-shuffled df1 and df2 a
-    // second time). Duplicate pairs carry identical leaf values by
-    // construction, so first() is deterministic.
-    val leafCols = selectColsNoId.flatMap(c => List(s"${c}1", s"${c}2"))
-    val pairs = disjuncts
-      .map { d =>
-        df1.join(df2, (col("id1") > col("id2")) && SimilarityExp.compile(d))
-          .select(col("id1") :: col("id2") :: leafCols.map(col): _*)
-      }
-      .reduce(_ union _)
+    // Plain relational join (not joinWith + struct unwrap as in the
+    // reference): same semantics, one fewer projection, and the flat shape
+    // lets Catalyst extract equi-conjuncts from the condition.
+    def on(d: SimilarityExp.Expr): DataFrame =
+      df1.join(df2, (col("id1") > col("id2")) && SimilarityExp.compile(d))
 
-    val firstAggs = leafCols.map(c => first(col(c)).as(c))
-    val joined = pairs
-      .groupBy(col("id1"), col("id2"))
-      .agg(firstAggs.head, firstAggs.tail: _*)
-      .withColumn("similarity", lit(0))
-    val computed = parsed.columns.foldLeft(joined) { (curr, name) =>
+    val joined = disjuncts match {
+      case List(d) => on(d)
+      case _ =>
+        // Each disjunct join already has every leaf column in scope, so one
+        // aggregation on (id1, id2) dedups candidate pairs without joining
+        // df1 and df2 again. Duplicate pairs carry identical leaf values by
+        // construction, so first() is deterministic.
+        val leafCols  = selectColsNoId.flatMap(c => List(s"${c}1", s"${c}2"))
+        val firstAggs = leafCols.map(c => first(col(c)).as(c))
+        disjuncts
+          .map(d => on(d).select(col("id1") :: col("id2") :: leafCols.map(col): _*))
+          .reduce(_ union _)
+          .groupBy(col("id1"), col("id2"))
+          .agg(firstAggs.head, firstAggs.tail: _*)
+    }
+
+    // +1 per satisfied leaf condition, matching the reference's fold
+    // (SimilarityClassifer.scala:91-106).
+    val computed = parsed.columns.foldLeft(joined.withColumn("similarity", lit(0))) { (curr, name) =>
       curr.withColumn(
         "similarity",
         when(SimilarityExp.colNameToCondition(name), col("similarity") + 1)
@@ -168,52 +122,5 @@ object SimilarityClassifier {
       col("id1").as(EdgeColumns.Src),
       col("id2").as(EdgeColumns.Dst),
       col("similarity").as(EdgeColumns.PropVal))
-  }
-
-  /** Scale-path rewrite for OR-of-leaves expressions: instead of one
-    * cartesian join filtered by `leaf1 OR leaf2 OR ...`, compute one
-    * (equi-)join per leaf and aggregate the per-pair leaf count. Produces the
-    * same `(src, dst, value)` set as [[SimilarityClassifier.classify]] for
-    * top-level-OR expressions, but every per-leaf join is a hash join on the
-    * leaf column, so it scales to data where the cartesian would not.
-    *
-    * Only valid when the top-level operator chain is all-OR (the join
-    * predicate is then exactly "at least one leaf matched", which the
-    * per-leaf union reproduces).
-    */
-  def classifyUnionOfEquiJoins(
-      config: SimilarityConfig,
-      loadedDf: DataFrame,
-      df: DataFrame
-  ): DataFrame = {
-    val parsed = SimilarityExp.parse(config.similarityExp)
-    require(
-      !config.similarityExp.contains("AND") && !config.similarityExp.contains("("),
-      "union-of-equi-joins rewrite requires a flat OR expression"
-    )
-    val leaves = parsed.columns
-
-    val selectColsNoId = leaves.flatMap(SimilarityExp.leafSelectColumns).distinct
-    val selectColsList = "id" :: selectColsNoId
-    def withSuffix(num: Int): List[Column] = selectColsList.map(x => col(x).as(s"$x$num"))
-
-    val df1 = df.select(withSuffix(1): _*)
-    val df2 = loadedDf
-      .select(selectColsList.map(col): _*)
-      .union(df.select(selectColsList.map(col): _*))
-      .select(withSuffix(2): _*)
-
-    // One join per leaf; each condition is an equality (or range) on a single
-    // column, so Catalyst plans hash/sort-merge joins instead of a cartesian.
-    val perLeaf = leaves.map { leaf =>
-      val cond = (col("id1") > col("id2")) && SimilarityExp.colNameToCondition(leaf)
-      df1.join(df2, cond).select(col("id1").as("src"), col("id2").as("dst"))
-    }
-
-    // A pair appears once per satisfied leaf → count = similarity value.
-    perLeaf
-      .reduce(_ union _)
-      .groupBy("src", "dst")
-      .agg(count(lit(1)).cast("int").as(EdgeColumns.PropVal))
   }
 }

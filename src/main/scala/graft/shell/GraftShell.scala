@@ -50,10 +50,12 @@ final case class GraftShell(spark: SparkSession, config: GraftConfig) {
     * operator-internal persisted intermediate (classifier band frames, loop
     * checkpoints) — a load's result lives in the stores, not the block
     * manager, so repeated interactive `run`s must not accumulate
-    * unevictable state in a long-lived session.
+    * unevictable state in a long-lived session. `loadedDays` overrides the
+    * config's loaded-side horizon for this run.
     */
   def run(startDate: String, duration: Int = 1, loadedDays: Option[Int] = None): JobResult =
-    try job.process(startDate, duration, loadedDays)
+    try new GraftJob(spark, config.copy(loadedDays = loadedDays.orElse(config.loadedDays)))
+      .process(startDate, duration)
     finally graft.Caches.clear()
 
   /** Releases operator-internal persisted state (loop checkpoints, GraphX

@@ -5,18 +5,19 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.graph.EdgeStore
-import graft.ids.IdManager
-import graft.job.GraftConfig
-import graft.rules.VertexClassifierRule
+import graft.io.PartitionedReader
+import graft.job.{GraftConfig, GraftJob}
 
 /** Structured-Streaming front-end for the incremental load pipeline.
   *
   * The reference is strictly batch-incremental (SURVEY.md §1.3 — state
   * between runs is the id-manager table); this module is the natural
-  * Spark-first extension: a file-source stream drives exactly the same
-  * id-stamp → classify → store pipeline per micro-batch via `foreachBatch`,
-  * so batch and streaming share one code path and one system of record.
+  * Spark-first extension: a file-source stream of the reader's base path
+  * (its format and options) drives each micro-batch through the reader's
+  * keep/rename/derive ([[graft.io.PartitionedReader.project]]) and then
+  * [[graft.job.GraftJob.load]], the same id-stamp → classify → store code
+  * that [[graft.job.GraftJob.process]] runs after its partition-pruned read,
+  * with one system of record. A micro-batch joins against full history.
   *
   * Scale notes: `foreachBatch` (not a streaming sink per rule) because the
   * pipeline needs multi-output fan-out (vertex table + one edge table per
@@ -27,36 +28,28 @@ import graft.rules.VertexClassifierRule
   */
 class StreamingIngest(spark: SparkSession, config: GraftConfig) {
 
-  private val idManager = new IdManager(spark, config.idManager)
-  private val edgeStore = new EdgeStore(spark, config.edgeBasePath)
+  private val reader = new PartitionedReader(spark, config.reader)
+  private val job    = new GraftJob(spark, config)
 
-  /** Runs one micro-batch through the load pipeline (shared semantics with
-    * [[graft.job.GraftJob.process]]).
-    */
-  def ingestBatch(rules: List[VertexClassifierRule])(batch: DataFrame, batchId: Long): Unit = {
-    if (!batch.isEmpty) {
-      val vertexData = idManager.process(batch)
-      rules.foreach { rule =>
-        val edges = rule.classify(vertexData.loaded, vertexData.current)
-        edgeStore.write(edges, rule.getEdgeLabel, bidirectional = config.bidirectionalEdges)
-      }
-      vertexData.current.unpersist()
-    }
-  }
+  /** Runs one micro-batch through the load pipeline. */
+  def ingestBatch(batch: DataFrame, batchId: Long): Unit =
+    if (!batch.isEmpty) job.load(reader.project(batch), loadedRange = None)
 
   /** Starts the streaming ingest over the reader base path (file source —
     * new alert files are discovered per trigger).
     */
   def start(schema: StructType, checkpointDir: String,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val rules  = new graft.job.GraftJob(spark, config).buildRules()
-    val stream = spark.readStream.schema(schema).parquet(config.reader.basePath)
-    stream.writeStream
-      .foreachBatch(ingestBatch(rules) _)
+            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    spark.readStream
+      .schema(schema)
+      .format(config.reader.format.name)
+      .options(config.reader.options)
+      .load(config.reader.basePath)
+      .writeStream
+      .foreachBatch(ingestBatch _)
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .start()
-  }
 }
 
 /** Watermarked event-time operators over a streaming events table —

@@ -154,7 +154,7 @@ class IdManagerSpec extends SparkSpec {
     val mgr = new IdManager(spark, IdManagerConfig(dir, "t"))
     mgr.process(alerts(4).toDF().drop("id"))
     assert(mgr.readAll(alerts(1).toDF().drop("id").schema).count() == 4)
-    mgr.deletePartitions(Seq((2019, 2, 1)))
+    mgr.deletePartitions(graft.io.PartitionManager.forRange("2019-02-01", 1))
     assert(mgr.readAll(alerts(1).toDF().drop("id").schema).isEmpty)
   }
 }

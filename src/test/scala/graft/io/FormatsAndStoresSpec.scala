@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.graph.{EdgeStore, FixedVertexStore}
-import graft.rules.{SimilarityClassifier, SimilarityConfig}
+import graft.rules.{SimilarityClassifier, SimilarityConfig, SimilarityExp}
 
 /** S1's csv/json format support + the store operators (S6-S8) and the
   * OR-similarity rewrite A/B (SURVEY §4 stretch item).
@@ -19,7 +19,7 @@ class FormatsAndStoresSpec extends SparkSpec {
     val df = Seq(("a", 1, 2019, 2, 1), ("b", 2, 2019, 2, 1)).toDF("name", "v", "year", "month", "day")
     df.write.partitionBy("year", "month", "day").csv(s"$base/csv")
     df.write.partitionBy("year", "month", "day").json(s"$base/json")
-    val pm = PartitionManager(LocalDate.of(2019, 2, 1), 1, padded = false)
+    val pm = PartitionManager(LocalDate.of(2019, 2, 1), 1)
 
     val csvReader = new PartitionedReader(spark, ReaderConfig(s"$base/csv", DataFormat.Csv))
     val csv = csvReader.read(pm)
@@ -157,8 +157,8 @@ class FormatsAndStoresSpec extends SparkSpec {
     ).toDF("id", "grp", "rfscore", "other")
     val exp    = "(grp AND rfscore) OR other"
     val loaded = df.limit(0)
-    val direct = new SimilarityClassifier(SimilarityConfig(exp, autoRewriteFlatOr = false))
-      .classify(loaded, df).collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    val direct = literalThetaJoin(exp, loaded, df)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val rewritten = new SimilarityClassifier(SimilarityConfig(exp))
       .classify(loaded, df).collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(direct == rewritten)
@@ -174,17 +174,23 @@ class FormatsAndStoresSpec extends SparkSpec {
     val df = Seq(
       (1L, "n1", 10.0), (2L, "n1", 20.0), (3L, "n2", 10.0), (4L, "n2", 20.0), (5L, "n3", 30.0)
     ).toDF("id", "grp", "score")
-    val cfg    = SimilarityConfig("grp OR score")
+    val exp    = "grp OR score"
     val loaded = df.limit(0)
-    val direct = new SimilarityClassifier(cfg).classify(loaded, df)
+    val direct = literalThetaJoin(exp, loaded, df)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val rewrite = SimilarityClassifier.classifyUnionOfEquiJoins(cfg, loaded, df)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    val classified = new SimilarityClassifier(SimilarityConfig(exp)).classify(loaded, df)
+    val rewrite = classified.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(direct == rewrite)
     assert(direct.nonEmpty)
-    // and the rewrite plans only equi-joins (no cartesian/BNL)
-    val plan = SimilarityClassifier.classifyUnionOfEquiJoins(cfg, loaded, df)
-      .queryExecution.executedPlan.toString()
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"))
+    // and the classifier plans only equi-joins (no cartesian/BNL)
+    val plan = classified.queryExecution.executedPlan.toString()
+    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"), plan)
+  }
+
+  /** The reference's literal theta-join: the whole expression as one disjunct. */
+  private def literalThetaJoin(exp: String, loaded: org.apache.spark.sql.DataFrame,
+                               df: org.apache.spark.sql.DataFrame) = {
+    val parsed = SimilarityExp.parse(exp)
+    SimilarityClassifier.join(parsed, List(parsed.ast), loaded, df)
   }
 }

@@ -18,20 +18,26 @@ class ReaderSpec extends SparkSpec {
 
   test("partition manager generates padded and unpadded paths") {
     val pm = PartitionManager.forRange("2019-02-01", 2)
-    assert(pm.relativePaths == Seq("year=2019/month=02/day=01", "year=2019/month=02/day=02"))
-    val un = PartitionManager.forRange("2019-02-01", 2, padded = false)
-    assert(un.relativePaths == Seq("year=2019/month=2/day=1", "year=2019/month=2/day=2"))
+    assert(pm.relativePaths == Seq(
+      "year=2019/month=02/day=01", "year=2019/month=2/day=1",
+      "year=2019/month=02/day=02", "year=2019/month=2/day=2"))
+    // the probe returns every spelling that exists, on either layout
+    val dir = tempDir("reader-spellings")
+    Seq("year=2019/month=02/day=01", "year=2019/month=2/day=1", "year=2019/month=2/day=2")
+      .foreach(r => new java.io.File(s"$dir/$r").mkdirs())
+    assert(pm.existingPaths(spark, dir) == Seq(
+      s"$dir/year=2019/month=02/day=01", s"$dir/year=2019/month=2/day=1", s"$dir/year=2019/month=2/day=2"))
   }
 
   test("read prunes to existing requested partitions only") {
     val dir = writeFixture()
     val reader = new PartitionedReader(spark, ReaderConfig(dir))
     // spark partitionBy writes unpadded int dirs
-    val pm = PartitionManager(LocalDate.of(2019, 2, 1), 1, padded = false)
+    val pm = PartitionManager(LocalDate.of(2019, 2, 1), 1)
     val df = reader.read(pm)
     assert(df.count() == 5)
     // missing days are silently skipped as long as one partition exists
-    val pm3 = PartitionManager(LocalDate.of(2019, 2, 1), 7, padded = false)
+    val pm3 = PartitionManager(LocalDate.of(2019, 2, 1), 7)
     assert(reader.read(pm3).count() == 8)
   }
 
@@ -41,7 +47,7 @@ class ReaderSpec extends SparkSpec {
     (1 to 4).map(i => (i.toLong, s"o$i", 2019, 2, 1)).toDF("id", "v", "year", "month", "day")
       .write.partitionBy("year", "month", "day").orc(orcDir)
     val orc = new PartitionedReader(spark, ReaderConfig(orcDir, format = DataFormat.Orc))
-      .read(PartitionManager(LocalDate.of(2019, 2, 1), 1, padded = false))
+      .read(PartitionManager(LocalDate.of(2019, 2, 1), 1))
     assert(orc.count() == 4 && orc.columns.contains("id"))
 
     val txtDir = tempDir("reader_text") + "/data"
@@ -51,7 +57,7 @@ class ReaderSpec extends SparkSpec {
       .withColumn("day", org.apache.spark.sql.functions.lit(1))
       .write.partitionBy("year", "month", "day").text(txtDir)
     val txt = new PartitionedReader(spark, ReaderConfig(txtDir, format = DataFormat.Text))
-      .read(PartitionManager(LocalDate.of(2019, 2, 1), 1, padded = false))
+      .read(PartitionManager(LocalDate.of(2019, 2, 1), 1))
     assert(txt.select("value").collect().map(_.getString(0)).toSet ==
       Set("line one", "line two"))
   }
@@ -59,7 +65,7 @@ class ReaderSpec extends SparkSpec {
   test("read throws NoDataException when no partitions exist") {
     val dir = writeFixture()
     val reader = new PartitionedReader(spark, ReaderConfig(dir))
-    val pm = PartitionManager(LocalDate.of(2030, 1, 1), 2, padded = false)
+    val pm = PartitionManager(LocalDate.of(2030, 1, 1), 2)
     assertThrows[NoDataException](reader.read(pm))
   }
 
@@ -74,7 +80,7 @@ class ReaderSpec extends SparkSpec {
         newCols = List("rowkey" -> "objectId || '_' || jd")
       )
     )
-    val pm = PartitionManager(LocalDate.of(2019, 2, 1), 1, padded = false)
+    val pm = PartitionManager(LocalDate.of(2019, 2, 1), 1)
     val df = reader.readAndProcess(pm)
     assert(
       df.columns.toSeq == Seq("objectId", "rfscore", "jd", "mulens1", "year", "month", "day", "rowkey")
@@ -85,7 +91,7 @@ class ReaderSpec extends SparkSpec {
 
   test("partition predicate prunes through the catalog path too") {
     val dir = writeFixture()
-    val pm  = PartitionManager(LocalDate.of(2019, 2, 2), 1, padded = false)
+    val pm  = PartitionManager(LocalDate.of(2019, 2, 2), 1)
     val df  = spark.read.parquet(dir).where(pm.partitionPredicate)
     assert(df.count() == 3)
     // the filter must reach the scan as a partition filter, not a post-scan filter
@@ -103,7 +109,7 @@ class ReaderSpec extends SparkSpec {
       .write.parquet(s"$dir/year=2019/month=2/day=2")
     val reader = new PartitionedReader(spark, ReaderConfig(dir,
       options = Map("mergeSchema" -> "true")))
-    val pm = PartitionManager(LocalDate.of(2019, 2, 1), 2, padded = false)
+    val pm = PartitionManager(LocalDate.of(2019, 2, 1), 2)
     val df = reader.read(pm)
     assert(df.columns.contains("quality"))
     val rows = df.select("id", "quality").collect()

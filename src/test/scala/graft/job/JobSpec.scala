@@ -83,9 +83,9 @@ class JobSpec extends SparkSpec {
     def run(loadedDays: Option[Int]): Set[(Long, Long, String)] = {
       val work = tempDir("graft-job-range")
       writeAlerts(s"$work/raw")
-      val job = new GraftJob(spark, config(work))
-      job.process("2019-02-01", 1, loadedDays)
-      job.process("2019-02-02", 1, loadedDays)
+      val job = new GraftJob(spark, config(work).copy(loadedDays = loadedDays))
+      job.process("2019-02-01", 1)
+      job.process("2019-02-02", 1)
       spark.read.parquet(s"$work/edges/label=similarity")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.get(2).toString)).toSet
     }
@@ -97,11 +97,11 @@ class JobSpec extends SparkSpec {
   test("loadedDays=1 excludes older history from the loaded join side") {
     val work = tempDir("graft-job-range1")
     writeAlerts(s"$work/raw")
-    val job = new GraftJob(spark, config(work))
+    val job = new GraftJob(spark, config(work).copy(loadedDays = Some(1)))
     job.process("2019-02-01", 1)
     // day 2 restricted to 1 loaded day (= day 2 itself): the cross-day objA
     // similarity edge must NOT appear — day 1's vertices are pruned out
-    val r2 = job.process("2019-02-02", 1, loadedDays = Some(1))
+    val r2 = job.process("2019-02-02", 1)
     val ids = spark.read.parquet(s"$work/ids/vertices")
       .select("id", "objectId", "day").collect()
       .map(r => (r.getString(1), r.getInt(2)) -> r.getLong(0)).toMap
@@ -113,21 +113,6 @@ class JobSpec extends SparkSpec {
     // ids still continued from the full-table max despite the restriction
     assert(ids.values.toSet == Set(101L, 102L, 103L, 104L))
     assert(r2.vertexCount == 2)
-  }
-
-  test("config-level loadedDays applies when process() gets no explicit range") {
-    val work = tempDir("graft-job-cfgrange")
-    writeAlerts(s"$work/raw")
-    val job = new GraftJob(spark, config(work).copy(loadedDays = Some(1)))
-    job.process("2019-02-01", 1)
-    job.process("2019-02-02", 1) // no arg -> config horizon of 1 day applies
-    val ids = spark.read.parquet(s"$work/ids/vertices")
-      .select("id", "objectId", "day").collect()
-      .map(r => (r.getString(1), r.getInt(2)) -> r.getLong(0)).toMap
-    val simEdges = spark.read.parquet(s"$work/edges/label=similarity")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(!simEdges.contains((ids(("objA", 2)), ids(("objA", 1)))),
-      "cross-day edge should be pruned by the config-level horizon")
   }
 
   test("CLI main runs the load job end to end") {
@@ -186,6 +171,31 @@ class JobSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(!simEdges.contains((ids(("objA", 2)), ids(("objA", 1)))),
       "file-level loadedDays must prune the cross-day edge through the CLI path")
+  }
+
+  test("CLI --loaded-days overrides the file's horizon") {
+    val work = tempDir("graft-cli-loaded-days")
+    writeAlerts(s"$work/raw")
+    val confPath = s"$work/job.conf"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(confPath),
+      s"""reader { basePath = "$work/raw" }
+         |idManager { spark { dataPath = "$work/ids", reservedIdSpace = 100 } }
+         |edgeStore { basePath = "$work/edges" }
+         |edgeLoader {
+         |  loadedDays = 2
+         |  rulesToApply = ["similarityClassifier"]
+         |  rules { similarityClassifier { similarityExp = "objectId" } }
+         |}
+         |""".stripMargin)
+    Main.main(Array("--config", confPath, "--startdate", "2019-02-01"))
+    Main.main(Array("--config", confPath, "--startdate", "2019-02-02", "--loaded-days", "1"))
+    val ids = spark.read.parquet(s"$work/ids/vertices")
+      .select("id", "objectId", "day").collect()
+      .map(r => (r.getString(1), r.getInt(2)) -> r.getLong(0)).toMap
+    val simEdges = spark.read.parquet(s"$work/edges/label=similarity")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(!simEdges.contains((ids(("objA", 2)), ids(("objA", 1)))),
+      "--loaded-days 1 must prune the cross-day edge the file's 2-day horizon would keep")
   }
 
   test("CLI --compact collapses appended files for the date range") {

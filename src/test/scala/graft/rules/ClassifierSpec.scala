@@ -58,8 +58,6 @@ class ClassifierSpec extends SparkSpec {
   }
 
   test("similarity: union-of-equi-joins rewrite matches the direct plan") {
-    val cfg = SimilarityConfig("objectId OR cdsxmatch OR roid")
-    val rule = new SimilarityClassifier(cfg)
     val loaded = alertsDf(
       Seq(
         Alert.gen(1L, "a", 0.1, 0.1, 3, 0.5f, "C*", None, None),
@@ -72,10 +70,14 @@ class ClassifierSpec extends SparkSpec {
         Alert.gen(4L, "c", 0.1, 0.1, 5, 0.5f, "Unknown", None, None)
       )
     )
-    val direct  = collectEdges(rule.classify(loaded, current))
-    val rewrite = collectEdges(SimilarityClassifier.classifyUnionOfEquiJoins(cfg, loaded, current))
-    assert(direct == rewrite)
-    assert(direct.nonEmpty)
+    // the reference: the literal theta-join, the whole expression as one disjunct
+    Seq("objectId OR cdsxmatch OR roid", "(objectId AND roid) OR cdsxmatch", "cdsxmatch").foreach { exp =>
+      val parsed  = SimilarityExp.parse(exp)
+      val direct  = collectEdges(SimilarityClassifier.join(parsed, List(parsed.ast), loaded, current))
+      val rewrite = collectEdges(new SimilarityClassifier(SimilarityConfig(exp)).classify(loaded, current))
+      assert(direct == rewrite, exp)
+      assert(direct.nonEmpty, exp)
+    }
   }
 
   // ------------------------------------------------------- same-value

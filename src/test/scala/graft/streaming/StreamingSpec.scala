@@ -3,13 +3,14 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.ids.IdManagerConfig
 import graft.io.ReaderConfig
-import graft.job.{GraftConfig, RulesConfig}
-import graft.rules.SimilarityConfig
+import graft.job.{GraftConfig, GraftJob, RulesConfig}
+import graft.rules.{SameValueSimilarityConfig, SimilarityConfig}
 
 class StreamingSpec extends SparkSpec {
 
@@ -43,6 +44,60 @@ class StreamingSpec extends SparkSpec {
     // the two objA vertices are connected (both orientations present)
     val objAIds = ids.filter(_._2 == "objA").keySet
     assert(objAIds.subsets(2).forall(s => { val Seq(a, b) = s.toSeq.sorted; edges((b, a)) && edges((a, b)) }))
+  }
+
+  test("batch/stream parity: process and StreamingIngest load the same vertices and edges") {
+    import spark.implicits._
+    val raw = tempDir("graft-parity") + "/raw"
+    // one file per day, day 1 older than day 2: the stream takes one day per
+    // micro-batch in file order, as process takes one day per call
+    Seq(
+      Seq(("objA", 0.95, "C*", 2019, 2, 1), ("objB", 0.20, "Unknown", 2019, 2, 1)),
+      Seq(("objA", 0.99, "C*", 2019, 2, 2), ("objC", 0.10, "C*", 2019, 2, 2))
+    ).zipWithIndex.foreach { case (day, i) =>
+      val dir = s"$raw/year=2019/month=2/day=${i + 1}"
+      day.toDF("objectId", "rfscore", "cdsxmatch", "year", "month", "day")
+        .drop("year", "month", "day").coalesce(1).write.parquet(dir)
+      new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+        .foreach(_.setLastModified(1000000000000L + i * 60000L))
+    }
+    def config(work: String) = GraftConfig(
+      reader = ReaderConfig(raw, newCols = List("tag" -> "objectId || '_' || cdsxmatch"),
+        options = Map("maxFilesPerTrigger" -> "1")),
+      idManager = IdManagerConfig(s"$work/ids", "vertices", reservedIdSpace = 100),
+      edgeBasePath = s"$work/edges",
+      rules = RulesConfig(
+        rulesToApply = List("similarityClassifier", "sameValueClassifier"),
+        similarity = Some(SimilarityConfig("objectId OR cdsxmatch")),
+        sameValue = Some(SameValueSimilarityConfig(List("cdsxmatch")))))
+
+    val batchWork = tempDir("graft-parity-batch")
+    val job = new GraftJob(spark, config(batchWork))
+    job.process("2019-02-01", 1)
+    job.process("2019-02-02", 1)
+
+    val streamWork = tempDir("graft-parity-stream")
+    val schema = spark.read.parquet(raw).schema
+    val q = new StreamingIngest(spark, config(streamWork)).start(schema, s"$streamWork/ckpt")
+    q.awaitTermination(60000)
+
+    // vertices by their natural key (objectId, day); edges through that key
+    def stored(work: String): (Set[Row], Map[String, Set[(Row, Row, String)]]) = {
+      val v = spark.read.parquet(s"$work/ids/vertices")
+        .select("id", "objectId", "rfscore", "cdsxmatch", "tag", "year", "month", "day").collect()
+      val key = v.map(r => r.getLong(0) -> Row(r.getString(1), r.getInt(7))).toMap
+      val edges = List("similarity", "exactmatch").map { label =>
+        label -> spark.read.parquet(s"$work/edges/label=$label").collect()
+          .map(r => (key(r.getLong(0)), key(r.getLong(1)), r.get(2).toString)).toSet
+      }.toMap
+      (v.toSet, edges)
+    }
+    val (batchVertices, batchEdges)   = stored(batchWork)
+    val (streamVertices, streamEdges) = stored(streamWork)
+    assert(batchVertices.map(_.getString(4)) == Set("objA_C*", "objB_Unknown", "objC_C*"))
+    assert(streamVertices == batchVertices)
+    assert(streamEdges == batchEdges)
+    assert(batchEdges.values.forall(_.nonEmpty))
   }
 
   test("windowed type counts aggregate by tumbling event-time windows") {
