@@ -5,6 +5,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Loop
 import graft.rules.EdgeColumns
 
 /** Query surface over the edge tables — the engine's analogue of the
@@ -25,6 +26,18 @@ import graft.rules.EdgeColumns
   * [[connectedComponentsDF]]) are plain spillable shuffles with no graph
   * pinned in non-evictable cached RDDs — the recommended path for large
   * graphs.
+  *
+  * Every iterative DataFrame operator here is built from [[graft.Loop]]:
+  * [[graft.Loop.canonicalPairs]] / [[graft.Loop.undirected]] read the
+  * edges as one distinct undirected pair per edge, [[graft.Loop.run]] owns
+  * the round counter, the cap, the lineage cut every
+  * [[graft.Loop.CutEvery]] rounds with the release of the previous cut,
+  * and the converged/capped verdict, and [[graft.Loop.materialize]] is the
+  * one checkpoint helper. Each operator keeps its step body, stop test,
+  * eager/lazy choice per frame and capped-loop warning. Nested loops
+  * ([[componentLabels]], [[sccDF]], [[minSpanningForest]], the HyperBall
+  * loop and the backward sweep of [[approxBetweenness]]) stay hand-written
+  * on the same helpers.
   */
 object GraphQueries {
 
@@ -176,15 +189,6 @@ object GraphQueries {
       personalized: Option[Long] = None
   ): DataFrame = graft.Caches.trackNewRdds(spark) {
     require(numIter > 0, s"numIter must be positive, got $numIter")
-    // Cadence checkpoints stay EAGER here: an r15 lazy-cut experiment
-    // (chain all cadences into the final stats job) measured q75 ~15%
-    // SLOWER same-box same-hour — the eager per-cadence jobs let AQE
-    // stage-reuse dedupe the per-round vertex-universe subplans within
-    // each 4-round window, which the one-big-job chain does not recover.
-    // (hits keeps the lazy variant: measured neutral-to-better there.)
-    def materialize(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
     val e = edges.select(
       col(EdgeColumns.Src).cast("long").as("src"),
       col(EdgeColumns.Dst).cast("long").as("dst"))
@@ -202,11 +206,6 @@ object GraphQueries {
     // degree-annotated edges: built once, reused every round
     val eDeg = graft.Caches.track(
       e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src"))
-    // checkpoint every few rounds, not every round: materialization is a
-    // whole job (fixed scheduler cost regardless of data size), while a
-    // handful of un-truncated join+agg rounds is a perfectly fine plan —
-    // so pay the job only once per CHECKPOINT_EVERY iterations
-    val checkpointEvery = 4
     // Personalized mode (GraphX staticPersonalizedPageRank semantics): the
     // walk teleports to ONE source vertex instead of uniformly — ranks
     // start as the source delta, the reset term applies at the source
@@ -222,7 +221,7 @@ object GraphQueries {
       case None      => lit(resetProb)
       case Some(src) => when(vid === src, resetProb).otherwise(0.0)
     }
-    var r = initRanks match {
+    val r0 = initRanks match {
       case None => v.select(col("vid"), coldRank(col("vid")).as("rank"))
       case Some(ir) =>
         val prev = ir.select(
@@ -230,22 +229,21 @@ object GraphQueries {
         v.join(prev, v("vid") === prev("ivid"), "left")
           .select(v("vid"), coalesce(col("irank"), coldRank(v("vid"))).as("rank"))
     }
-    var lastMaterialized: Option[DataFrame] = None
-    for (i <- 1 to numIter) {
-      val contribs = eDeg.join(r, eDeg("src") === r("vid"))
+    // Cadence cuts stay EAGER here: an r15 lazy-cut experiment (chain all
+    // cadences into the final stats job) measured q75 ~15% SLOWER
+    // same-box same-hour — the eager per-cadence jobs let AQE stage-reuse
+    // dedupe the per-round vertex-universe subplans within each 4-round
+    // window, which the one-big-job chain does not recover. (hits keeps
+    // the lazy variant: measured neutral-to-better there.)
+    val r = Loop.run(r0, numIter, cutLast = true) { (ranks, round) =>
+      val contribs = eDeg.join(ranks, eDeg("src") === ranks("vid"))
         .select(col("dst"), (col("rank") / col("deg")).as("c"))
         .groupBy("dst").agg(sum("c").as("msg"))
-      r = v.join(contribs, v("vid") === contribs("dst"), "left")
+      Some(round.cadence(v.join(contribs, v("vid") === contribs("dst"), "left")
         .select(
           v("vid"),
-          (resetTerm(v("vid")) + lit(1 - resetProb) * coalesce(col("msg"), lit(0.0))).as("rank"))
-      if (i % checkpointEvery == 0 || i == numIter) {
-        val prev = lastMaterialized
-        r = materialize(r)
-        lastMaterialized = Some(r)
-        prev.foreach(_.unpersist(blocking = false))
-      }
-    }
+          (resetTerm(v("vid")) + lit(1 - resetProb) * coalesce(col("msg"), lit(0.0))).as("rank"))))
+    }.state
     val stats = r.agg(sum("rank"), count(lit(1))).head()
     val scale =
       if (stats.getDouble(0) <= 0) 1.0
@@ -309,12 +307,7 @@ object GraphQueries {
       idCol: String = "id"
   ): DataFrame = {
     // one distinct (lo, hi) row per undirected edge, self-loops dropped
-    val canon = graft.Caches.track(
-      edges
-        .select(col(EdgeColumns.Src).cast("long").as("s"), col(EdgeColumns.Dst).cast("long").as("d"))
-        .where(col("s") =!= col("d"))
-        .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
-        .distinct())
+    val canon = graft.Caches.track(Loop.canonicalPairs(edges))
     val deg = canon.select(col("a").as("v")).union(canon.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg"))
     // orient low-degree → high-degree (ties by id); carry the target's
@@ -369,11 +362,7 @@ object GraphQueries {
       minCommon: Long = 1L,
       maxDegree: Long = 0L
   ): DataFrame = {
-    val canon = edges
-      .select(col(EdgeColumns.Src).cast("long").as("s"), col(EdgeColumns.Dst).cast("long").as("d"))
-      .where(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
-      .distinct()
+    val canon = Loop.canonicalPairs(edges)
     val adj = canon.select(col("a").as("v"), col("b").as("n"))
       .union(canon.select(col("b").as("v"), col("a").as("n")))
     val deg = adj.groupBy(col("v")).agg(count(lit(1)).as("deg"))
@@ -433,9 +422,6 @@ object GraphQueries {
     // so the final count materializes the whole chain in one job; each
     // cadence boundary still truncates lineage. e and vertices stay eager
     // — both are read many times per round and must cache up front.
-    def materialize(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint(false)
     val e = edges.select(col(EdgeColumns.Src).cast("long").as("src"),
         col(EdgeColumns.Dst).cast("long").as("dst"))
       .distinct()
@@ -449,55 +435,44 @@ object GraphQueries {
         .select(col("vid"),
           (col(c) / when(col("_n2") > 0, sqrt(col("_n2")))).as(c))
     }
-    var h = init match {
+    // the dangling-vertex zero rows only matter where norms/output read
+    // the full universe — the inner edge joins ignore them and zeros add
+    // nothing to a norm, so the universe attaches on cadence only
+    def withUniverse(df: DataFrame, c: String): DataFrame =
+      vertices.join(df, Seq("vid"), "left")
+        .select(col("vid"), coalesce(col(c), lit(0.0)).as(c))
+    val h0 = init match {
       case None => vertices.withColumn("h", lit(1.0))
       case Some(prev) =>
         val p = prev.select(col(idCol).cast("long").as("ivid"), col("hub").cast("double").as("ih"))
         vertices.join(p, vertices("vid") === p("ivid"), "left")
           .select(vertices("vid"), coalesce(col("ih"), lit(1.0)).as("h"))
     }
-    var hCheckpoint: DataFrame = null
-    var aCheckpoint: DataFrame = null
-    var a: DataFrame = null
-    var i = 0
-    while (i < iters) {
-      // Normalize and materialize only on the CADENCE (every 4th round and
-      // the last), not every half-step: per-step L2 normalization is a
-      // pure rescale, and a pure rescale never changes the direction the
-      // power iteration converges to — so deferring it to the cadence
-      // yields the same normalized fixed point while cutting the
-      // norm-aggregate crossJoins and checkpoints 4×. Off-cadence rounds
-      // are plain join+agg chains (no embedded scalar-aggregate subtrees,
-      // so Catalyst compile stays flat — the original per-step
-      // materialization existed precisely because crossJoin'd norm
-      // subtrees stacked ~4 per round); magnitudes grow ≤ ‖A‖² per round,
-      // far inside double range over any 4-round window. On cadence
-      // rounds `a` materializes BEFORE `h` is built from it, so the h job
-      // reads the checkpoint instead of recomputing a's chain.
-      // the dangling-vertex zero rows only matter where norms/output read
-      // the full universe — the inner edge joins ignore them and zeros
-      // add nothing to a norm, so the universe attaches on cadence only
-      val cadence = ((i + 1) % 4 == 0) || (i + 1) == iters
-      def withUniverse(df: DataFrame, c: String): DataFrame =
-        vertices.join(df, Seq("vid"), "left")
-          .select(col("vid"), coalesce(col(c), lit(0.0)).as(c))
-      val aRaw = e.join(h.select(col("vid").as("src"), col("h")), Seq("src"))
+    // Normalize and materialize only on the CADENCE (due rounds and the
+    // last), not every half-step: per-step L2 normalization is a pure
+    // rescale, and a pure rescale never changes the direction the power
+    // iteration converges to — so deferring it to the cadence yields the
+    // same normalized fixed point while cutting the norm-aggregate
+    // crossJoins and checkpoints 4×. Off-cadence rounds are plain join+agg
+    // chains (no embedded scalar-aggregate subtrees, so Catalyst compile
+    // stays flat — the original per-step materialization existed precisely
+    // because crossJoin'd norm subtrees stacked ~4 per round); magnitudes
+    // grow ≤ ‖A‖² per round, far inside double range over any 4-round
+    // window. On cadence rounds `a` materializes BEFORE `h` is built from
+    // it, so the h job reads the checkpoint instead of recomputing a's chain.
+    val (h, a) = Loop.run((h0, null: DataFrame), iters, cutLast = true) { case ((hPrev, _), round) =>
+      val aRaw = e.join(hPrev.select(col("vid").as("src"), col("h")), Seq("src"))
         .groupBy(col("dst")).agg(sum(col("h")).as("a"))
         .select(col("dst").as("vid"), col("a"))
-      a = if (cadence) materialize(normalize(withUniverse(aRaw, "a"), "a")) else aRaw
+      val a =
+        if (round.due) round.cut(normalize(withUniverse(aRaw, "a"), "a"), eager = false) else aRaw
       val hRaw = e.join(a.select(col("vid").as("dst"), col("a")), Seq("dst"))
         .groupBy(col("src")).agg(sum(col("a")).as("h"))
         .select(col("src").as("vid"), col("h"))
-      h = if (cadence) materialize(normalize(withUniverse(hRaw, "h"), "h")) else hRaw
-      i += 1
-      if (cadence) {
-        val (prevH, prevA) = (hCheckpoint, aCheckpoint)
-        hCheckpoint = h
-        aCheckpoint = a
-        if (prevH != null) prevH.unpersist(blocking = false)
-        if (prevA != null) prevA.unpersist(blocking = false)
-      }
-    }
+      val h =
+        if (round.due) round.cut(normalize(withUniverse(hRaw, "h"), "h"), eager = false) else hRaw
+      Some((h, a))
+    }.state
     vertices
       .join(h, Seq("vid")).join(a, Seq("vid"))
       .select(col("vid").as(idCol), col("h").as("hub"), col("a").as("authority"))
@@ -525,11 +500,7 @@ object GraphQueries {
       scale: Int = 6
   ): DataFrame = {
     val tri = triangleCountsDF(spark, vertices, edges, idCol)
-    val canon = edges
-      .select(col(EdgeColumns.Src).cast("long").as("s"), col(EdgeColumns.Dst).cast("long").as("d"))
-      .where(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
-      .distinct()
+    val canon = Loop.canonicalPairs(edges)
     val deg = canon.select(col("a").as("v")).union(canon.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("degree"))
     tri.join(deg, tri(idCol) === deg("v"), "left")
@@ -572,9 +543,6 @@ object GraphQueries {
       within: Option[DataFrame] = None
   ): DataFrame = graft.Caches.trackNewRdds(spark) {
     require(k >= 1, s"k must be >= 1, got $k")
-    def materialize(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
     // one distinct undirected edge, materialized in both orientations so
     // groupBy(src) IS the undirected degree. With `within` (the warm
     // start), the edge set is first restricted to edges BOTH of whose
@@ -592,44 +560,28 @@ object GraphQueries {
           .join(ids, col(EdgeColumns.Src).cast("long") === col("_wid"), "left_semi")
           .join(ids, col(EdgeColumns.Dst).cast("long") === col("_wid"), "left_semi")
     }
-    val canon = scoped
-      .select(col(EdgeColumns.Src).cast("long").as("s"), col(EdgeColumns.Dst).cast("long").as("d"))
-      .where(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
-      .distinct()
-    var e = materialize(
-      canon.select(col("a").as("src"), col("b").as("dst"))
-        .union(canon.select(col("b").as("src"), col("a").as("dst"))))
-    var lastMaterialized: Option[DataFrame] = Some(e)
-    var done = false
-    var iter = 0
-    while (!done && iter < maxIter) {
+    val e0 = Loop.undirected(scoped)
+    val res = Loop.run(e0, maxIter, held = Seq(e0)) { (e, round) =>
       val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
       val stats = deg.agg(
         count(lit(1)),
         sum(when(col("deg") < k, 1).otherwise(0))).head()
       val present = stats.getLong(0)
       val below   = if (stats.isNullAt(1)) 0L else stats.getLong(1)
-      if (present == 0L || below == 0L) done = true
+      if (present == 0L || below == 0L) None
       else {
         val keep = deg.where(col("deg") >= k).select(col("src").as("_kv"))
-        e = e.join(keep.select(col("_kv").as("src")), Seq("src"), "left_semi")
-          .join(keep.select(col("_kv").as("dst")), Seq("dst"), "left_semi")
-        iter += 1
-        if (iter % 4 == 0) {
-          val prev = lastMaterialized
-          e = materialize(e)
-          lastMaterialized = Some(e)
-          prev.foreach(_.unpersist(blocking = false))
-        }
+        Some(round.cadence(e.join(keep.select(col("_kv").as("src")), Seq("src"), "left_semi")
+          .join(keep.select(col("_kv").as("dst")), Seq("dst"), "left_semi")))
       }
     }
-    if (!done && iter >= maxIter) {
+    if (!res.converged) {
       log.warn(
         s"kCore exited via maxIter=$maxIter before reaching the peeling fixed point; " +
           "the returned subgraph may still contain vertices below k — " +
           "re-run with a larger maxIter")
     }
+    val e = res.state
     e.groupBy("src").agg(count(lit(1)).as("core_degree"))
       .select(col("src").as(idCol), col("core_degree"))
   }
@@ -667,17 +619,7 @@ object GraphQueries {
       initLabels: Option[DataFrame] = None
   ): DataFrame = graft.Caches.trackNewRdds(spark) {
     require(numIter >= 1, s"numIter >= 1, got $numIter")
-    def materialize(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    val canon = edges
-      .select(col(EdgeColumns.Src).cast("long").as("s"), col(EdgeColumns.Dst).cast("long").as("d"))
-      .where(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
-      .distinct()
-    val e = materialize(
-      canon.select(col("a").as("src"), col("b").as("dst"))
-        .union(canon.select(col("b").as("src"), col("a").as("dst"))))
+    val e = Loop.undirected(edges)
     // warm start (the pageRankDF initRanks pattern): seed from a previous
     // run's (idCol, label) output — vertices absent from the seed (the
     // graph grew) start with their own id, seed rows for vanished vertices
@@ -685,7 +627,7 @@ object GraphQueries {
     // graph needs a round or two for the new vertices to adopt their
     // neighborhoods' labels instead of a full cold budget (spec'd: warm on
     // the grown graph ≡ its cold labeling).
-    var labels = initLabels match {
+    val labels0 = initLabels match {
       case None =>
         e.select(col("src").as("vid")).distinct()
           .select(col("vid"), col("vid").as("label"))
@@ -696,8 +638,7 @@ object GraphQueries {
         v.join(prev, v("vid") === prev("ivid"), "left")
           .select(v("vid"), coalesce(col("ilabel"), v("vid")).as("label"))
     }
-    var lastMaterialized: Option[DataFrame] = None
-    for (i <- 1 to numIter) {
+    val labels = Loop.run(labels0, numIter, cutLast = true) { (labels, round) =>
       val contrib = e.join(labels, e("dst") === labels("vid"))
         .select(col("src"), col("label"))
         .union(labels.select(col("vid").as("src"), col("label")))
@@ -705,17 +646,11 @@ object GraphQueries {
         .groupBy(col("src"), col("label")).agg(count(lit(1)).as("cnt"))
       // most frequent label, min on ties: max of (cnt, -label) structs —
       // an exact partial aggregate, no window sort
-      labels = counts
+      Some(round.cadence(counts
         .groupBy(col("src"))
         .agg(max(struct(col("cnt"), (-col("label")).as("neg"))).as("_best"))
-        .select(col("src").as("vid"), (-col("_best.neg")).as("label"))
-      if (i % 4 == 0 || i == numIter) {
-        val prev = lastMaterialized
-        labels = materialize(labels)
-        lastMaterialized = Some(labels)
-        prev.foreach(_.unpersist(blocking = false))
-      }
-    }
+        .select(col("src").as("vid"), (-col("_best.neg")).as("label"))))
+    }.state
     labels.select(col("vid").as(idCol), col("label"))
   }
 
@@ -751,57 +686,36 @@ object GraphQueries {
     require(sources.nonEmpty, "sources must be non-empty")
     require(maxDist >= 0, s"maxDist must be >= 0, got $maxDist")
     import spark.implicits._
-    def materialize(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    val canon = edges
-      .select(col(EdgeColumns.Src).cast("long").as("s"), col(EdgeColumns.Dst).cast("long").as("d"))
-      .where(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
-      .distinct()
-    val e = materialize(
-      canon.select(col("a").as("src"), col("b").as("dst"))
-        .union(canon.select(col("b").as("src"), col("a").as("dst"))))
-    var settled = materialize(
+    val e = Loop.undirected(edges)
+    val settled0 = Loop.materialize(
       sources.distinct.toDF("vid").select(col("vid").cast("long").as("vid"), lit(0).as("dist")))
-    var settledCheckpoint: DataFrame = settled
-    var frontier = settled
-    var d = 0
-    var done = false
-    while (!done && d < maxDist) {
-      // every neighbor of the frontier not yet settled joins at dist d+1;
-      // the frontier is level-uniform so distinct (not min) suffices.
-      // LAZY checkpoint + count fuses the old eager-materialize job and
-      // the isEmpty probe job into ONE pass per round (the hyperBallLoop
-      // discipline): count() computes and persists every partition, so
-      // the lineage cut is complete before the next round builds on it.
-      val next =
-        e.join(frontier.select(col("vid").as("src")), Seq("src"))
-          .select(col("dst").as("vid")).distinct()
-          .join(settled.select(col("vid")), Seq("vid"), "left_anti")
-          .withColumn("dist", lit(d + 1))
-          .localCheckpoint(false)
-      if (next.count() == 0L) {
-        next.unpersist(blocking = false)
-        done = true
-      } else {
-        settled = settled.union(next)
-        frontier = next
-        d += 1
-        if (d % 4 == 0) {
-          val prev = settledCheckpoint
-          settled = materialize(settled)
-          settledCheckpoint = settled
-          prev.unpersist(blocking = false)
-        }
-      }
+    val res = Loop.run((settled0, settled0), maxDist, held = Seq(settled0)) {
+      case ((settled, frontier), round) =>
+        // every neighbor of the frontier not yet settled joins at dist
+        // round.n; the frontier is level-uniform so distinct (not min)
+        // suffices. LAZY checkpoint + count fuses the old eager-materialize
+        // job and the isEmpty probe job into ONE pass per round (the
+        // hyperBallLoop discipline): count() computes and persists every
+        // partition, so the lineage cut is complete before the next round
+        // builds on it.
+        val next =
+          e.join(frontier.select(col("vid").as("src")), Seq("src"))
+            .select(col("dst").as("vid")).distinct()
+            .join(settled.select(col("vid")), Seq("vid"), "left_anti")
+            .withColumn("dist", lit(round.n))
+            .localCheckpoint(false)
+        if (next.count() == 0L) {
+          Loop.release(next)
+          None
+        } else Some((round.cadence(settled.union(next)), next))
     }
-    if (!done) {
+    if (!res.converged) {
       log.warn(
         s"shortestPaths stopped at maxDist=$maxDist with a non-empty frontier; " +
           "vertices beyond that radius are absent from the result — " +
           "re-run with a larger maxDist for full reachability")
     }
+    val (settled, _) = res.state
     settled.select(col("vid").as(idCol), col("dist"))
   }
 
@@ -834,56 +748,41 @@ object GraphQueries {
       maxDist: Int = 50
   ): DataFrame = graft.Caches.trackNewRdds(spark) {
     require(maxDist >= 0, s"maxDist must be >= 0, got $maxDist")
-    def materialize(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    val canon = edges
-      .select(col(EdgeColumns.Src).cast("long").as("s"), col(EdgeColumns.Dst).cast("long").as("d"))
-      .where(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
-      .distinct()
-    val e = materialize(
-      canon.select(col("a").as("src"), col("b").as("dst"))
-        .union(canon.select(col("b").as("src"), col("a").as("dst"))))
-    var settled = materialize(
+    val e = Loop.undirected(edges)
+    val settled0 = Loop.materialize(
       init.select(col(idCol).cast("long").as("vid"), col("dist").cast("int").as("dist"))
         .where(col("dist") <= maxDist)
         .groupBy("vid").agg(min(col("dist")).as("dist")))
-    var frontier = settled
-    var iter = 0
-    var done = false
     val maxIter = maxDist + 1
-    while (!done && iter < maxIter) {
-      val cand = e.join(frontier.select(col("vid").as("src"), col("dist")), Seq("src"))
-        .select(col("dst").as("vid"), (col("dist") + 1).as("dist"))
-        .where(col("dist") <= maxDist)
-        .groupBy("vid").agg(min(col("dist")).as("dist"))
-      // lazy checkpoint + count: one fused pass per round (see shortestPaths)
-      val improved =
-        cand.join(settled.select(col("vid"), col("dist").as("_old")), Seq("vid"), "left")
-          .where(col("_old").isNull || col("dist") < col("_old"))
-          .select(col("vid"), col("dist"))
-          .localCheckpoint(false)
-      if (improved.count() == 0L) {
-        improved.unpersist(blocking = false)
-        done = true
-      } else {
-        val prevSettled = settled
-        settled = materialize(
-          settled.join(improved.select(col("vid").as("_iv")),
-              col("vid") === col("_iv"), "left_anti")
-            .union(improved))
-        prevSettled.unpersist(blocking = false)
-        frontier = improved
-        iter += 1
-      }
+    val res = Loop.run((settled0, settled0), maxIter, held = Seq(settled0)) {
+      case ((settled, frontier), round) =>
+        val cand = e.join(frontier.select(col("vid").as("src"), col("dist")), Seq("src"))
+          .select(col("dst").as("vid"), (col("dist") + 1).as("dist"))
+          .where(col("dist") <= maxDist)
+          .groupBy("vid").agg(min(col("dist")).as("dist"))
+        // lazy checkpoint + count: one fused pass per round (see shortestPaths)
+        val improved =
+          cand.join(settled.select(col("vid"), col("dist").as("_old")), Seq("vid"), "left")
+            .where(col("_old").isNull || col("dist") < col("_old"))
+            .select(col("vid"), col("dist"))
+            .localCheckpoint(false)
+        if (improved.count() == 0L) {
+          Loop.release(improved)
+          None
+        } else {
+          Some((round.cut(
+            settled.join(improved.select(col("vid").as("_iv")),
+                col("vid") === col("_iv"), "left_anti")
+              .union(improved)), improved))
+        }
     }
-    if (!done) {
+    if (!res.converged) {
       log.warn(
         s"relaxDistances exhausted its ${maxIter}-round budget before the fixed point; " +
           "this should be unreachable for admissible init bounds — check that edges " +
           "were only added since init was computed")
     }
+    val (settled, _) = res.state
     settled.select(col("vid").as(idCol), col("dist"))
   }
 
@@ -914,54 +813,32 @@ object GraphQueries {
     require(landmarks.nonEmpty, "landmarks must be non-empty")
     require(maxDist >= 0, s"maxDist must be >= 0, got $maxDist")
     import spark.implicits._
-    def materialize(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    val canon = edges
-      .select(col(EdgeColumns.Src).cast("long").as("s"), col(EdgeColumns.Dst).cast("long").as("d"))
-      .where(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
-      .distinct()
-    val e = materialize(
-      canon.select(col("a").as("src"), col("b").as("dst"))
-        .union(canon.select(col("b").as("src"), col("a").as("dst"))))
-    var settled = materialize(
+    val e = Loop.undirected(edges)
+    val settled0 = Loop.materialize(
       landmarks.distinct.toDF("lm")
         .select(col("lm").cast("long").as("vid"), col("lm").cast("long").as("lm"),
           lit(0).as("dist")))
-    var settledCheckpoint: DataFrame = settled
-    var frontier = settled
-    var d = 0
-    var done = false
-    while (!done && d < maxDist) {
-      // lazy checkpoint + count: one fused pass per round instead of an
-      // eager materialize job plus an isEmpty probe job (see shortestPaths)
-      val next =
-        e.join(frontier.select(col("vid").as("src"), col("lm")), Seq("src"))
-          .select(col("dst").as("vid"), col("lm")).distinct()
-          .join(settled.select(col("vid"), col("lm")), Seq("vid", "lm"), "left_anti")
-          .withColumn("dist", lit(d + 1))
-          .localCheckpoint(false)
-      if (next.count() == 0L) {
-        next.unpersist(blocking = false)
-        done = true
-      } else {
-        settled = settled.union(next)
-        frontier = next
-        d += 1
-        if (d % 4 == 0) {
-          val prev = settledCheckpoint
-          settled = materialize(settled)
-          settledCheckpoint = settled
-          prev.unpersist(blocking = false)
-        }
-      }
+    val res = Loop.run((settled0, settled0), maxDist, held = Seq(settled0)) {
+      case ((settled, frontier), round) =>
+        // lazy checkpoint + count: one fused pass per round instead of an
+        // eager materialize job plus an isEmpty probe job (see shortestPaths)
+        val next =
+          e.join(frontier.select(col("vid").as("src"), col("lm")), Seq("src"))
+            .select(col("dst").as("vid"), col("lm")).distinct()
+            .join(settled.select(col("vid"), col("lm")), Seq("vid", "lm"), "left_anti")
+            .withColumn("dist", lit(round.n))
+            .localCheckpoint(false)
+        if (next.count() == 0L) {
+          Loop.release(next)
+          None
+        } else Some((round.cadence(settled.union(next)), next))
     }
-    if (!done) {
+    if (!res.converged) {
       log.warn(
         s"landmarkDistances stopped at maxDist=$maxDist with a non-empty frontier; " +
           "(vertex, landmark) pairs beyond that radius are absent from the result")
     }
+    val (settled, _) = res.state
     settled.select(col("vid").as(idCol), col("lm").as("landmark"), col("dist"))
   }
 
@@ -1159,6 +1036,10 @@ object GraphQueries {
   ): (IndexedSeq[DataFrame], DataFrame, Seq[Boolean]) =
     hyperBallLoop(spark, edges, state0, None, maxHops, narrowDen)
 
+  /** Worst-case frontier sketch mass up to which [[hyperBallLoop]]
+    * broadcasts the frontier into the contribution join. */
+  private val AnfBroadcastBytes = 64L << 20
+
   private def hyperBallLoop(
       spark: SparkSession,
       edges: DataFrame,
@@ -1177,8 +1058,8 @@ object GraphQueries {
     //     ZERO sketch bytes through an Exchange whenever the frontier side
     //     broadcasts;
     //  2. the frontier broadcasts when its worst-case sketch mass
-    //     (`frontierCount · (2^lgK + 64)` bytes) fits a budget
-    //     (SPARK_GRAFT_ANF_BCAST_MB, default 64 MB) — the contribution
+    //     (`frontierCount · (2^lgK + 64)` bytes) fits a 64 MB budget
+    //     (AnfBroadcastBytes) — the contribution
     //     join then streams the edge frame map-side instead of
     //     sort-merge-shuffling |E| sketch-carrying rows per round. At
     //     100-TB scale a full first-round frontier blows the budget and
@@ -1203,7 +1084,6 @@ object GraphQueries {
     val fbOld = spark.conf.getOption(fbKey)
     spark.conf.set(fbKey, "65536")
     try {
-    val bcastBudget = sys.env.getOrElse("SPARK_GRAFT_ANF_BCAST_MB", "64").toLong << 20
     val sketchBytes = (1L << lgKEff) + 64L
     val eBase = edges
       .select(col(EdgeColumns.Src).cast("long").as("src"),
@@ -1234,7 +1114,7 @@ object GraphQueries {
       else {
         val f = frontier.select(col("id").as("dst"), col("_sk"))
         val fr =
-          if (frontierCount != Long.MaxValue && frontierCount * sketchBytes <= bcastBudget)
+          if (frontierCount != Long.MaxValue && frontierCount * sketchBytes <= AnfBroadcastBytes)
             broadcast(f)
           else f
         val contrib = e
@@ -1278,12 +1158,6 @@ object GraphQueries {
               .select(col("id"), col("_dsk").as("_sk"), lit(true).as("_chg"))
             untouched.unionAll(updated).unionAll(newIds)
           }
-        // operator telemetry: dump the round's physical plan when asked
-        // (SPARK_GRAFT_ANF_EXPLAIN=1) — the timed q304/q371/q373 faces
-        // only ever show the post-loop leaf plans, so this is how the
-        // round shape (broadcast vs shuffled contribution join, exchange
-        // placement) is audited without the Spark UI
-        if (sys.env.get("SPARK_GRAFT_ANF_EXPLAIN").contains("1")) merged.explain("formatted")
         // lazy checkpoint: the counts aggregate below computes and caches
         // every partition — one fused materialize + probe job per round,
         // with the lineage cut (see note 4 above)
@@ -1473,9 +1347,6 @@ object GraphQueries {
     require(numWalks >= 1, s"numWalks must be >= 1, got $numWalks")
     require(walkLength >= 0, s"walkLength must be >= 0, got $walkLength")
     import spark.implicits._
-    def materialize(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
     // per-neighbor weights: 1 per distinct undirected edge (unweighted), or
     // the sum over parallel input rows (weighted — multiplicity is mass);
     // choosing neighbor = the cumulative range [cum_lo, cum_hi) containing
@@ -1483,11 +1354,7 @@ object GraphQueries {
     // neighbor number hash mod degree" — one code path, spec-pinned.
     val adjW = weightCol match {
       case None =>
-        val canon = edges
-          .select(col(EdgeColumns.Src).cast("long").as("s"), col(EdgeColumns.Dst).cast("long").as("d"))
-          .where(col("s") =!= col("d"))
-          .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
-          .distinct()
+        val canon = Loop.canonicalPairs(edges)
         canon.select(col("a").as("a_src"), col("b").as("a_dst"))
           .union(canon.select(col("b").as("a_src"), col("a").as("a_dst")))
           .withColumn("w", lit(1L))
@@ -1519,32 +1386,31 @@ object GraphQueries {
     val tot = graft.Caches.track(
       adj.groupBy(col("a_src")).agg(max(col("cum_hi")).as("total"))
         .select(col("a_src").as("d_src"), col("total")))
-    var cur = materialize(
+    val start = Loop.materialize(
       starts.distinct.flatMap(s => (0 until numWalks).map(w => (s * numWalks + w, s)))
         .toDF("walk_id", "vertex")
         .withColumn("step", lit(0)))
-    val positions = scala.collection.mutable.ArrayBuffer[DataFrame](cur)
-    var t = 0
-    var frontierRows = starts.distinct.size.toLong * numWalks // known, no probe job
-    while (t < walkLength && frontierRows > 0L) {
-      val chosen = cur
-        .join(tot, col("vertex") === col("d_src"))
-        .select(col("walk_id"), col("vertex"), col("step"),
-          pmod(hash.seeded(seed,
-            concat(col("walk_id").cast("string"), lit(":"), col("step").cast("string"))),
-            col("total")).as("crank"))
-      // lazy checkpoint + count: one fused pass per step (see shortestPaths)
-      val next =
-        chosen.join(adj,
-            col("vertex") === col("a_src") &&
-              col("crank") >= col("cum_lo") && col("crank") < col("cum_hi"))
-          .select(col("walk_id"), col("a_dst").as("vertex"), (col("step") + 1).as("step"))
-          .localCheckpoint(false)
-      frontierRows = next.count()
-      positions += next
-      cur = next
-      t += 1
-    }
+    val startRows = starts.distinct.size.toLong * numWalks // known, no probe job
+    val (positions, _) = Loop.run((Vector(start), startRows), walkLength) {
+      case ((positions, frontierRows), _) =>
+        if (frontierRows == 0L) None
+        else {
+          val chosen = positions.last
+            .join(tot, col("vertex") === col("d_src"))
+            .select(col("walk_id"), col("vertex"), col("step"),
+              pmod(hash.seeded(seed,
+                concat(col("walk_id").cast("string"), lit(":"), col("step").cast("string"))),
+                col("total")).as("crank"))
+          // lazy checkpoint + count: one fused pass per step (see shortestPaths)
+          val next =
+            chosen.join(adj,
+                col("vertex") === col("a_src") &&
+                  col("crank") >= col("cum_lo") && col("crank") < col("cum_hi"))
+              .select(col("walk_id"), col("a_dst").as("vertex"), (col("step") + 1).as("step"))
+              .localCheckpoint(false)
+          Some((positions :+ next, next.count()))
+        }
+    }.state
     positions.reduce(_ union _).select(col("walk_id"), col("step"), col("vertex"))
   }
 
@@ -1578,56 +1444,48 @@ object GraphQueries {
     require(sources.nonEmpty, "sources must be non-empty")
     require(maxCost >= 0, s"maxCost must be >= 0, got $maxCost")
     import spark.implicits._
-    def materialize(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
     val canon = edges
       .select(col(EdgeColumns.Src).cast("long").as("s"), col(EdgeColumns.Dst).cast("long").as("d"),
         col(weightCol).cast("long").as("w"))
       .where(col("s") =!= col("d"))
       .groupBy(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
       .agg(min(col("w")).as("w"))
-    val e = materialize(
+    val e = Loop.materialize(
       canon.select(col("a").as("src"), col("b").as("dst"), col("w"))
         .union(canon.select(col("b").as("src"), col("a").as("dst"), col("w"))))
     val minW = e.agg(min(col("w"))).head
     require(minW.isNullAt(0) || minW.getLong(0) >= 0L,
       s"negative edge weight ${minW.get(0)} — weightedDistances requires non-negative weights")
-    var settled = materialize(
+    val settled0 = Loop.materialize(
       sources.distinct.toDF("vid").select(col("vid").cast("long").as("vid"), lit(0L).as("cost")))
-    var frontier = settled
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIter) {
-      val cand = e.join(frontier.select(col("vid").as("src"), col("cost")), Seq("src"))
-        .select(col("dst").as("vid"), (col("cost") + col("w")).as("cost"))
-        .where(col("cost") <= maxCost)
-        .groupBy("vid").agg(min(col("cost")).as("cost"))
-      // lazy checkpoint + count: one fused pass per round (see shortestPaths)
-      val improved =
-        cand.join(settled.select(col("vid"), col("cost").as("_old")), Seq("vid"), "left")
-          .where(col("_old").isNull || col("cost") < col("_old"))
-          .select(col("vid"), col("cost"))
-          .localCheckpoint(false)
-      if (improved.count() == 0L) {
-        improved.unpersist(blocking = false)
-        done = true
-      } else {
-        val prevSettled = settled
-        settled = materialize(
-          settled.join(improved.select(col("vid").as("_iv")),
-              col("vid") === col("_iv"), "left_anti")
-            .union(improved))
-        prevSettled.unpersist(blocking = false)
-        frontier = improved
-        iter += 1
-      }
+    val res = Loop.run((settled0, settled0), maxIter, held = Seq(settled0)) {
+      case ((settled, frontier), round) =>
+        val cand = e.join(frontier.select(col("vid").as("src"), col("cost")), Seq("src"))
+          .select(col("dst").as("vid"), (col("cost") + col("w")).as("cost"))
+          .where(col("cost") <= maxCost)
+          .groupBy("vid").agg(min(col("cost")).as("cost"))
+        // lazy checkpoint + count: one fused pass per round (see shortestPaths)
+        val improved =
+          cand.join(settled.select(col("vid"), col("cost").as("_old")), Seq("vid"), "left")
+            .where(col("_old").isNull || col("cost") < col("_old"))
+            .select(col("vid"), col("cost"))
+            .localCheckpoint(false)
+        if (improved.count() == 0L) {
+          Loop.release(improved)
+          None
+        } else {
+          Some((round.cut(
+            settled.join(improved.select(col("vid").as("_iv")),
+                col("vid") === col("_iv"), "left_anti")
+              .union(improved)), improved))
+        }
     }
-    if (!done) {
+    if (!res.converged) {
       log.warn(
         s"weightedDistances stopped at maxIter=$maxIter before the fixed point; " +
           "returned costs are admissible upper bounds — raise maxIter for exactness")
     }
+    val (settled, _) = res.state
     settled.select(col("vid").as(idCol), col("cost"))
   }
 
@@ -1672,10 +1530,6 @@ object GraphQueries {
         .where(src =!= dst).distinct()
     }
 
-    def materialize(e: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) e.checkpoint()
-      else e.localCheckpoint()
-
     // (count, order-independent content hash): equal signatures ⇒ the edge
     // set reached the algorithm's fixed point (star forest). bit_xor is
     // commutative and cannot overflow (sum would, under ANSI mode).
@@ -1719,7 +1573,7 @@ object GraphQueries {
       // computes and persists every partition — one fused job per round
       val next    = smallStar(largeStar(e)).localCheckpoint(false)
       val nextSig = signature(next)
-      e.unpersist(blocking = false)
+      Loop.release(e)
       done = nextSig == sig
       sig = nextSig
       e = next
@@ -1804,16 +1658,12 @@ object GraphQueries {
       maxRounds: Int = 25,
       maxIter: Int = 50
   ): DataFrame = graft.Caches.trackNewRdds(spark) {
-    def materialize(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-
-    var rem = materialize(
+    var rem = Loop.materialize(
       edges.select(
           col(EdgeColumns.Src).cast("long").as("src"),
           col(EdgeColumns.Dst).cast("long").as("dst"))
         .where(col("src") =!= col("dst")).distinct())
-    var verts = materialize(
+    var verts = Loop.materialize(
       edges.select(col(EdgeColumns.Src).cast("long").as("id"))
         .union(edges.select(col(EdgeColumns.Dst).cast("long").as("id")))
         .distinct())
@@ -1827,7 +1677,7 @@ object GraphQueries {
       // of a change-detection join.
       def colorSum(c: DataFrame): java.math.BigDecimal =
         c.agg(sum(col("color").cast("decimal(38,0)"))).head.getDecimal(0)
-      var colors = materialize(verts.select(col("id"), col("id").as("color")))
+      var colors = Loop.materialize(verts.select(col("id"), col("id").as("color")))
       var curSum = colorSum(colors)
       var stable = false
       var it = 0
@@ -1835,10 +1685,10 @@ object GraphQueries {
         val pushed = rem
           .join(colors.select(col("id").as("src"), col("color")), Seq("src"))
           .select(col("dst").as("id"), col("color"))
-        val next = materialize(
+        val next = Loop.materialize(
           colors.union(pushed).groupBy("id").agg(min("color").as("color")))
         val nextSum = colorSum(next)
-        colors.unpersist(false)
+        Loop.release(colors)
         colors = next
         stable = nextSum.compareTo(curSum) == 0
         curSum = nextSum
@@ -1847,11 +1697,11 @@ object GraphQueries {
       // 2. backward mark within the color class, from the pivots
       val colSrc = colors.select(col("id").as("src"), col("color").as("_cs"))
       val colDst = colors.select(col("id").as("dst"), col("color").as("_cd"))
-      val sameColor = materialize(
+      val sameColor = Loop.materialize(
         rem.join(colSrc, Seq("src")).join(colDst, Seq("dst"))
           .where(col("_cs") === col("_cd"))
           .select(col("src"), col("dst"), col("_cs").as("color")))
-      var marked = materialize(
+      var marked = Loop.materialize(
         colors.where(col("id") === col("color")).select(col("id"), col("color")))
       stable = false
       it = 0
@@ -1859,21 +1709,21 @@ object GraphQueries {
         val pulled = sameColor
           .join(marked.select(col("id").as("dst"), col("color")), Seq("dst", "color"))
           .select(col("src").as("id"), col("color"))
-        val next = materialize(marked.union(pulled).distinct())
+        val next = Loop.materialize(marked.union(pulled).distinct())
         val grew = next.count() > marked.count()
-        marked.unpersist(false)
+        Loop.release(marked)
         marked = next
         stable = !grew
         it += 1
       }
-      val done = materialize(marked.select(col("id"), col("color").as("scc")))
+      val done = Loop.materialize(marked.select(col("id"), col("color").as("scc")))
       assigned ::= done
-      verts = materialize(verts.join(done, Seq("id"), "left_anti"))
-      rem = materialize(
+      verts = Loop.materialize(verts.join(done, Seq("id"), "left_anti"))
+      rem = Loop.materialize(
         rem.join(done.select(col("id").as("src")), Seq("src"), "left_anti")
           .join(done.select(col("id").as("dst")), Seq("dst"), "left_anti"))
-      sameColor.unpersist(false)
-      colors.unpersist(false)
+      Loop.release(sameColor)
+      Loop.release(colors)
       remaining = verts.count()
       round += 1
     }
@@ -1907,47 +1757,32 @@ object GraphQueries {
       idCol: String = "id",
       maxIter: Int = 100
   ): DataFrame = graft.Caches.trackNewRdds(spark) {
-    def materialize(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    val canon = edges
-      .select(col(EdgeColumns.Src).cast("long").as("s"), col(EdgeColumns.Dst).cast("long").as("d"))
-      .where(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
-      .distinct()
-    val e = materialize(
-      canon.select(col("a").as("src"), col("b").as("dst"))
-        .union(canon.select(col("b").as("src"), col("a").as("dst"))))
-    var c = materialize(
+    val e = Loop.undirected(edges)
+    val c0 = Loop.materialize(
       e.groupBy("src").agg(count(lit(1)).as("c"))
         .select(col("src").as("vid"), col("c")))
     def sumOf(df: DataFrame): Long = {
       val row = df.agg(sum(col("c"))).head
       if (row.isNullAt(0)) 0L else row.getLong(0) // empty graph → no vertices
     }
-    var cSum = sumOf(c)
-    var done = false
-    var it = 0
-    while (!done && it < maxIter) {
-      val nb = e.join(c.select(col("vid").as("dst"), col("c").as("_cv")), Seq("dst"))
-        .select(col("src"), col("_cv"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("src")).orderBy(col("_cv").desc)
-      val h = nb.withColumn("_rn", row_number().over(w).cast("long"))
-        .groupBy(col("src"))
-        .agg(max(least(col("_rn"), col("_cv"))).as("_h"))
-      val next = materialize(
-        c.join(h.select(col("src").as("vid"), col("_h")), Seq("vid"))
-          .select(col("vid"), least(col("c"), col("_h")).as("c")))
-      val nextSum = sumOf(next)
-      val prev = c
-      c = next
-      prev.unpersist(blocking = false)
-      if (nextSum == cSum) done = true // monotone: equal sum ⟺ no change
-      cSum = nextSum
-      it += 1
-    }
-    if (!done) {
+    // state: (values, their sum, whether the last round changed them)
+    val (c, _, changed) = Loop.run((c0, sumOf(c0), true), maxIter, held = Seq(c0)) {
+      case ((_, _, false), _) => None
+      case ((c, cSum, _), round) =>
+        val nb = e.join(c.select(col("vid").as("dst"), col("c").as("_cv")), Seq("dst"))
+          .select(col("src"), col("_cv"))
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("src")).orderBy(col("_cv").desc)
+        val h = nb.withColumn("_rn", row_number().over(w).cast("long"))
+          .groupBy(col("src"))
+          .agg(max(least(col("_rn"), col("_cv"))).as("_h"))
+        val next = round.cut(
+          c.join(h.select(col("src").as("vid"), col("_h")), Seq("vid"))
+            .select(col("vid"), least(col("c"), col("_h")).as("c")))
+        val nextSum = sumOf(next)
+        Some((next, nextSum, nextSum != cSum)) // monotone: equal sum ⟺ no change
+    }.state
+    if (changed) {
       log.warn(
         s"coreNumbers exited via maxIter=$maxIter before the H-index fixed point; " +
           "returned values are valid UPPER BOUNDS on core numbers — re-run with " +
@@ -1980,9 +1815,6 @@ object GraphQueries {
       maxIter: Int = 100
   ): DataFrame = graft.Caches.trackNewRdds(spark) {
     require(k >= 2, s"k must be >= 2, got $k")
-    def materialize(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
     def supportOf(e: DataFrame): DataFrame = {
       val bidir = e.select(col("a").as("src"), col("b").as("dst"))
         .union(e.select(col("b").as("src"), col("a").as("dst")))
@@ -2008,37 +1840,25 @@ object GraphQueries {
         .select(col("_e.a").as("a"), col("_e.b").as("b"))
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("sup"))
     }
-    var e = materialize(
-      edges.select(col(EdgeColumns.Src).cast("long").as("s"),
-          col(EdgeColumns.Dst).cast("long").as("d"))
-        .where(col("s") =!= col("d"))
-        .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
-        .distinct())
-    var eCount = e.count()
-    var support = materialize(supportOf(e))
-    var done = false
-    var it = 0
-    while (!done && it < maxIter && eCount > 0) {
-      // edges absent from the support frame close zero triangles
-      val keep =
-        if (k == 2) e
-        else e.join(support.where(col("sup") >= k - 2).select(col("a"), col("b")),
-          Seq("a", "b"), "left_semi")
-      val keepM = materialize(keep)
-      val nc = keepM.count()
-      if (nc == eCount) {
-        keepM.unpersist(blocking = false)
-        done = true
-      } else {
-        e.unpersist(blocking = false)
-        support.unpersist(blocking = false)
-        e = keepM
-        eCount = nc
-        support = materialize(supportOf(e))
-        it += 1
-      }
+    val e0 = Loop.materialize(Loop.canonicalPairs(edges))
+    val eCount0 = e0.count()
+    val support0 = Loop.materialize(supportOf(e0))
+    // state: (surviving edges, their count, their support)
+    val res = Loop.run((e0, eCount0, support0), maxIter, held = Seq(e0, support0)) {
+      case ((_, 0L, _), _) => None
+      case ((e, eCount, support), round) =>
+        // edges absent from the support frame close zero triangles
+        val keep =
+          if (k == 2) e
+          else e.join(support.where(col("sup") >= k - 2).select(col("a"), col("b")),
+            Seq("a", "b"), "left_semi")
+        val keepM = round.cut(keep)
+        val nc = keepM.count()
+        if (nc == eCount) None
+        else Some((keepM, nc, round.cut(supportOf(keepM))))
     }
-    if (!done && eCount > 0) {
+    val (e, eCount, support) = res.state
+    if (!res.converged && eCount > 0) {
       log.warn(
         s"kTruss exited via maxIter=$maxIter before the peeling fixed point; " +
           "the returned subgraph may still contain under-supported edges")
@@ -2076,11 +1896,7 @@ object GraphQueries {
       labelCol: String = "label",
       scale: Int = 6
   ): DataFrame = {
-    val canon = edges
-      .select(col(EdgeColumns.Src).cast("long").as("s"), col(EdgeColumns.Dst).cast("long").as("d"))
-      .where(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
-      .distinct()
+    val canon = Loop.canonicalPairs(edges)
     val lab = labels.select(col(idCol).cast("long").as("_v"), col(labelCol).cast("long").as("_l"))
     // singleton fallbacks get key (true, vertex-id), caller labels
     // (false, label) — structurally collision-free however the caller's
@@ -2150,60 +1966,50 @@ object GraphQueries {
       idCol: String = "id",
       maxIter: Int = 100
   ): DataFrame = graft.Caches.trackNewRdds(spark) {
-    def materialize(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    val canon = edges
-      .select(col(EdgeColumns.Src).cast("long").as("s"), col(EdgeColumns.Dst).cast("long").as("d"))
-      .where(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
-      .distinct()
-    var e = materialize(
-      canon.select(col("a").as("src"), col("b").as("dst"))
-        .union(canon.select(col("b").as("src"), col("a").as("dst"))))
-    var best: DataFrame = null // materialized snapshot of the best round's vertices
-    var bestE = 0L
-    var bestV = 0L
-    var it = 0
-    var emptied = false
-    while (!emptied && it < maxIter) {
-      val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-      val stats = deg.agg(count(lit(1)), sum(col("deg"))).head
-      val nV = stats.getLong(0)
-      val twoE = if (stats.isNullAt(1)) 0L else stats.getLong(1)
-      if (nV == 0L) emptied = true
-      else {
-        // exact density compare, BigInt so E·V cannot overflow at any scale:
-        // E/V > bestE/bestV ⟺ 2E·bestV > 2·bestE·V
-        if (best == null || BigInt(twoE) * bestV > BigInt(2L) * bestE * nV) {
-          val prev = best
-          best = materialize(deg.select(col("src")))
-          bestE = twoE / 2 // the bidirectional frame double-counts
-          bestV = nV
-          if (prev != null) prev.unpersist(blocking = false)
+    val e0 = Loop.undirected(edges)
+    // state: (surviving edges, the best round's materialized vertex
+    // snapshot with its edge and vertex counts)
+    val res = Loop.run((e0, Option.empty[(DataFrame, Long, Long)]), maxIter, held = Seq(e0)) {
+      case ((e, best), round) =>
+        val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
+        val stats = deg.agg(count(lit(1)), sum(col("deg"))).head
+        val nV = stats.getLong(0)
+        val twoE = if (stats.isNullAt(1)) 0L else stats.getLong(1)
+        if (nV == 0L) None
+        else {
+          // exact density compare, BigInt so E·V cannot overflow at any scale:
+          // E/V > bestE/bestV ⟺ 2E·bestV > 2·bestE·V
+          val better = best.forall { case (_, bestE, bestV) =>
+            BigInt(twoE) * bestV > BigInt(2L) * bestE * nV
+          }
+          val nextBest =
+            if (!better) best
+            else {
+              val snapshot = Loop.materialize(deg.select(col("src")))
+              best.foreach { case (prev, _, _) => Loop.release(prev) }
+              Some((snapshot, twoE / 2, nV)) // the bidirectional frame double-counts
+            }
+          // avg degree = 2E/V; remove deg ≤ avg, as exact integers: deg·V ≤ 2E
+          // (decimal product — deg·V would graze long range on 10⁹-vertex graphs)
+          val keep = deg.where(col("deg").cast("decimal(38,0)") * lit(nV) > lit(twoE))
+            .select(col("src").as("_kv"))
+          Some((round.cadence(e.join(keep.select(col("_kv").as("src")), Seq("src"), "left_semi")
+            .join(keep.select(col("_kv").as("dst")), Seq("dst"), "left_semi")), nextBest))
         }
-        // avg degree = 2E/V; remove deg ≤ avg, as exact integers: deg·V ≤ 2E
-        // (decimal product — deg·V would graze long range on 10⁹-vertex graphs)
-        val keep = deg.where(col("deg").cast("decimal(38,0)") * lit(nV) > lit(twoE))
-          .select(col("src").as("_kv"))
-        e = e.join(keep.select(col("_kv").as("src")), Seq("src"), "left_semi")
-          .join(keep.select(col("_kv").as("dst")), Seq("dst"), "left_semi")
-        it += 1
-        if (it % 4 == 0) e = materialize(e)
-      }
     }
-    if (!emptied) {
+    if (!res.converged) {
       log.warn(
         s"densestSubgraph: maxIter=$maxIter exhausted before the graph emptied — " +
           "returning the best snapshot seen (a valid density lower bound, but the " +
           "2-approximation certificate requires peeling to empty; raise maxIter)")
     }
-    if (best == null) {
-      import spark.implicits._
-      Seq.empty[(Long, Double)].toDF(idCol, "density")
-    } else {
-      best.select(col("src").as(idCol),
-        (lit(bestE).cast("double") / lit(bestV)).as("density"))
+    res.state._2 match {
+      case None =>
+        import spark.implicits._
+        Seq.empty[(Long, Double)].toDF(idCol, "density")
+      case Some((best, bestE, bestV)) =>
+        best.select(col("src").as(idCol),
+          (lit(bestE).cast("double") / lit(bestV)).as("density"))
     }
   }
 
@@ -2233,52 +2039,38 @@ object GraphQueries {
       maxIter: Int = 100
   ): DataFrame = graft.Caches.trackNewRdds(spark) {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
-    def materialize(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    val e = materialize(
+    val e = Loop.materialize(
       edges.select(col(EdgeColumns.Src).cast("long").as("src"),
           col(EdgeColumns.Dst).cast("long").as("dst"))
         .where(col("src") =!= col("dst"))
         .distinct())
     val verts = e.select(col("src").as("vid")).union(e.select(col("dst").as("vid"))).distinct()
-    var levels = materialize(verts.withColumn("lvl", lit(0L)))
-    var levelsCheckpoint = levels
-    var frontier = levels
-    var it = 0
-    var done = false
-    while (!done && it < maxIter) {
-      val cand = e
-        .join(frontier.select(col("vid").as("src"), col("lvl")), Seq("src"))
-        .groupBy(col("dst").as("vid"))
-        .agg(max(col("lvl") + 1).as("_c"))
-      // lazy checkpoint: the improvement count below scans (and thereby
-      // persists) every partition, so materialize + probe fuse to one job
-      val next =
-        levels.join(cand, Seq("vid"), "left")
-          .select(col("vid"),
-            greatest(col("lvl"), coalesce(col("_c"), lit(0L))).as("lvl"),
-            (coalesce(col("_c"), lit(-1L)) > col("lvl")).as("_imp"))
-          .localCheckpoint(false)
-      val nImp = next.where(col("_imp")).count()
-      if (nImp == 0L) {
-        next.unpersist(blocking = false)
-        done = true
-      } else {
-        frontier = next.where(col("_imp")).select(col("vid"), col("lvl"))
-        val prev = levelsCheckpoint
-        levels = next.select(col("vid"), col("lvl"))
-        levelsCheckpoint = next
-        if (prev ne next) prev.unpersist(blocking = false)
-        it += 1
-      }
+    val levels0 = Loop.materialize(verts.withColumn("lvl", lit(0L)))
+    val res = Loop.run((levels0, levels0), maxIter, held = Seq(levels0)) {
+      case ((levels, frontier), round) =>
+        val cand = e
+          .join(frontier.select(col("vid").as("src"), col("lvl")), Seq("src"))
+          .groupBy(col("dst").as("vid"))
+          .agg(max(col("lvl") + 1).as("_c"))
+        // lazy cut: the improvement count below scans (and thereby
+        // persists) every partition, so materialize + probe fuse to one job
+        val next = round.cut(
+          levels.join(cand, Seq("vid"), "left")
+            .select(col("vid"),
+              greatest(col("lvl"), coalesce(col("_c"), lit(0L))).as("lvl"),
+              (coalesce(col("_c"), lit(-1L)) > col("lvl")).as("_imp")),
+          eager = false)
+        if (next.where(col("_imp")).count() == 0L) None
+        else Some((next.select(col("vid"), col("lvl")),
+          next.where(col("_imp")).select(col("vid"), col("lvl"))))
     }
-    if (!done) {
+    if (!res.converged) {
       throw new IllegalStateException(
         s"dagLevels did not converge within maxIter=$maxIter rounds: the edge set " +
           "contains a cycle (levels would climb forever), or a genuine path exceeds " +
           "the budget — raise maxIter only if the input is provably acyclic")
     }
+    val (levels, _) = res.state
     levels.select(col("vid").as(idCol), col("lvl").as("level"))
   }
 
@@ -2338,51 +2130,35 @@ object GraphQueries {
   ): DataFrame = graft.Caches.trackNewRdds(spark) {
     require(numSources >= 1, s"numSources must be >= 1, got $numSources")
     require(maxDist >= 1, s"maxDist must be >= 1, got $maxDist")
-    def materialize(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    val canon = edges
-      .select(col(EdgeColumns.Src).cast("long").as("s"), col(EdgeColumns.Dst).cast("long").as("d"))
-      .where(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
-      .distinct()
-    val e = materialize(
-      canon.select(col("a").as("src"), col("b").as("dst"))
-        .union(canon.select(col("b").as("src"), col("a").as("dst"))))
+    val e = Loop.undirected(edges)
     val verts = e.select(col("src").as("v")).distinct()
     val nV = verts.count() // bounded scalar
     if (nV == 0L) {
       import spark.implicits._
       Seq.empty[(Long, Long, Double)].toDF(idCol, "n_reached", "harmonic")
     } else {
-      val pivots = materialize(
+      val pivots = Loop.materialize(
         verts.orderBy(graft.ops.Sampling.bucket(col("v"), seed, graft.ops.XxHash), col("v"))
           .limit(numSources).select(col("v").as("s")))
       val nS = pivots.count()
-      var settled = materialize(pivots.select(col("s"), col("s").as("v"), lit(0).as("lvl")))
-      var frontier = settled
-      var lvl = 0
-      var done = false
-      while (!done && lvl < maxDist) {
-        // lazy checkpoint + count: one fused pass per level (see shortestPaths)
-        val next =
-          frontier.join(e, col("v") === col("src"))
-            .select(col("s"), col("dst").as("v")).distinct()
-            .join(settled.select(col("s"), col("v")), Seq("s", "v"), "left_anti")
-            .withColumn("lvl", lit(lvl + 1))
-            .localCheckpoint(false)
-        if (next.count() == 0L) { next.unpersist(blocking = false); done = true }
-        else {
-          settled = settled.union(next)
-          frontier = next
-          lvl += 1
-          if (lvl % 4 == 0) settled = materialize(settled)
-        }
+      val settled0 = Loop.materialize(pivots.select(col("s"), col("s").as("v"), lit(0).as("lvl")))
+      val res = Loop.run((settled0, settled0), maxDist, held = Seq(settled0)) {
+        case ((settled, frontier), round) =>
+          // lazy checkpoint + count: one fused pass per level (see shortestPaths)
+          val next =
+            frontier.join(e, col("v") === col("src"))
+              .select(col("s"), col("dst").as("v")).distinct()
+              .join(settled.select(col("s"), col("v")), Seq("s", "v"), "left_anti")
+              .withColumn("lvl", lit(round.n))
+              .localCheckpoint(false)
+          if (next.count() == 0L) { Loop.release(next); None }
+          else Some((round.cadence(settled.union(next)), next))
       }
-      if (!done) {
+      if (!res.converged) {
         log.warn(s"approxCloseness: diameter exceeds maxDist=$maxDist from some pivot; " +
           "farther pairs contribute nothing — raise maxDist for exactness")
       }
+      val (settled, _) = res.state
       val factor = nV.toDouble / nS
       settled.where(col("lvl") > 0)
         .groupBy(col("v"))
@@ -2435,57 +2211,42 @@ object GraphQueries {
   ): DataFrame = graft.Caches.trackNewRdds(spark) {
     require(numSources >= 1, s"numSources must be >= 1, got $numSources")
     require(maxDist >= 1, s"maxDist must be >= 1, got $maxDist")
-    def materialize(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    val canon = edges
-      .select(col(EdgeColumns.Src).cast("long").as("s"), col(EdgeColumns.Dst).cast("long").as("d"))
-      .where(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"), greatest(col("s"), col("d")).as("b"))
-      .distinct()
-    val e = materialize(
-      canon.select(col("a").as("src"), col("b").as("dst"))
-        .union(canon.select(col("b").as("src"), col("a").as("dst"))))
+    val e = Loop.undirected(edges)
     val verts = e.select(col("src").as("v")).distinct()
     val nV = verts.count() // bounded scalar (vertex count)
     if (nV == 0L) {
       import spark.implicits._
       Seq.empty[(Long, Double)].toDF(idCol, "bc")
     } else {
-      val pivots = materialize(
+      val pivots = Loop.materialize(
         verts.orderBy(graft.ops.Sampling.bucket(col("v"), seed, graft.ops.XxHash), col("v"))
           .limit(numSources).select(col("v").as("s")))
       val nS = pivots.count() // = min(numSources, |V|), bounded scalar
       // forward: settled(s, v, lvl, sigma) — sigma exact decimal counts
-      var settled = materialize(pivots.select(col("s"), col("s").as("v"),
+      val settled0 = Loop.materialize(pivots.select(col("s"), col("s").as("v"),
         lit(0).as("lvl"), lit(1).cast("decimal(38,0)").as("sigma")))
-      var frontier = settled
-      var lvl = 0
-      var done = false
-      while (!done && lvl < maxDist) {
-        // lazy checkpoint + count: one fused pass per level (see shortestPaths)
-        val next =
-          frontier.join(e, col("v") === col("src"))
-            .groupBy(col("s"), col("dst").as("_w"))
-            .agg(sum(col("sigma")).as("sigma"))
-            .withColumnRenamed("_w", "v")
-            .join(settled.select(col("s"), col("v")), Seq("s", "v"), "left_anti")
-            .withColumn("lvl", lit(lvl + 1))
-            .select(col("s"), col("v"), col("lvl"), col("sigma"))
-            .localCheckpoint(false)
-        if (next.count() == 0L) { next.unpersist(blocking = false); done = true }
-        else {
-          settled = settled.union(next)
-          frontier = next
-          lvl += 1
-          if (lvl % 4 == 0) settled = materialize(settled)
-        }
+      val forward = Loop.run((settled0, settled0), maxDist, held = Seq(settled0)) {
+        case ((settled, frontier), round) =>
+          // lazy checkpoint + count: one fused pass per level (see shortestPaths)
+          val next =
+            frontier.join(e, col("v") === col("src"))
+              .groupBy(col("s"), col("dst").as("_w"))
+              .agg(sum(col("sigma")).as("sigma"))
+              .withColumnRenamed("_w", "v")
+              .join(settled.select(col("s"), col("v")), Seq("s", "v"), "left_anti")
+              .withColumn("lvl", lit(round.n))
+              .select(col("s"), col("v"), col("lvl"), col("sigma"))
+              .localCheckpoint(false)
+          if (next.count() == 0L) { Loop.release(next); None }
+          else Some((round.cadence(settled.union(next)), next))
       }
-      if (!done) {
+      if (!forward.converged) {
         log.warn(s"approxBetweenness: diameter exceeds maxDist=$maxDist from some pivot; " +
           "paths beyond that radius are not accumulated — raise maxDist")
       }
-      settled = materialize(settled)
+      val lvl = forward.rounds
+      val settled = Loop.materialize(forward.state._1)
+      forward.release() // the backward sweep reads only the final cut
       // backward: δ by descending level; every settled row gets a δ row
       var delta = settled.where(col("lvl") === lvl)
         .select(col("s"), col("v"), col("lvl"), col("sigma"), lit(0.0).as("delta"))
@@ -2500,7 +2261,7 @@ object GraphQueries {
           .groupBy(col("s"), col("v"))
           .agg(sum(((col("sigma").cast("double") / col("_sw").cast("double"))
             * (lit(1.0) + col("_dw"))).cast("decimal(38,12)")).cast("double").as("_c"))
-        delta = materialize(
+        delta = Loop.materialize(
           cur.join(contrib, Seq("s", "v"), "left")
             .select(col("s"), col("v"), col("lvl"), col("sigma"),
               coalesce(col("_c"), lit(0.0)).as("delta")))
@@ -2551,10 +2312,7 @@ object GraphQueries {
       maxIter: Int = 30
   ): DataFrame = graft.Caches.trackNewRdds(spark) {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
-    def materialize(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    val canon = materialize(edges
+    val canon = Loop.materialize(edges
       .select(col(EdgeColumns.Src).cast("long").as("s"),
         col(EdgeColumns.Dst).cast("long").as("d"), col(weightCol).as("w"))
       .where(col("s") =!= col("d") && col("w").isNotNull)
@@ -2562,7 +2320,7 @@ object GraphQueries {
       .groupBy(col("a"), col("b")).agg(min(col("w")).as("w")))
     val emptyForest =
       canon.limit(0).select(col("a").as("src"), col("b").as("dst"), col("w").as("weight"))
-    var labels = materialize(
+    var labels = Loop.materialize(
       canon.select(col("a").as("v")).union(canon.select(col("b"))).distinct()
         .select(col("v"), col("v").as("c")))
     var forest: DataFrame = null
@@ -2575,7 +2333,7 @@ object GraphQueries {
       val xe = canon.join(la, "a").join(lb, "b")
         .where(col("_ca") =!= col("_cb"))
         .localCheckpoint(false)
-      if (xe.count() == 0L) { xe.unpersist(blocking = false); done = true }
+      if (xe.count() == 0L) { Loop.release(xe); done = true }
       else {
         // each component's lightest incident edge in the (w, a, b) order;
         // the other endpoint's component rides along for the hook graph
@@ -2583,18 +2341,18 @@ object GraphQueries {
             struct(col("w"), col("a"), col("b"), col("_cb").as("_oc")).as("_cand"))
           .union(xe.select(col("_cb").as("_c"),
             struct(col("w"), col("a"), col("b"), col("_ca").as("_oc")).as("_cand")))
-        val sel = materialize(cands.groupBy(col("_c")).agg(min(col("_cand")).as("_m"))
+        val sel = Loop.materialize(cands.groupBy(col("_c")).agg(min(col("_cand")).as("_m"))
           .select(col("_c"), col("_m.w").as("w"), col("_m.a").as("a"),
             col("_m.b").as("b"), col("_m._oc").as("_oc")))
         // an edge elected from both sides appears once in the forest
         val newEdges = sel.select(col("a"), col("b"), col("w")).distinct()
-        forest = materialize(if (forest == null) newEdges else forest.union(newEdges))
+        forest = Loop.materialize(if (forest == null) newEdges else forest.union(newEdges))
         val roots = componentLabels(spark,
           sel.select(col("_c").as(EdgeColumns.Src), col("_oc").as(EdgeColumns.Dst)))
-        labels = materialize(labels.join(
+        labels = Loop.materialize(labels.join(
             roots.select(col("vid").as("c"), col("component").as("_nc")), Seq("c"), "left")
           .select(col("v"), coalesce(col("_nc"), col("c")).as("c")))
-        xe.unpersist(blocking = false)
+        Loop.release(xe)
         iter += 1
       }
     }

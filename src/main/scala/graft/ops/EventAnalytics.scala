@@ -164,9 +164,6 @@ object EventAnalytics {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     val spark = transitions.sparkSession
     graft.Caches.trackNewRdds(spark) {
-    def materialize(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
     val c = transitions.where(col(fromCol).isNotNull && col(toCol).isNotNull)
       .select(col(fromCol).as("_f"), col(toCol).as("_t"), col(nCol).cast("long").as("_n"))
     val states = c.select(col("_f").as("_s")).union(c.select(col("_t"))).distinct()
@@ -177,14 +174,15 @@ object EventAnalytics {
       (col("_n").cast("double") /
         sum(col("_n")).over(Window.partitionBy(col("_f"))).cast("double")).as("_prob"))
     val nStates = states.agg(count(lit(1)).as("_k"))
-    var x = states.crossJoin(nStates).select(col("_s"), (lit(1.0) / col("_k")).as("_p"))
-    for (i <- 1 to iterations) {
-      x = p.join(x, col("_f") === col("_s"))
+    val x0 = states.crossJoin(nStates).select(col("_s"), (lit(1.0) / col("_k")).as("_p"))
+    // the last round feeds the output join directly, so it is never cut
+    val x = graft.Loop.run(x0, iterations) { (x, round) =>
+      val next = p.join(x, col("_f") === col("_s"))
         .groupBy(col("_t"))
         .agg(sum((col("_p") * col("_prob")).cast("decimal(38,12)")).cast("double").as("_p"))
         .select(col("_t").as("_s"), col("_p"))
-      if (i % 4 == 0 && i < iterations) x = materialize(x)
-    }
+      Some(if (round.last) next else round.cadence(next))
+    }.state
     states.join(x, Seq("_s"), "left")
       .select(col("_s").as("state"), round(coalesce(col("_p"), lit(0.0)), scale).as("p"))
     }
@@ -218,9 +216,6 @@ object EventAnalytics {
     require(steps >= 1, s"steps must be >= 1, got $steps")
     val spark = transitions.sparkSession
     graft.Caches.trackNewRdds(spark) {
-      def materialize(df: DataFrame): DataFrame =
-        if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-        else df.localCheckpoint()
       val c = transitions.where(col(fromCol).isNotNull && col(toCol).isNotNull)
         .select(col(fromCol).as("_f"), col(toCol).as("_t"), col(nCol).cast("long").as("_n"))
       val states = c.select(col("_f").as("_s")).union(c.select(col("_t"))).distinct()
@@ -228,19 +223,20 @@ object EventAnalytics {
         .join(c.select(col("_f")).distinct(), col("_s") === col("_f"), "left_anti")
         .select(col("_s").as("_f"), col("_s").as("_t"), lit(1L).as("_n"))
       // the chain is probed every round — materialize once
-      val p = materialize(c.union(dangling).select(col("_f"), col("_t"),
+      val p = graft.Loop.materialize(c.union(dangling).select(col("_f"), col("_t"),
         (col("_n").cast("double") /
           sum(col("_n")).over(Window.partitionBy(col("_f"))).cast("double")).as("_prob")))
-      var h = states.select(col("_s"),
+      val h0 = states.select(col("_s"),
         when(col("_s") === target, lit(1.0)).otherwise(lit(0.0)).as("_h"))
-      for (i <- 1 to steps) {
-        h = p.join(h, col("_t") === col("_s"))
+      // the last round feeds the output directly, so it is never cut
+      val h = graft.Loop.run(h0, steps) { (h, round) =>
+        val next = p.join(h, col("_t") === col("_s"))
           .groupBy(col("_f"))
           .agg(sum((col("_prob") * col("_h")).cast("decimal(38,12)")).cast("double").as("_hs"))
           .select(col("_f").as("_s"),
             when(col("_f") === target, lit(1.0)).otherwise(col("_hs")).as("_h"))
-        if (i % 4 == 0 && i < steps) h = materialize(h)
-      }
+        Some(if (round.last) next else round.cadence(next))
+      }.state
       h.select(col("_s").as("state"), round(col("_h"), scale).as("h"))
     }
   }

@@ -785,38 +785,34 @@ object Sampling {
       scale: Int = 6
   ): DataFrame = graft.Caches.trackNewRdds(df.sparkSession) {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val spark = df.sparkSession
-    def materialize(d: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) d.checkpoint()
-      else d.localCheckpoint()
     val dec = (c: Column) => round(c, 9).cast("decimal(28,9)")
-    var cells = materialize(
+    val cells0 = graft.Loop.materialize(
       df.select(rowCol.as("_r"), colCol.as("_c"))
         .where(col("_r").isNotNull && col("_c").isNotNull)
         .groupBy(col("_r"), col("_c")).agg(count(lit(1)).as("n"))
         .withColumn("_w", dec(col("n").cast("double"))))
-    val tot = cells.agg(
+    val tot = cells0.agg(
       sum(col("n")).as("_tn"),
       countDistinct(col("_r")).as("_nr"),
       countDistinct(col("_c")).as("_nc")).head()
     val targetRow = tot.getLong(0).toDouble / tot.getLong(1)
     val targetCol = tot.getLong(0).toDouble / tot.getLong(2)
-    for (_ <- 1 to rounds) {
+    val cells = graft.Loop.run(cells0, rounds, held = Seq(cells0)) { (cells, round) =>
       val rm = cells.groupBy(col("_r")).agg(sum(col("_w")).as("_rs"))
-      val rowPass = materialize(
+      val rowPass = graft.Loop.materialize(
         cells.join(broadcast(rm), Seq("_r"))
           .withColumn("_w",
             dec(col("_w").cast("double") * lit(targetRow) / col("_rs").cast("double")))
           .drop("_rs"))
-      cells.unpersist(blocking = false)
       val cm = rowPass.groupBy(col("_c")).agg(sum(col("_w")).as("_cs"))
-      cells = materialize(
+      val colPass = round.cut(
         rowPass.join(broadcast(cm), Seq("_c"))
           .withColumn("_w",
             dec(col("_w").cast("double") * lit(targetCol) / col("_cs").cast("double")))
           .drop("_cs"))
-      rowPass.unpersist(blocking = false)
-    }
+      graft.Loop.release(rowPass)
+      Some(colPass)
+    }.state
     cells.select(col("_r").as("row_key"), col("_c").as("col_key"), col("n"),
       round(col("_w").cast("double"), scale).as("weight"),
       round(col("_w").cast("double") / col("n"), scale).as("factor"))

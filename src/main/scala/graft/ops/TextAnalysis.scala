@@ -974,36 +974,22 @@ object TextAnalysis {
   ): DataFrame = {
     require(numMerges > 0, s"numMerges must be positive, got $numMerges")
     val spark = df.sparkSession
-    def materialize(d: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) d.checkpoint()
-      else d.localCheckpoint()
-    val checkpointEvery = 4
-    var vocab = materialize(bpeVocabulary(df, textCol))
-    var lastMaterialized: Option[DataFrame] = Some(vocab)
+    val vocab0 = graft.Loop.materialize(bpeVocabulary(df, textCol))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
-    var done = false
-    var step = 1
-    while (step <= numMerges && !done) {
+    graft.Loop.run(vocab0, numMerges, cutLast = true, held = Seq(vocab0)) { (vocab, round) =>
       val top = bpePairCounts(vocab)
         .orderBy(col("pair_count").desc, col("sym_l"), col("sym_r"))
         .limit(1).collect()
-      if (top.isEmpty || top.head.getLong(2) < minPairCount) done = true
+      if (top.isEmpty || top.head.getLong(2) < minPairCount) None
       else {
         val (l, r, c) = (top.head.getString(0), top.head.getString(1), top.head.getLong(2))
-        merges += ((step.toLong, l, r, l + r, c))
+        merges += ((round.n.toLong, l, r, l + r, c))
         val pattern = "(?<!\\S)" + java.util.regex.Pattern.quote(l + " " + r) + "(?!\\S)"
         val replacement = java.util.regex.Matcher.quoteReplacement(l + r)
-        vocab = vocab.select(
-          regexp_replace(col("repr"), pattern, replacement).as("repr"), col("wc"))
-        if (step % checkpointEvery == 0 || step == numMerges) {
-          val prev = lastMaterialized
-          vocab = materialize(vocab)
-          lastMaterialized = Some(vocab)
-          prev.foreach(_.unpersist(blocking = false))
-        }
-        step += 1
+        Some(round.cadence(vocab.select(
+          regexp_replace(col("repr"), pattern, replacement).as("repr"), col("wc"))))
       }
-    }
+    }.release() // the merges are local; nothing reads the vocabulary again
     import spark.implicits._
     merges.toSeq.toDF("step", "left", "right", "merged", "pair_count")
   }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.graph.GraphQueries
+import graft.ops.{EventAnalytics, Sampling, TextAnalysis}
 
 /** Session cache hygiene: every iterative / GraphX op must leave NOTHING in
   * the block manager once its result is consumed and `Caches.clear()` runs —
@@ -23,6 +24,35 @@ class CacheHygieneSpec extends SparkSpec {
   private def vertices = {
     import spark.implicits._
     (1L to 7L).toDF("id")
+  }
+
+  private def weighted = edges.withColumn("weight", col("src") + col("dst"))
+
+  private def transitions = {
+    import spark.implicits._
+    Seq(("a", "b", 3L), ("b", "a", 1L), ("b", "c", 2L), ("c", "a", 1L))
+      .toDF("from_type", "to_type", "n")
+  }
+
+  /** An undirected path 1 - 2 - ... - n. */
+  private def path(n: Long) = {
+    import spark.implicits._
+    (1L until n).map(i => (i, i + 1)).toDF("src", "dst")
+  }
+
+  /** Persisted RDDs still pinned, BEFORE `Caches.clear()`, once the frame
+    * `run` returns has been consumed. The frame stays reachable until the
+    * count is taken: the persistent-RDD registry holds its values weakly.
+    */
+  private def pinnedBy(run: => org.apache.spark.sql.DataFrame): Int = {
+    Caches.clear()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val result = run
+    result.collect()
+    val pinned = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+    java.lang.ref.Reference.reachabilityFence(result)
+    Caches.clear()
+    pinned
   }
 
   private def assertNoResidue(label: String)(run: => Unit): Unit = {
@@ -75,6 +105,76 @@ class CacheHygieneSpec extends SparkSpec {
       assert(GraphQueries.relaxDistances(spark, edges,
         Seq((1L, 0)).toDF("id", "dist")).count() == 7)
     }
+  }
+
+  test("the remaining graph loops release their checkpoints after clear()") {
+    assertNoResidue("hits") {
+      assert(GraphQueries.hits(spark, edges, iters = 6).count() == 7)
+    }
+    assertNoResidue("weightedDistances") {
+      assert(GraphQueries.weightedDistances(spark, weighted, Seq(1L)).count() == 7)
+    }
+    assertNoResidue("randomWalks") {
+      assert(GraphQueries.randomWalks(spark, edges, Seq(1L, 7L), numWalks = 2).count() == 24)
+    }
+    assertNoResidue("sccDF") {
+      assert(GraphQueries.sccDF(spark, edges).count() == 7)
+    }
+    assertNoResidue("coreNumbers") {
+      assert(GraphQueries.coreNumbers(spark, edges).count() == 7)
+    }
+    assertNoResidue("kTruss") {
+      assert(GraphQueries.kTruss(spark, edges, k = 3).count() == 6)
+    }
+    assertNoResidue("densestSubgraph") {
+      assert(GraphQueries.densestSubgraph(spark, edges).count() == 7)
+    }
+    assertNoResidue("dagLevels") {
+      assert(GraphQueries.dagLevels(spark, edges).count() == 7)
+    }
+    assertNoResidue("approxCloseness") {
+      assert(GraphQueries.approxCloseness(spark, edges, numSources = 3).count() == 7)
+    }
+    assertNoResidue("approxBetweenness") {
+      assert(GraphQueries.approxBetweenness(spark, edges, numSources = 3).count() == 7)
+    }
+    assertNoResidue("minSpanningForest") {
+      assert(GraphQueries.minSpanningForest(spark, weighted).count() == 6)
+    }
+  }
+
+  test("ipfWeights, markovStationary and hittingProbability release their checkpoints after clear()") {
+    assertNoResidue("ipfWeights") {
+      import spark.implicits._
+      val df = Seq(("a", "x"), ("a", "y"), ("b", "x"), ("b", "x")).toDF("r", "c")
+      assert(Sampling.ipfWeights(df, col("r"), col("c"), rounds = 2).count() == 3)
+    }
+    assertNoResidue("markovStationary") {
+      assert(EventAnalytics.markovStationary(transitions, iterations = 9).count() == 3)
+    }
+    assertNoResidue("hittingProbability") {
+      assert(EventAnalytics.hittingProbability(transitions, "c", steps = 9).count() == 3)
+    }
+  }
+
+  test("bpeMerges leaves nothing persisted, even before clear()") {
+    import spark.implicits._
+    val docs = Seq("hug pug pun bun hugs", "hug pun pun hugs hug").toDF("text")
+    assertNoResidue("bpeMerges") {
+      assert(TextAnalysis.bpeMerges(docs, numMerges = 6).count() > 0)
+    }
+    assert(pinnedBy(TextAnalysis.bpeMerges(docs, numMerges = 6)) == 0)
+  }
+
+  test("loops pin one cut however many rounds they run (previous cuts are released)") {
+    // a path peels its two endpoints per round: 6 rounds on 12 vertices,
+    // 24 on 48 — 1 vs 6 cadence cuts
+    def densest(n: Long) = pinnedBy(GraphQueries.densestSubgraph(spark, path(n)))
+    assert(densest(12) == densest(48))
+    def markov(k: Int) = pinnedBy(EventAnalytics.markovStationary(transitions, iterations = k))
+    assert(markov(6) == markov(14))
+    def hitting(k: Int) = pinnedBy(EventAnalytics.hittingProbability(transitions, "c", steps = k))
+    assert(hitting(6) == hitting(14))
   }
 
   test("GraphX ops (pageRank, connectedComponents, triangleCounts) release graph caches") {
