@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.rules.{EdgeColumns, VertexClassifierRule}
@@ -25,42 +25,62 @@ class EdgeStore(spark: SparkSession, basePath: String) {
     math.max((edgeCount / taskSize + 1).toInt, minParallelism)
 
   /** Validates a rule's edge schema, then adds the reversed copy of every
-    * edge when `bidirectional`.
+    * edge when `bidirectional`. Each edge and its swap come out of one read
+    * of `edges` (an explode of the pair), so an uncached rule frame is
+    * computed once, not once per direction.
     */
   private def oriented(edges: DataFrame, label: String, bidirectional: Boolean): DataFrame = {
     VertexClassifierRule.validate(edges.schema, label)
     if (!bidirectional) edges
-    else
-      edges.union(
-        edges.select(
-          col(EdgeColumns.Dst).as(EdgeColumns.Src),
-          col(EdgeColumns.Src).as(EdgeColumns.Dst),
-          col(EdgeColumns.PropVal)))
+    else {
+      val (src, dst, value) = (col(EdgeColumns.Src), col(EdgeColumns.Dst), col(EdgeColumns.PropVal))
+      edges
+        .select(explode(array(
+          struct(src, dst, value),
+          struct(dst.as(EdgeColumns.Src), src.as(EdgeColumns.Dst), value))).as("edge"))
+        .select("edge.*")
+    }
   }
 
-  /** Writes one rule's edge set, partitioned by edge label.
+  /** Writes one rule's edge set, partitioned by edge label, and returns the
+    * number of rows stored (2× the edge count when `bidirectional`).
     *
     * Bidirectionality: the reference writes each edge twice (forward +
     * reverse, EdgeProcessor.scala:108-138) because JanusGraph adjacency is
-    * directional; relationally we materialize `union(swap(src, dst))` when
+    * directional; relationally we materialize every edge and its swap when
     * `bidirectional = true`, or leave symmetry to query time.
+    *
+    * The count is taken as the rows are written, like the reference's
+    * (EdgeProcessor.scala:166): an [[Observation]] on the frame the write
+    * consumes, so classifying, counting and storing are one Spark execution
+    * and `edges` need not be cached. It sits above the exchange and the
+    * sort on purpose: below them, AQE's empty-relation propagation can
+    * prune the observing node away when a rule finds nothing, and the
+    * metric would never arrive.
     *
     * Scale notes: edges are hash-distributed on `src` before the write —
     * the same `keyBy(src).partitionBy(HashPartitioner)` layout the reference
     * uses (EdgeProcessor.scala:170-180) — so downstream per-source reads and
-    * vertex-id joins are co-located. AQE coalesces small shuffle partitions.
+    * vertex-id joins are co-located — and each file is sorted by `src`,
+    * which keeps a vertex's forward and reverse rows together and lets
+    * Parquet's encodings and row-group statistics work on runs of equal
+    * ids. AQE coalesces small shuffle partitions.
     */
   def write(
       edges: DataFrame,
       label: String,
       bidirectional: Boolean = false,
       mode: SaveMode = SaveMode.Append
-  ): Unit = {
+  ): Long = {
+    val stored = Observation()
     oriented(edges, label, bidirectional)
       .repartition(col(EdgeColumns.Src))
+      .sortWithinPartitions(col(EdgeColumns.Src))
+      .observe(stored, count(lit(1)).as("rows"))
       .write
       .mode(mode)
       .parquet(s"$basePath/label=$label")
+    stored.get("rows").asInstanceOf[Long]
   }
 
   def read(label: String): DataFrame = spark.read.parquet(s"$basePath/label=$label")

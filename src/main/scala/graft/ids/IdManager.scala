@@ -16,10 +16,11 @@ import graft.io.PartitionManager
   */
 case class IdManagerConfig(dataPath: String, tableName: String, reservedIdSpace: Long = 200)
 
-/** Loaded + current vertex data after id assignment.
+/** Loaded + current vertex data after id assignment; `currentCount` is the
+  * number of rows in `current`, counted once for the id sidecar.
   * Ref: core/.../services/IDManagerSparkService.scala (VertexData).
   */
-case class VertexData(loaded: DataFrame, current: DataFrame)
+case class VertexData(loaded: DataFrame, current: DataFrame, currentCount: Long)
 
 /** Maintains the append-only, id-stamped vertex Parquet table: the engine's
   * system of record and the source of "loaded" vertices for edge rules.
@@ -122,7 +123,7 @@ class IdManager(spark: SparkSession, config: IdManagerConfig) {
 
   /** Id-stamps the current batch (continuing from the table's max id),
     * appends it to the vertex table partitioned by year/month/day, and
-    * returns (loaded, current-with-ids).
+    * returns (loaded, current-with-ids, its row count).
     * Ref: IDManagerSparkService.scala:102-130 (process).
     *
     * `loadedRange` restricts the returned loaded side to a date range via
@@ -165,18 +166,19 @@ class IdManager(spark: SparkSession, config: IdManagerConfig) {
     // Row round trip); ZipWithIndex is the public-API equivalent
     val dfWithId = org.apache.spark.sql.graft.DenseId.assign(df, lastMax)
     // tracked, not bare-cached: the id-stamped batch feeds the sidecar
-    // count, the append, and the caller's classify+count — all inside one
-    // load — then must not outlive the load in a long session (GraftJob.load
+    // count, the append, and every rule's classify — all inside one load —
+    // then must not outlive the load in a long session (GraftJob.load
     // releases it; Caches.clear() does for other callers)
     graft.Caches.track(dfWithId)
+    val n = dfWithId.count()
     // advance the sidecar BEFORE appending (crash ⇒ gap, never reuse)
-    writeMaxIdSidecar(lastMax + dfWithId.count())
+    writeMaxIdSidecar(lastMax + n)
     dfWithId.write
       .format("parquet")
       .mode(SaveMode.Append)
       .partitionBy("year", "month", "day")
       .save(tablePath)
-    VertexData(loaded, dfWithId)
+    VertexData(loaded, dfWithId, n)
   }
 
   /** Rewrites the date range's partition directories into size-targeted

@@ -110,23 +110,22 @@ class GraftJob(spark: SparkSession, config: GraftConfig) {
     * [[graft.streaming.StreamingIngest]].
     *
     * Per-run counts, matching the reference (EdgeProcessor.scala:166): each
-    * classified set is cached so the count and the write share one
-    * computation, and the accumulated store — which grows without bound —
-    * is never re-read in the hot path. The id-stamped batch is released at
-    * the end: it feeds nothing after the load.
+    * rule's edges are classified, counted and stored in one Spark execution
+    * ([[EdgeStore.write]] counts the rows it stores), the vertex count is the
+    * one [[IdManager.process]] already took, and the accumulated store —
+    * which grows without bound — is never re-read in the hot path. The
+    * id-stamped batch, the one frame the rules share, is released at the
+    * end: it feeds nothing after the load.
     */
   def load(batch: DataFrame, loadedRange: Option[PartitionManager]): JobResult = {
     val vertexData: VertexData = idManager.process(batch, loadedRange)
-    val edgeCounts = buildRules().map { rule =>
-      val edges = rule.classify(vertexData.loaded, vertexData.current).cache()
-      val n = edges.count()
-      edgeStore.write(edges, rule.getEdgeLabel, bidirectional = config.bidirectionalEdges)
-      edges.unpersist()
-      rule.getEdgeLabel -> (if (config.bidirectionalEdges) n * 2 else n)
-    }.toMap
-    val result = JobResult(vertexData.current.count(), edgeCounts)
-    vertexData.current.unpersist()
-    result
+    try {
+      val edgeCounts = buildRules().map { rule =>
+        val edges = rule.classify(vertexData.loaded, vertexData.current)
+        rule.getEdgeLabel -> edgeStore.write(edges, rule.getEdgeLabel, bidirectional = config.bidirectionalEdges)
+      }.toMap
+      JobResult(vertexData.currentCount, edgeCounts)
+    } finally vertexData.current.unpersist()
   }
 
   /** Maintenance mode: compacts the date range's vertex partitions and

@@ -34,7 +34,8 @@ case class SimilarityConfig(similarityExp: String)
   *    (column pruning before the shuffle/broadcast);
   *  - join once per top-level disjunct ([[SimilarityClassifier.join]]), so
   *    an OR of equalities becomes a union of equi-joins instead of one
-  *    cartesian.
+  *    cartesian; a pair matching several disjuncts is claimed by its first
+  *    disjunct only, so the union needs no dedup.
   */
 class SimilarityClassifier(config: SimilarityConfig) extends VertexClassifierRule {
 
@@ -64,7 +65,11 @@ object SimilarityClassifier {
     * disjunct, equality-style leaves (`<=>`, cdsxmatch, mulens) become
     * hash-join keys, and single-side range leaves (score > 0.9) are pushed
     * below the join as filters, shrinking even the disjuncts that remain
-    * nested-loop. A pair that satisfies several disjuncts is kept once.
+    * nested-loop. A pair that satisfies several disjuncts is claimed by its
+    * first disjunct: disjunct k also requires `NOT coalesce(d_j, false)` for
+    * every earlier j, so the union holds each pair once and needs no dedup
+    * aggregate (the residual-filter rule of
+    * [[graft.ops.IntervalJoin.intervalOverlap]]).
     *
     * The similarity value is the per-leaf fold of the reference
     * (SimilarityClassifer.scala:91-106) either way, so the result does not
@@ -90,25 +95,14 @@ object SimilarityClassifier {
 
     // Plain relational join (not joinWith + struct unwrap as in the
     // reference): same semantics, one fewer projection, and the flat shape
-    // lets Catalyst extract equi-conjuncts from the condition.
-    def on(d: SimilarityExp.Expr): DataFrame =
-      df1.join(df2, (col("id1") > col("id2")) && SimilarityExp.compile(d))
-
-    val joined = disjuncts match {
-      case List(d) => on(d)
-      case _ =>
-        // Each disjunct join already has every leaf column in scope, so one
-        // aggregation on (id1, id2) dedups candidate pairs without joining
-        // df1 and df2 again. Duplicate pairs carry identical leaf values by
-        // construction, so first() is deterministic.
-        val leafCols  = selectColsNoId.flatMap(c => List(s"${c}1", s"${c}2"))
-        val firstAggs = leafCols.map(c => first(col(c)).as(c))
-        disjuncts
-          .map(d => on(d).select(col("id1") :: col("id2") :: leafCols.map(col): _*))
-          .reduce(_ union _)
-          .groupBy(col("id1"), col("id2"))
-          .agg(firstAggs.head, firstAggs.tail: _*)
-    }
+    // lets Catalyst extract equi-conjuncts from the condition. An earlier
+    // disjunct that is NULL (a null leaf) has not claimed the pair, hence
+    // the coalesce.
+    val joined = disjuncts.indices.map { k =>
+      val unclaimed = disjuncts.take(k).map(d => !coalesce(SimilarityExp.compile(d), lit(false)))
+      val condition = (col("id1") > col("id2")) && SimilarityExp.compile(disjuncts(k))
+      df1.join(df2, unclaimed.foldLeft(condition)(_ && _))
+    }.reduce(_ union _)
 
     // +1 per satisfied leaf condition, matching the reference's fold
     // (SimilarityClassifer.scala:91-106).

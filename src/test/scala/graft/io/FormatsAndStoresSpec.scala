@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.graph.{EdgeStore, FixedVertexStore}
-import graft.rules.{SimilarityClassifier, SimilarityConfig, SimilarityExp}
+import graft.rules.{EdgeColumns, SimilarityClassifier, SimilarityConfig, SimilarityExp}
 
 /** S1's csv/json format support + the store operators (S6-S8) and the
   * OR-similarity rewrite A/B (SURVEY §4 stretch item).
@@ -69,6 +69,36 @@ class FormatsAndStoresSpec extends SparkSpec {
     assert(!plan.contains("Exchange"), s"bucketed agg should not shuffle:\n$plan")
     assert(plan.contains("Bucketed: true"), plan)
     spark.sql("DROP TABLE IF EXISTS edges_bucket_spec")
+  }
+
+  test("EdgeStore.write returns the rows it appends (2n bidirectional) and sorts each file by src") {
+    import spark.implicits._
+    val base  = tempDir("edges-write")
+    val store = new EdgeStore(spark, base)
+    def stored(): Long =
+      try store.read("sim").count() catch { case _: org.apache.spark.sql.AnalysisException => 0L }
+    val edges = (1 to 200).map(i => ((i * 37 % 101).toLong, (i * 53 % 97 + 200).toLong, i % 5))
+      .toDF(EdgeColumns.all: _*)
+    // uncoalesced shuffle partitions: several files, each with many rows
+    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.get(coalesceKey)
+    spark.conf.set(coalesceKey, "false")
+    try {
+      Seq(true -> 400L, false -> 200L).foreach { case (bidirectional, want) =>
+        val before = stored()
+        assert(store.write(edges, "sim", bidirectional = bidirectional) == want, s"bidirectional=$bidirectional")
+        assert(stored() - before == want, s"bidirectional=$bidirectional")
+      }
+      assert(store.write(edges.limit(0), "sim", bidirectional = true) == 0)
+      assert(store.write(edges.where($"src" < 0), "sim") == 0)
+      assert(stored() == 600)
+    } finally spark.conf.set(coalesceKey, prev)
+    val files = new java.io.File(s"$base/label=sim").listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(files.length > 2, files.map(_.getName).mkString(", "))
+    files.foreach { f =>
+      val src = spark.read.parquet(f.getPath).select("src").collect().map(_.getLong(0)).toSeq
+      assert(src == src.sorted, s"${f.getName} is not sorted by src")
+    }
   }
 
   test("EdgeStore.compact collapses appended small files, preserving rows") {

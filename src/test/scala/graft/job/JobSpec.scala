@@ -1,5 +1,13 @@
 package graft.job
 
+import scala.collection.mutable
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+
 import graft.SparkSpec
 import graft.ids.IdManagerConfig
 import graft.io.ReaderConfig
@@ -73,6 +81,79 @@ class JobSpec extends SparkSpec {
     val simLeft = spark.read.parquet(s"$work/edges/label=similarity")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(!simLeft.exists { case (s, d) => s >= 103L || d >= 103L })
+  }
+
+  test("a rule that finds no edge reports 0, writes no rows, and neither throws nor blocks") {
+    import spark.implicits._
+    val work = tempDir("graft-job-empty")
+    // no shared objectId, no rfscore > 0.9: `objectId OR rfscore` matches
+    // nothing, on the first day (empty history) and on the second; the
+    // exactmatch rule still links the two alerts of each day
+    Seq(
+      ("objA", 0.10, "AGN", 2019, 2, 1),
+      ("objB", 0.20, "AGN", 2019, 2, 1),
+      ("objC", 0.30, "QSO", 2019, 2, 2),
+      ("objD", 0.40, "QSO", 2019, 2, 2)
+    ).toDF("objectId", "rfscore", "cdsxmatch", "year", "month", "day")
+      .write.partitionBy("year", "month", "day").parquet(s"$work/raw")
+    val cfg = config(work).copy(rules = config(work).rules.copy(
+      similarity = Some(SimilarityConfig("objectId OR rfscore"))))
+    val job = new GraftJob(spark, cfg)
+    Seq("2019-02-01", "2019-02-02").foreach { day =>
+      val r = Await.result(Future(job.process(day, 1)), 2.minutes)
+      assert(r.vertexCount == 2, day)
+      assert(r.edgeCounts == Map("similarity" -> 0L, "exactmatch" -> 2L), day)
+    }
+    val similarity = new java.io.File(s"$work/edges/label=similarity")
+    if (similarity.exists) assert(spark.read.parquet(similarity.getPath).count() == 0)
+    assert(spark.read.parquet(s"$work/edges/label=exactmatch").count() == 4)
+  }
+
+  test("one process day runs each rule as one execution (its write) and counts the batch once") {
+    // SQL executions one day starts (tagged, so no other thread's work
+    // counts), and the persisted RDDs it leaves
+    def day(work: String, rules: List[String], date: String): (Seq[SparkListenerSQLExecutionStart], Set[Int]) = {
+      val cfg = config(work)
+      val job = new GraftJob(spark, cfg.copy(rules = cfg.rules.copy(rulesToApply = rules)))
+      val tag  = s"jobspec-$date-${rules.size}"
+      val seen = mutable.ArrayBuffer.empty[SparkListenerSQLExecutionStart]
+      val listener = new SparkListener {
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case s: SparkListenerSQLExecutionStart if s.jobTags.contains(tag) => seen.synchronized { seen += s; () }
+          case _ =>
+        }
+      }
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      spark.sparkContext.addSparkListener(listener)
+      spark.sparkContext.addJobTag(tag)
+      try {
+        job.process(date, 1)
+        org.apache.spark.graft.TestSparkInternals.flushListenerBus(spark.sparkContext)
+      } finally {
+        spark.sparkContext.removeJobTag(tag)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      (seen.synchronized(seen.toList), spark.sparkContext.getPersistentRDDs.keySet.toSet -- before)
+    }
+    def counts(execs: Seq[SparkListenerSQLExecutionStart]): Int =
+      execs.count(_.description.startsWith("count at"))
+    def labelWrites(execs: Seq[SparkListenerSQLExecutionStart]): Seq[String] =
+      execs.flatMap(e => """/label=(\w+)""".r.findFirstMatchIn(e.physicalPlanDescription).map(_.group(1)))
+
+    val (withRules, without) = (tempDir("graft-job-execs"), tempDir("graft-job-execs0"))
+    val rules = config(withRules).rules.rulesToApply
+    writeAlerts(s"$withRules/raw"); writeAlerts(s"$without/raw")
+    Seq("2019-02-01", "2019-02-02").foreach { date =>
+      val (execs, pinned)   = day(withRules, rules, date)
+      val (execs0, pinned0) = day(without, Nil, date)
+      assert(execs.size - execs0.size == rules.size,
+        s"$date: each rule must add exactly one execution, got ${execs.size} vs ${execs0.size} without rules:\n" +
+          execs.map(_.description).mkString("\n"))
+      assert(labelWrites(execs).sorted == List("exactmatch", "similarity"), date)
+      assert(counts(execs) == 1 && counts(execs0) == 1,
+        s"$date: the batch is counted once and no rule's edges are counted apart from their write")
+      assert(pinned.isEmpty && pinned0.isEmpty, s"$date: process left RDDs persisted: $pinned $pinned0")
+    }
   }
 
   test("loadedDays covering all history produces identical edges to a full re-read") {

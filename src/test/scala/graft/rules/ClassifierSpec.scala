@@ -80,6 +80,36 @@ class ClassifierSpec extends SparkSpec {
     }
   }
 
+  test("similarity: each pair is claimed by its first disjunct — the same multiset as the theta-join") {
+    import spark.implicits._
+    // pairs satisfying several disjuncts (11-1: objectId, rfscore and
+    // cdsxmatch) and pairs whose earlier disjunct is NULL rather than false
+    // (12-11: null rfscore, 13-2: null cdsxmatch), which a later disjunct
+    // must still keep
+    def frame(rows: (Long, String, Option[Double], String, Option[Int])*): DataFrame =
+      rows.toDF("id", "objectId", "rfscore", "cdsxmatch", "roid")
+    val loaded = frame(
+      (1L, "a", Some(0.92), "C*", Some(1)),
+      (2L, "b", None, null, Some(4)),
+      (3L, null, Some(0.91), "Unknown", Some(2)))
+    val current = frame(
+      (11L, "a", Some(0.95), "C*", Some(3)),
+      (12L, "a", None, "C*", Some(5)),
+      (13L, "b", Some(0.97), null, Some(2)),
+      (14L, null, Some(0.99), "Unknown", Some(0)),
+      (15L, null, None, null, None))
+    def multiset(df: DataFrame): Map[Row, Int] = df.collect().toSeq.groupBy(identity).map { case (r, rs) => r -> rs.size }
+    Seq("objectId OR rfscore", "rfscore OR objectId", "cdsxmatch OR roid OR objectId",
+        "(objectId AND roid) OR cdsxmatch").foreach { exp =>
+      val parsed     = SimilarityExp.parse(exp)
+      val direct     = SimilarityClassifier.join(parsed, List(parsed.ast), loaded, current)
+      val classified = new SimilarityClassifier(SimilarityConfig(exp)).classify(loaded, current)
+      assert(classified.count() == direct.count(), exp)
+      assert(multiset(classified) == multiset(direct), exp)
+      assert(multiset(direct).values.forall(_ == 1) && direct.count() > 1, exp)
+    }
+  }
+
   // ------------------------------------------------------- same-value
 
   test("same-value: clique within batch + join edges vs loaded") {

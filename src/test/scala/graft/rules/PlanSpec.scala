@@ -55,6 +55,14 @@ class PlanSpec extends SparkSpec {
     assertNoNestedLoop("objectId")
   }
 
+  test("multi-disjunct plans union disjoint joins: no dedup aggregate over (id1, id2)") {
+    Seq("objectId OR cdsxmatch", "(objectId AND rfscore) OR cdsxmatch", "cdsxmatch OR roid OR objectId")
+      .foreach { exp =>
+        val p = plan(exp)
+        assert(!p.contains("Aggregate"), s"'$exp' plans an aggregate:\n$p")
+      }
+  }
+
   test("similarity join inputs are pruned to id + referenced leaf columns") {
     // at scale this is the difference between shuffling 2 columns and 16:
     // the scan under the join must read only what the expression references
