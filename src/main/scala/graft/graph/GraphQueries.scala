@@ -67,13 +67,21 @@ object GraphQueries {
   def neighbors(edges: DataFrame, vertexId: Long): DataFrame =
     edges.where(col(EdgeColumns.Src) === vertexId).select(col(EdgeColumns.Dst).as("neighbor"))
 
-  /** Distinct two-hop neighborhood (excluding the start vertex). */
+  /** Distinct two-hop neighborhood: the hop-1 set N plus every vertex one
+    * edge out of N, the start vertex v excluded unless N holds it (a
+    * self-loop).
+    *
+    * Two scans of `edges`: one filtered on `src = v` yields N ∪ {v} (each
+    * out-edge of v gives its `dst` and v), broadcast; one semi-join of the
+    * edges on `src` against it. Rows out of v give N; rows out of the rest
+    * of N give hop 2, where `dst = v` is dropped.
+    */
   def twoHop(edges: DataFrame, vertexId: Long): DataFrame = {
-    val hop1 = neighbors(edges, vertexId)
-    hop1.join(edges, hop1("neighbor") === edges(EdgeColumns.Src))
+    val frontier = edges.where(col(EdgeColumns.Src) === vertexId)
+      .select(explode(array(col(EdgeColumns.Dst), lit(vertexId))).as("_from"))
+    edges.join(broadcast(frontier), col(EdgeColumns.Src) === col("_from"), "left_semi")
+      .where(col(EdgeColumns.Src) === vertexId || col(EdgeColumns.Dst) =!= vertexId)
       .select(col(EdgeColumns.Dst).as("neighbor"))
-      .where(col("neighbor") =!= vertexId)
-      .union(hop1)
       .distinct()
   }
 

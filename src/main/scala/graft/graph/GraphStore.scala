@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.Parquet
 import graft.rules.{EdgeColumns, VertexClassifierRule}
 
 /** Parquet-backed edge store — the engine's system of record for edges,
@@ -83,7 +84,8 @@ class EdgeStore(spark: SparkSession, basePath: String) {
     stored.get("rows").asInstanceOf[Long]
   }
 
-  def read(label: String): DataFrame = spark.read.parquet(s"$basePath/label=$label")
+  /** One label's stored edges (schema from a footer, no Spark job). */
+  def read(label: String): DataFrame = Parquet.read(spark, s"$basePath/label=$label")
 
   /** Bucketed variant: writes the edge set as a bucketed+sorted catalog
     * table on `src`. Joins and aggregations keyed on `src` against this
@@ -264,7 +266,7 @@ class EdgeStore(spark: SparkSession, basePath: String) {
           .select(col("_file")))
         .distinct().collect().map(_.getString(0))
       if (affected.nonEmpty) {
-        val survivors = spark.read.parquet(affected.toSeq: _*)
+        val survivors = Parquet.read(spark, affected.toSeq: _*)
           .join(broadcast(ids), col(EdgeColumns.Src) === col("id"), "left_anti")
           .join(broadcast(ids), col(EdgeColumns.Dst) === col("id"), "left_anti")
         survivors.write.mode(SaveMode.Overwrite).parquet(delScratch(dir).toString)
@@ -297,7 +299,7 @@ class FixedVertexStore(spark: SparkSession, path: String) {
     */
   def load(fixedVertices: DataFrame): Unit = {
     val existing =
-      try spark.read.parquet(path).select("id")
+      try Parquet.read(spark, path).select("id")
       catch { case _: org.apache.spark.sql.AnalysisException => null }
     val toWrite =
       if (existing == null) fixedVertices
@@ -305,5 +307,5 @@ class FixedVertexStore(spark: SparkSession, path: String) {
     toWrite.write.mode(SaveMode.Append).parquet(path)
   }
 
-  def read(): DataFrame = spark.read.parquet(path)
+  def read(): DataFrame = Parquet.read(spark, path)
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.io.PartitionManager
+import graft.io.{Parquet, PartitionManager}
 
 /** Configuration for the id-manager vertex table.
   * Ref: common/.../models/Config.scala (IDManagerConfig / JanusGraphConfig).
@@ -46,7 +46,7 @@ class IdManager(spark: SparkSession, config: IdManagerConfig) {
     */
   def readAll(schema: StructType): DataFrame =
     try {
-      val df = spark.read.parquet(tablePath)
+      val df = Parquet.read(spark, tablePath)
       if (df.schema.fieldNames.contains("id")) df
       else emptyWithId(schema)
     } catch {
@@ -160,7 +160,8 @@ class IdManager(spark: SparkSession, config: IdManagerConfig) {
         else
           log.info(s"id continuation from _last_id sidecar: $sc (scan lower bound $scanned)")
         math.max(sc, scanned)
-      case None => fetchId(readAll(df.schema))
+      // with no range, `loaded` already is the full table
+      case None => fetchId(if (loadedRange.isEmpty) loaded else readAll(df.schema))
     }
     // custom plan-integrated operator (InternalRow zipWithIndex, no
     // Row round trip); ZipWithIndex is the public-API equivalent
@@ -209,7 +210,7 @@ class IdManager(spark: SparkSession, config: IdManagerConfig) {
         val nFiles = math.max(1, (bytes / targetFileBytes).toInt)
         // partition values live in the dir name, not the files — rewrite the
         // leaf dir's row set as-is
-        spark.read.parquet(d).coalesce(nFiles)
+        Parquet.read(spark, d).coalesce(nFiles)
           .write.mode(SaveMode.Overwrite).parquet(graft.io.AtomicSwap.scratch(dir).toString)
         graft.io.AtomicSwap.swapIn(fs, dir, hooks)
       }

@@ -103,17 +103,17 @@ case class ReaderConfig(
 class PartitionedReader(spark: SparkSession, config: ReaderConfig) {
 
   /** Reads only the existing partition dirs of the range; throws
-    * [[NoDataException]] if none exist. Ref: Reader.scala:52-73.
+    * [[NoDataException]] if none exist. A Parquet source is read through
+    * [[Parquet.read]] (footer schema on the driver, no inference job).
+    * Ref: Reader.scala:52-73.
     */
   def read(pm: PartitionManager): DataFrame = {
     val paths = pm.existingPaths(spark, config.basePath)
     if (paths.isEmpty)
       throw NoDataException(s"No data at ${config.basePath} for ${pm.relativePaths.mkString(",")}")
-    spark.read
-      .option("basePath", config.basePath)
-      .options(config.options)
-      .format(config.format.name)
-      .load(paths: _*)
+    val options = Map("basePath" -> config.basePath) ++ config.options
+    if (config.format == DataFormat.Parquet) Parquet.read(spark, options, paths)
+    else spark.read.options(options).format(config.format.name).load(paths: _*)
   }
 
   /** read + [[project]]. Ref: Reader.scala:75-103. */

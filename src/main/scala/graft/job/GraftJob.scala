@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.graph.EdgeStore
 import graft.ids.{IdManager, IdManagerConfig, VertexData}
-import graft.io.{FixedVertexSource, PartitionManager, PartitionedReader, ReaderConfig}
+import graft.io.{FixedVertexSource, Parquet, PartitionManager, PartitionedReader, ReaderConfig}
 import graft.rules._
 
 /** Rule-selection + rule-parameter config.
@@ -150,7 +150,7 @@ class GraftJob(spark: SparkSession, config: GraftConfig) {
     val pm = PartitionManager.forRange(startDate, duration)
     val vertexTable = s"${config.idManager.dataPath}/${config.idManager.tableName}"
     val doomed: DataFrame =
-      try spark.read.parquet(vertexTable).where(pm.partitionPredicate).select(col("id"))
+      try Parquet.read(spark, vertexTable).where(pm.partitionPredicate).select(col("id"))
       catch { case _: org.apache.spark.sql.AnalysisException => return } // nothing ever loaded
 
     buildRules().map(_.getEdgeLabel).distinct.foreach { label =>

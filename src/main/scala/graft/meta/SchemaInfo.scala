@@ -3,6 +3,8 @@ package graft.meta
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 
+import graft.io.Parquet
+
 /** A property key of the graph schema: name + data type.
   * Ref: api/.../service/InfoService.scala:37-103 (PropertyKeyInfo),
   * common/.../models/RequestResponse.scala:3-39.
@@ -25,8 +27,9 @@ case class SchemaInfo(
   * is intentionally out of scope (zero-egress container); this pure
   * function is the API's body, callable from any HTTP frontend.
   *
-  * Scale notes: reads only Parquet *footers* (schema merge off) and
-  * directory names — no data scan.
+  * Scale notes: reads only one Parquet *footer* per store, on the driver
+  * ([[graft.io.Parquet.read]]), and directory names — no data scan and no
+  * Spark job.
   */
 object SchemaInfo {
 
@@ -55,11 +58,11 @@ object SchemaInfo {
       vertexLabel: String = "alert"
   ): SchemaInfo = {
     val vertexProps =
-      try props(spark.read.parquet(vertexTablePath).schema)
+      try props(Parquet.read(spark, vertexTablePath).schema)
       catch { case _: org.apache.spark.sql.AnalysisException => Nil }
     val labels = edgeLabels(spark, edgeBasePath)
     val edgeProps = labels.map { l =>
-      l -> props(spark.read.parquet(s"$edgeBasePath/label=$l").schema)
+      l -> props(Parquet.read(spark, s"$edgeBasePath/label=$l").schema)
     }.toMap
     SchemaInfo(
       vertexLabels = if (vertexProps.isEmpty) Nil else List(vertexLabel),

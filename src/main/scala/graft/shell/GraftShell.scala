@@ -3,6 +3,7 @@ package graft.shell
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.config.ConfigLoader
+import graft.io.Parquet
 import graft.job.{GraftConfig, GraftJob, JobResult}
 import graft.meta.SchemaInfo
 
@@ -30,12 +31,12 @@ final case class GraftShell(spark: SparkSession, config: GraftConfig) {
 
   /** The accumulated id-stamped vertex table (empty-safe). */
   def vertices: DataFrame =
-    try spark.read.parquet(vertexTablePath)
+    try Parquet.read(spark, vertexTablePath)
     catch { case _: org.apache.spark.sql.AnalysisException => spark.emptyDataFrame }
 
   /** One edge label's stored edge set. */
   def edges(label: String): DataFrame =
-    spark.read.parquet(s"${config.edgeBasePath}/label=$label")
+    Parquet.read(spark, s"${config.edgeBasePath}/label=$label")
 
   def edgeLabels: List[String] = SchemaInfo.edgeLabels(spark, config.edgeBasePath)
 

@@ -28,6 +28,59 @@ class GraphQueriesSpec extends SparkSpec {
     assert(GraphQueries.twoHop(bidir, 1L).collect().map(_.getLong(0)).toSet == Set(2L, 3L))
   }
 
+  /** The three-scan two-hop formula twoHop replaced: hop1 ⋈ edges ∪ hop1. */
+  private def twoHopReference(edges: org.apache.spark.sql.DataFrame, v: Long) = {
+    val hop1 = GraphQueries.neighbors(edges, v)
+    hop1.join(edges, hop1("neighbor") === edges("src"))
+      .select(col("dst").as("neighbor"))
+      .where(col("neighbor") =!= v)
+      .union(hop1)
+      .distinct()
+  }
+
+  private def fileScans(df: org.apache.spark.sql.DataFrame): Int = {
+    df.collect()
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+      .size
+  }
+
+  test("twoHop ≡ the three-scan formula: random graphs, self-loops, repeated edges, isolated start") {
+    import spark.implicits._
+    def ids(df: org.apache.spark.sql.DataFrame) = {
+      val got = df.collect().map(_.getLong(0)).toSeq
+      assert(got.distinct.size == got.size, s"duplicates: $got")
+      got.toSet
+    }
+    def check(what: String, pairs: Seq[(Long, Long)], labels: Int, starts: Seq[Long]): Unit = {
+      // the same edge list under several labels, unioned as a store read is
+      val edges = (1 to labels).map(_ => pairs.toDF("src", "dst")).reduce(_ union _)
+      starts.foreach { v =>
+        assert(ids(GraphQueries.twoHop(edges, v)) == ids(twoHopReference(edges, v)), s"$what, v=$v")
+      }
+    }
+    (1 to 4).foreach { seed =>
+      val rnd   = new scala.util.Random(seed)
+      val pairs = Seq.fill(18)((rnd.nextInt(7).toLong, rnd.nextInt(7).toLong)) // loops and repeats
+      check(s"seed $seed", pairs, labels = 1 + seed % 3, starts = 0L to 7L) // 7 has no edges
+    }
+    val hand = Seq(1L -> 1L, 1L -> 2L, 2L -> 2L, 2L -> 3L, 3L -> 1L, 4L -> 4L, 5L -> 1L)
+    check("hand", hand, labels = 2, starts = Seq(1L, 2L, 4L, 5L, 9L))
+    assert(ids(GraphQueries.twoHop(hand.toDF("src", "dst"), 4L)) == Set(4L)) // only neighbor is itself
+    assert(ids(GraphQueries.twoHop(hand.toDF("src", "dst"), 1L)) == Set(1L, 2L, 3L)) // self-loop on v
+    assert(ids(GraphQueries.twoHop(hand.toDF("src", "dst"), 5L)) == Set(1L, 2L)) // loop on a neighbor
+    assert(ids(GraphQueries.twoHop(hand.toDF("src", "dst"), 9L)).isEmpty)
+  }
+
+  test("twoHop over a Parquet edge set scans it twice (the three-scan formula scanned it three times)") {
+    import spark.implicits._
+    val dir = tempDir("twohop-scans") + "/edges"
+    Seq((1L, 2L), (2L, 3L), (2L, 1L), (3L, 4L)).toDF("src", "dst").write.parquet(dir)
+    val edges = spark.read.parquet(dir)
+    assert(fileScans(GraphQueries.twoHop(edges, 1L)) == 2)
+    assert(fileScans(twoHopReference(edges, 1L)) == 3)
+  }
+
   test("connected components: chain is one component, isolated vertex is its own") {
     import spark.implicits._
     val vertices = Seq(1L, 2L, 3L, 4L).toDF("id")

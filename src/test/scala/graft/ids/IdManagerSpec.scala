@@ -148,6 +148,24 @@ class IdManagerSpec extends SparkSpec {
     assert(mgr.readMaxIdSidecar().contains(7L))
   }
 
+  test("no sidecar, no range: ids continue from the loaded table, as the full-table scan gave") {
+    import spark.implicits._
+    val dir = tempDir("idm-no-sidecar")
+    val mgr = new IdManager(spark, IdManagerConfig(dir, "t", reservedIdSpace = 10))
+    val fs  = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val sidecar = new org.apache.hadoop.fs.Path(s"$dir/t/_last_id")
+    // first day: no table, no sidecar
+    val r1 = mgr.process(alerts(3).toDF().drop("id"))
+    assert(r1.current.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(11L, 12L, 13L))
+    assert(mgr.readMaxIdSidecar().contains(13L))
+    // a later day whose sidecar is gone: the max comes from the loaded frame
+    fs.delete(sidecar, false)
+    val r2 = mgr.process(alerts(2).toDF().drop("id").withColumn("day", lit(2)))
+    assert(r2.current.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(14L, 15L))
+    assert(r2.loaded.count() == 3 && r2.currentCount == 2)
+    assert(mgr.readMaxIdSidecar().contains(15L))
+  }
+
   test("deletePartitions drops matching partition dirs") {
     import spark.implicits._
     val dir = tempDir("idm3")

@@ -217,6 +217,87 @@ class FormatsAndStoresSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"), plan)
   }
 
+  /** The stores one load writes: a vertex table partitioned by
+    * `year/month/day`, three edge labels whose `propVal` is int, string and
+    * double, and raw alert input under zero-padded `month=02` dirs.
+    */
+  private def stores(): (String, graft.ids.IdManager, String, String) = {
+    import spark.implicits._
+    import graft.Alert
+    val base = tempDir("parquet-stores")
+    def alert(i: Int) = Alert.gen(i.toLong, s"obj$i", 0.1 * i, 0.1, i, 0.5f, "Unknown", Some("ML"), None)
+    val raw = Seq(alert(1), alert(2), alert(3)).toDF().drop("id", "year", "month", "day")
+    raw.write.parquet(s"$base/raw/year=2019/month=02/day=01")
+    raw.write.parquet(s"$base/raw/year=2019/month=02/day=02")
+    val mgr = new graft.ids.IdManager(spark, graft.ids.IdManagerConfig(s"$base/vertices", "t"))
+    mgr.process(Seq(alert(1), alert(2)).toDF().drop("id"))
+    mgr.process(Seq(alert(3)).toDF().drop("id").withColumn("day", lit(2)))
+    val edges = new EdgeStore(spark, s"$base/edges")
+    edges.write(Seq((1L, 2L, 1)).toDF(EdgeColumns.all: _*), "similarity", bidirectional = true)
+    edges.write(Seq((1L, 3L, "obj1")).toDF(EdgeColumns.all: _*), "exactmatch")
+    edges.write(Seq((2L, 3L, 0.5)).toDF(EdgeColumns.all: _*), "satr")
+    (base, mgr, s"$base/vertices/t", s"$base/edges")
+  }
+
+  test("Parquet.read: footer schemas equal Spark's inferred schemas for every store shape") {
+    val (base, _, vertexTable, edgeBase) = stores()
+    def same(what: String, paths: String*): Unit = {
+      val mine = Parquet.read(spark, paths: _*).schema
+      assert(mine == spark.read.parquet(paths: _*).schema, s"$what: $mine")
+    }
+    same("vertex table", vertexTable)
+    assert(Parquet.read(spark, vertexTable).columns.takeRight(3).toSeq == Seq("year", "month", "day"))
+    Map("similarity" -> "int", "exactmatch" -> "string", "satr" -> "double").foreach { case (l, t) =>
+      same(l, s"$edgeBase/label=$l")
+      assert(Parquet.read(spark, s"$edgeBase/label=$l").schema(EdgeColumns.PropVal).dataType.simpleString == t, l)
+    }
+    same("raw input, padded dirs", s"$base/raw")
+    val pm = PartitionManager(LocalDate.of(2019, 2, 1), 2)
+    val paths = pm.existingPaths(spark, s"$base/raw")
+    assert(paths.size == 2 && paths.forall(_.contains("month=02")))
+    assert(new PartitionedReader(spark, ReaderConfig(s"$base/raw")).read(pm).schema ==
+      spark.read.option("basePath", s"$base/raw").parquet(paths: _*).schema)
+    val files = new java.io.File(s"$edgeBase/label=similarity").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSeq
+    assert(files.nonEmpty)
+    same("file list", files: _*)
+    // no data file: Spark's inference, and its AnalysisException
+    intercept[org.apache.spark.sql.AnalysisException](Parquet.read(spark, s"$base/no_such_dir"))
+    new java.io.File(s"$base/empty/_SUCCESS").getParentFile.mkdirs()
+    new java.io.File(s"$base/empty/_SUCCESS").createNewFile()
+    intercept[org.apache.spark.sql.AnalysisException](Parquet.read(spark, s"$base/empty"))
+    // files of two schemas: the first file's wins, as in Spark's inference;
+    // merging them needs every footer and is left to Spark, by option or conf
+    import spark.implicits._
+    val evolving = s"$base/evolving"
+    Seq((1L, "a")).toDF("id", "v").write.parquet(s"$evolving/day=1")
+    Seq((2L, "b", 0.9)).toDF("id", "v", "quality").write.parquet(s"$evolving/day=2")
+    same("two schemas", evolving)
+    assert(!Parquet.read(spark, evolving).columns.contains("quality"))
+    assert(Parquet.read(spark, Map("mergeSchema" -> "true"), Seq(evolving)).columns.contains("quality"))
+    val key = "spark.sql.parquet.mergeSchema"
+    spark.conf.set(key, "true")
+    try assert(Parquet.read(spark, evolving).columns.contains("quality"))
+    finally spark.conf.unset(key)
+  }
+
+  test("no store read starts a Spark job: building a read and taking its schema is driver-only") {
+    val (base, mgr, vertexTable, edgeBase) = stores()
+    val edges  = new EdgeStore(spark, edgeBase)
+    val reader = new PartitionedReader(spark, ReaderConfig(s"$base/raw"))
+    val reads = Map[String, () => Any](
+      "EdgeStore.read"        -> (() => Seq("similarity", "exactmatch", "satr").map(edges.read(_).schema)),
+      "IdManager.readAll"     -> (() => mgr.readAll(new org.apache.spark.sql.types.StructType()).schema),
+      "PartitionedReader.read" -> (() => reader.read(PartitionManager(LocalDate.of(2019, 2, 1), 2)).schema),
+      "SchemaInfo.describe"   -> (() => graft.meta.SchemaInfo.describe(spark, vertexTable, edgeBase)))
+    val started = reads.map { case (what, read) =>
+      what -> org.apache.spark.graft.TestSparkInternals.jobsStarted(spark.sparkContext)(read())
+    }
+    assert(started.values.forall(_.isEmpty), started.collect {
+      case (what, jobs) if jobs.nonEmpty => s"$what started ${jobs.size} Spark job(s): ${jobs.mkString(", ")}"
+    }.mkString("; "))
+  }
+
   /** The reference's literal theta-join: the whole expression as one disjunct. */
   private def literalThetaJoin(exp: String, loaded: org.apache.spark.sql.DataFrame,
                                df: org.apache.spark.sql.DataFrame) = {
