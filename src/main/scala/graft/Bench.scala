@@ -198,7 +198,7 @@ object Bench {
     }
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus  = Host.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

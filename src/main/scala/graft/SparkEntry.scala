@@ -710,7 +710,7 @@ object SparkEntry {
         .groupBy(col("r_name"))
         .agg(count(lit(1)).as("n_customers"))),
 
-    // A1: global max — the IdManager.fetchId aggregation
+    // A1: global max — the reference's fetchId aggregation
     "q05_max_id" -> ((s, dir) =>
       T(s, dir, "orders").agg(max(col("o_orderkey")).as("max_id"))),
 

@@ -44,7 +44,9 @@ class EdgeStore(spark: SparkSession, basePath: String) {
   }
 
   /** Writes one rule's edge set, partitioned by edge label, and returns the
-    * number of rows stored (2× the edge count when `bidirectional`).
+    * number of rows stored (2× the edge count when `bidirectional`). `dir`
+    * overrides the label's live dir: the load job writes into a run's
+    * staging dir ([[graft.io.RunLog]]).
     *
     * Bidirectionality: the reference writes each edge twice (forward +
     * reverse, EdgeProcessor.scala:108-138) because JanusGraph adjacency is
@@ -71,7 +73,8 @@ class EdgeStore(spark: SparkSession, basePath: String) {
       edges: DataFrame,
       label: String,
       bidirectional: Boolean = false,
-      mode: SaveMode = SaveMode.Append
+      mode: SaveMode = SaveMode.Append,
+      dir: Option[String] = None
   ): Long = {
     val stored = Observation()
     oriented(edges, label, bidirectional)
@@ -80,9 +83,22 @@ class EdgeStore(spark: SparkSession, basePath: String) {
       .observe(stored, count(lit(1)).as("rows"))
       .write
       .mode(mode)
-      .parquet(s"$basePath/label=$label")
+      .parquet(dir.getOrElse(s"$basePath/label=$label"))
     stored.get("rows").asInstanceOf[Long]
   }
+
+  /** Writes the rows of `files` (edge files of one label) that have no
+    * endpoint in `[lo, hi]` to `dir`, each output file sorted by `src`:
+    * the edge side of deleting one load run's vertex interval
+    * ([[graft.io.RunLog.deleteRun]]). A filter on the id columns, which
+    * Parquet's row-group statistics can skip on `src`-sorted files: no
+    * join, no broadcast and no collect.
+    */
+  def writeWithout(files: Seq[String], lo: Long, hi: Long, dir: String): Unit =
+    Parquet.read(spark, files: _*)
+      .where(!(col(EdgeColumns.Src).between(lo, hi) || col(EdgeColumns.Dst).between(lo, hi)))
+      .sortWithinPartitions(col(EdgeColumns.Src))
+      .write.parquet(dir)
 
   /** One label's stored edges (schema from a footer, no Spark job). */
   def read(label: String): DataFrame = Parquet.read(spark, s"$basePath/label=$label")

@@ -1,10 +1,10 @@
 package graft.ids
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.io.{Parquet, PartitionManager}
+import graft.io.{Parquet, PartitionManager, RunLog}
 
 /** Configuration for the id-manager vertex table.
   * Ref: common/.../models/Config.scala (IDManagerConfig / JanusGraphConfig).
@@ -17,7 +17,7 @@ import graft.io.{Parquet, PartitionManager}
 case class IdManagerConfig(dataPath: String, tableName: String, reservedIdSpace: Long = 200)
 
 /** Loaded + current vertex data after id assignment; `currentCount` is the
-  * number of rows in `current`, counted once for the id sidecar.
+  * number of rows in `current`, counted as they were written.
   * Ref: core/.../services/IDManagerSparkService.scala (VertexData).
   */
 case class VertexData(loaded: DataFrame, current: DataFrame, currentCount: Long)
@@ -27,16 +27,14 @@ case class VertexData(loaded: DataFrame, current: DataFrame, currentCount: Long)
   *
   * Ref: core/.../services/IDManagerSparkService.scala:85-141.
   *
-  * Scale notes: `fetchID` is a single `max(id)` aggregation — partial
-  * (map-side) max per partition then one scalar to the driver; the only
-  * driver-side collect in the pipeline. The reference re-reads the full
-  * history each run and acknowledges the cost
+  * Scale notes: the reference's `fetchID` is a `max(id)` scan of the
+  * whole table per run; here the last id is the largest `hi` of the run
+  * log ([[graft.io.RunLog]]), read on the driver. The reference also
+  * re-reads the full history each run and acknowledges the cost
   * (IDManagerSparkService.scala:135 TODO); at 100 TB restrict the loaded
   * side with partition predicates via `readRange` instead.
   */
 class IdManager(spark: SparkSession, config: IdManagerConfig) {
-
-  private val log = org.slf4j.LoggerFactory.getLogger(classOf[IdManager])
 
   private def tablePath: String = s"${config.dataPath}/${config.tableName}"
 
@@ -72,114 +70,52 @@ class IdManager(spark: SparkSession, config: IdManagerConfig) {
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], withId)
   }
 
-  /** Last used id: `max(id)` over the table, or `reservedIdSpace` when the
-    * table is empty. Ref: IDManagerSparkService.scala:132-141 (fetchID).
-    */
-  def fetchId(loaded: DataFrame): Long = {
-    val row = loaded.agg(max(col("id"))).head()
-    if (row.isNullAt(0)) config.reservedIdSpace else row.getLong(0)
-  }
-
-  // ---- max-id sidecar -----------------------------------------------------
-  // `fetchId` is a partial-max over a single column, but it still scans the
-  // id column of EVERY file in the table — O(history) work per run on an
-  // append-only table that only grows. The sidecar persists the last
-  // assigned id in a tiny `_last_id` file next to the data (underscore
-  // prefix: invisible to partition/file discovery), so the steady-state run
-  // does zero table reads for id continuation. It is written BEFORE each
-  // append: a crash between the two leaves an id GAP (harmless — ids stay
-  // unique and dense per batch), never a reuse. Absent / unreadable /
-  // implausible sidecars fall back to the full scan, and out-of-band writers
-  // can simply delete the file to force re-derivation.
-
-  private def hadoopFs(p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def sidecarPath = new org.apache.hadoop.fs.Path(s"$tablePath/_last_id")
-
-  /** The sidecar's recorded last-assigned id, if present and plausible. */
-  def readMaxIdSidecar(): Option[Long] =
-    try {
-      val fs = hadoopFs(sidecarPath)
-      if (!fs.exists(sidecarPath)) None
-      else {
-        val in = fs.open(sidecarPath)
-        val s  = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-                 finally in.close()
-        Some(s.toLong).filter(_ >= config.reservedIdSpace)
-      }
-    } catch { case _: Exception => None } // corrupt/unreadable → scan fallback
-
-  private def writeMaxIdSidecar(maxId: Long): Unit = {
-    val fs  = hadoopFs(sidecarPath)
-    val tmp = new org.apache.hadoop.fs.Path(s"$tablePath/._last_id.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(maxId.toString.getBytes("UTF-8")) finally out.close()
-    // delete-then-rename: a crash in the window leaves NO sidecar, which is
-    // the safe state (next run re-derives the max from the table)
-    if (fs.exists(sidecarPath)) fs.delete(sidecarPath, false)
-    fs.rename(tmp, sidecarPath)
-  }
-
-  /** Id-stamps the current batch (continuing from the table's max id),
-    * appends it to the vertex table partitioned by year/month/day, and
-    * returns (loaded, current-with-ids, its row count).
+  /** Id-stamps the current batch with ids `lastId + 1 ..` and writes it,
+    * partitioned by year/month/day, to `dir` (a run's staging dir, see
+    * [[graft.io.RunLog]]); returns (loaded, current-with-ids, its row count).
     * Ref: IDManagerSparkService.scala:102-130 (process).
     *
     * `loadedRange` restricts the returned loaded side to a date range via
-    * [[readRange]] — the incremental-ingest scale path. The max-id fetch
-    * always runs over the FULL table (ids grow with load order, not event
-    * date — a range-restricted max would re-issue ids), but that is a
-    * single-column aggregate; the expensive part at scale is the full-width
-    * loaded frame feeding every edge-rule join, and that is what the range
-    * prunes.
+    * [[readRange]] — the incremental-ingest scale path: the full-width
+    * loaded frame feeds every edge-rule join, and that is what the range
+    * prunes. The last id comes from the run log, so no run scans the table
+    * for it. The batch is counted as it is written (an [[Observation]] on
+    * the frame the write consumes, above the sort the partitioned write
+    * needs, as [[graft.graph.EdgeStore.write]] does): assigning, counting
+    * and storing the ids are one Spark execution.
     */
-  def process(df: DataFrame, loadedRange: Option[PartitionManager] = None): VertexData = {
+  def stage(df: DataFrame, loadedRange: Option[PartitionManager], lastId: Long, dir: String): VertexData = {
     val loaded = loadedRange.fold(readAll(df.schema))(readRange(df.schema, _))
-    // Steady state reads the sidecar, not the table (see readMaxIdSidecar) —
-    // but never trusts it alone: an out-of-band writer that appended higher
-    // ids would leave the sidecar stale LOW, and reusing ids is the one
-    // unrecoverable failure. `max(id)` over the loaded frame is an
-    // independent lower bound on the true max (over the full table when no
-    // range is given, over the pruned range otherwise — both already being
-    // scanned for the join, so the extra single-column partial max is
-    // marginal). A sidecar below that bound is stale: degrade loudly and use
-    // the scan. The bound is RANGE-LOCAL when a loadedRange is given: an
-    // out-of-band writer that appended higher ids only in partitions
-    // OUTSIDE the pruned range still evades it. Ids grow with load order
-    // (new batches land in the latest partitions), so a higher max outside
-    // the loaded range implies time-travel by the foreign writer —
-    // accepted residual risk; widen the range (or pass none) to re-derive
-    // from the full table when auditing after an out-of-band write.
-    val lastMax = readMaxIdSidecar() match {
-      case Some(sc) =>
-        val scanned = fetchId(loaded)
-        if (sc < scanned)
-          log.warn(s"_last_id sidecar ($sc) is below max(id) of the loaded range ($scanned) — " +
-            "stale sidecar (out-of-band writer?); using the scanned max")
-        else
-          log.info(s"id continuation from _last_id sidecar: $sc (scan lower bound $scanned)")
-        math.max(sc, scanned)
-      // with no range, `loaded` already is the full table
-      case None => fetchId(if (loadedRange.isEmpty) loaded else readAll(df.schema))
-    }
     // custom plan-integrated operator (InternalRow zipWithIndex, no
     // Row round trip); ZipWithIndex is the public-API equivalent
-    val dfWithId = org.apache.spark.sql.graft.DenseId.assign(df, lastMax)
-    // tracked, not bare-cached: the id-stamped batch feeds the sidecar
-    // count, the append, and every rule's classify — all inside one load —
-    // then must not outlive the load in a long session (GraftJob.load
-    // releases it; Caches.clear() does for other callers)
+    val dfWithId = org.apache.spark.sql.graft.DenseId.assign(df, lastId)
+    // tracked, not bare-cached: the id-stamped batch feeds the write and
+    // every rule's classify — all inside one load — then must not outlive
+    // the load in a long session (GraftJob.load releases it;
+    // Caches.clear() does for other callers)
     graft.Caches.track(dfWithId)
-    val n = dfWithId.count()
-    // advance the sidecar BEFORE appending (crash ⇒ gap, never reuse)
-    writeMaxIdSidecar(lastMax + n)
-    dfWithId.write
+    val rows = Observation()
+    dfWithId
+      .sortWithinPartitions("year", "month", "day")
+      .observe(rows, count(lit(1)).as("rows"))
+      .write
       .format("parquet")
-      .mode(SaveMode.Append)
       .partitionBy("year", "month", "day")
-      .save(tablePath)
-    VertexData(loaded, dfWithId, n)
+      .save(dir)
+    VertexData(loaded, dfWithId, rows.get("rows").asInstanceOf[Long])
+  }
+
+  /** One vertex-only load run through the table's run log: [[stage]], then
+    * commit and publish (see [[graft.io.RunLog]]), ids continuing from the
+    * last one the log recorded.
+    */
+  def process(df: DataFrame, loadedRange: Option[PartitionManager] = None): VertexData = {
+    val runLog = new RunLog(spark, config, edgeBasePath = None)
+    val st     = runLog.recover()
+    val seq    = st.seq + 1
+    val vertexData = stage(df, loadedRange, st.hi, runLog.stageDir(RunLog.Vertices, seq).toString)
+    runLog.commitLoad(seq, None, st.hi, vertexData.currentCount, Map.empty)
+    vertexData
   }
 
   /** Rewrites the date range's partition directories into size-targeted

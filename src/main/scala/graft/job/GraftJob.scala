@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.graph.EdgeStore
-import graft.ids.{IdManager, IdManagerConfig, VertexData}
-import graft.io.{FixedVertexSource, Parquet, PartitionManager, PartitionedReader, ReaderConfig}
+import graft.ids.{IdManager, IdManagerConfig}
+import graft.io.{FixedVertexSource, Parquet, PartitionManager, PartitionedReader, ReaderConfig, RunLog}
 import graft.rules._
 
 /** Rule-selection + rule-parameter config.
@@ -49,15 +49,21 @@ case class JobResult(vertexCount: Long, edgeCounts: Map[String, Long])
   * docs/LoadAlgorithm.md:119-158); schema pre-creation (SchemaLoader)
   * becomes implicit Parquet schema-on-write + [[graft.meta.SchemaInfo]].
   *
-  * Scale notes: the only driver-side values are the max-id scalar and the
-  * per-rule edge counts; everything else stays distributed. Edge writes are
+  * Every load, delete and compaction goes through the stores' run log
+  * ([[RunLog]]): a load run is staged, committed by one entry and then
+  * published, so re-running a range and crashing at any point are safe.
+  * `hooks` are crash-injection points for specs.
+  *
+  * Scale notes: the only driver-side values are the per-run counts and the
+  * log; everything else stays distributed. Edge writes are
   * hash-distributed on `src` (EdgeStore) exactly like the reference's
   * writer partitioning (EdgeProcessor.scala:170-180).
   */
-class GraftJob(spark: SparkSession, config: GraftConfig) {
+class GraftJob(spark: SparkSession, config: GraftConfig, hooks: RunLog.Hooks = RunLog.NoHooks) {
 
   private val edgeStore = new EdgeStore(spark, config.edgeBasePath)
   private val idManager = new IdManager(spark, config.idManager)
+  private val runLog    = new RunLog(spark, config.idManager, Some(config.edgeBasePath), hooks)
 
   /** Builds the configured classifier rules.
     * Ref: Job.scala:106-113 (rulesMap) incl. the spelling quirk.
@@ -84,8 +90,12 @@ class GraftJob(spark: SparkSession, config: GraftConfig) {
     }
 
   /** One incremental load run over `[startDate, startDate + duration)`:
-    * [[PartitionedReader.readAndProcess]] then [[load]].
-    * Ref: Job.scala:71-115 (process).
+    * [[PartitionedReader.readAndProcess]] then [[load]], with the range as
+    * the run's id. Ref: Job.scala:71-115 (process).
+    *
+    * Re-running a committed range is a no-op that returns the run's
+    * recorded [[JobResult]]; a range that overlaps a committed run without
+    * equalling it fails fast and names the run (delete it first).
     *
     * `config.loadedDays` restricts the loaded side of the edge-rule joins to
     * the `loadedDays` days ending at `startDate + duration` (exclusive) via
@@ -100,64 +110,106 @@ class GraftJob(spark: SparkSession, config: GraftConfig) {
     val loadedRange = config.loadedDays.map { days =>
       PartitionManager(pm.startDate.plusDays(duration.toLong - days), days)
     }
-    load(new PartitionedReader(spark, config.reader).readAndProcess(pm), loadedRange)
+    load(new PartitionedReader(spark, config.reader).readAndProcess(pm), loadedRange, Some(RunLog.rangeId(pm)))
   }
 
-  /** Loads one projected batch: id-stamps and appends it
-    * ([[IdManager.process]], loaded side restricted to `loadedRange`), then
-    * runs every configured rule over (loaded, batch) and appends its edges.
-    * The one load path of both [[process]] and
+  /** Loads one projected batch as one run of the log: id-stamps it
+    * ([[IdManager.stage]], ids continuing from the log, loaded side
+    * restricted to `loadedRange`), runs every configured rule over
+    * (loaded, batch), writing vertices and edges to the run's staging
+    * dirs, then commits the run with one log entry and publishes it. The
+    * one load path of both [[process]] and
     * [[graft.streaming.StreamingIngest]].
     *
-    * Per-run counts, matching the reference (EdgeProcessor.scala:166): each
-    * rule's edges are classified, counted and stored in one Spark execution
-    * ([[EdgeStore.write]] counts the rows it stores), the vertex count is the
-    * one [[IdManager.process]] already took, and the accumulated store —
-    * which grows without bound — is never re-read in the hot path. The
-    * id-stamped batch, the one frame the rules share, is released at the
-    * end: it feeds nothing after the load.
+    * `runId` names the run ([[RunLog.rangeId]], [[RunLog.streamId]]): a run
+    * already committed under it is not loaded again and its recorded
+    * counts are returned. A run that crashes before its commit leaves no
+    * trace once the next call recovers the log; one that crashes after it
+    * is published by that call.
+    *
+    * Per-run counts, matching the reference (EdgeProcessor.scala:166): the
+    * batch and each rule's edges are counted as they are written (an
+    * Observation on each write), so id-stamping is one Spark execution and
+    * each rule one more, and the accumulated store — which grows without
+    * bound — is never re-read in the hot path. The id-stamped batch, the
+    * one frame the rules share, is released at the end: it feeds nothing
+    * after the load.
     */
-  def load(batch: DataFrame, loadedRange: Option[PartitionManager]): JobResult = {
-    val vertexData: VertexData = idManager.process(batch, loadedRange)
-    try {
-      val edgeCounts = buildRules().map { rule =>
-        val edges = rule.classify(vertexData.loaded, vertexData.current)
-        rule.getEdgeLabel -> edgeStore.write(edges, rule.getEdgeLabel, bidirectional = config.bidirectionalEdges)
-      }.toMap
-      JobResult(vertexData.currentCount, edgeCounts)
-    } finally vertexData.current.unpersist()
+  def load(batch: DataFrame, loadedRange: Option[PartitionManager], runId: Option[String] = None): JobResult = {
+    val st = runLog.recover()
+    runId.flatMap(st.committed) match {
+      case Some(run) => JobResult(run.vertexCount, run.counts)
+      case None =>
+        runId.flatMap(RunLog.rangeOf).foreach(st.requireNoOverlap)
+        val seq = st.seq + 1
+        val vertexData = idManager.stage(batch, loadedRange, st.hi, runLog.stageDir(RunLog.Vertices, seq).toString)
+        try {
+          hooks.afterVertexWrite()
+          val edgeCounts = buildRules().map { rule =>
+            val label = rule.getEdgeLabel
+            val n = edgeStore.write(rule.classify(vertexData.loaded, vertexData.current), label,
+              bidirectional = config.bidirectionalEdges,
+              dir = Some(s"${runLog.stageDir(RunLog.Edges, seq)}/label=$label"))
+            hooks.afterRule(label)
+            label -> n
+          }.toMap
+          runLog.commitLoad(seq, runId, st.hi, vertexData.currentCount, edgeCounts)
+          JobResult(vertexData.currentCount, edgeCounts)
+        } finally vertexData.current.unpersist()
+    }
   }
 
   /** Maintenance mode: compacts the date range's vertex partitions and
     * every configured rule's edge label (see [[IdManager.compactPartitions]]
     * / [[EdgeStore.compact]] for why append-only stores need this at scale).
+    * The rewrite replaces the files the run log lists, so it first marks
+    * every run as merged: a later delete of one of them takes the full
+    * path of [[delete]].
     */
   def compact(startDate: String, duration: Int, targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
     val pm = PartitionManager.forRange(startDate, duration)
+    val st = runLog.recover()
+    runLog.markMerged(st, st.runs.headOption.map(_._1))
     idManager.compactPartitions(pm, targetFileBytes)
     if (config.rules.rulesToApply.nonEmpty)
       buildRules().map(_.getEdgeLabel).distinct.foreach(edgeStore.compact(_, targetFileBytes))
   }
 
   /** Delete mode: removes the date range's vertices and their incident
-    * edges, in either partition-dir spelling. Ref: Job.scala:117-134;
-    * edge cleanup is the relational analogue of per-vertex `remove()` and
-    * uses the file-restricted rewrite ([[EdgeStore.deleteForVerticesRestricted]])
-    * — a day's deletion rewrites only the files holding incident edges,
-    * not the whole accumulated store.
+    * edges, in either partition-dir spelling. Ref: Job.scala:117-134.
+    *
+    * A range that is exactly one committed run is deleted through the run
+    * log ([[RunLog.deleteRun]]): the latest run's files are unlinked with
+    * no Spark job, and an older run's deletion also rewrites the later
+    * runs' edge files by id interval. Anything else — part of a run, a
+    * day spanning several runs, a run whose files a compaction merged, or
+    * `clearOnDelete = false` — takes the full path: it marks the runs
+    * from the earliest affected one as merged, then rewrites only the
+    * edge files holding incident edges
+    * ([[EdgeStore.deleteForVerticesRestricted]], the relational analogue
+    * of per-vertex `remove()`) and drops the range's vertex partitions.
+    * Without `clearOnDelete` the vertices stay, and so does their run:
+    * re-processing the range is then a no-op.
     */
   def delete(startDate: String, duration: Int, clearOnDelete: Boolean): Unit = {
     val pm = PartitionManager.forRange(startDate, duration)
-    val vertexTable = s"${config.idManager.dataPath}/${config.idManager.tableName}"
-    val doomed: DataFrame =
-      try Parquet.read(spark, vertexTable).where(pm.partitionPredicate).select(col("id"))
-      catch { case _: org.apache.spark.sql.AnalysisException => return } // nothing ever loaded
+    val st = runLog.recover()
+    if (!(clearOnDelete && runLog.deleteRun(st, pm)(edgeStore.writeWithout))) {
+      val vertexTable = s"${config.idManager.dataPath}/${config.idManager.tableName}"
+      val doomed: DataFrame =
+        try Parquet.read(spark, vertexTable).where(pm.partitionPredicate).select(col("id"))
+        catch { case _: org.apache.spark.sql.AnalysisException => return } // nothing ever loaded
 
-    buildRules().map(_.getEdgeLabel).distinct.foreach { label =>
-      try edgeStore.deleteForVerticesRestricted(label, doomed)
-      catch { case _: org.apache.spark.sql.AnalysisException => () } // label never written
+      runLog.markMerged(st, runLog.earliestIn(st, pm))
+      buildRules().map(_.getEdgeLabel).distinct.foreach { label =>
+        try edgeStore.deleteForVerticesRestricted(label, doomed)
+        catch { case _: org.apache.spark.sql.AnalysisException => () } // label never written
+      }
+      if (clearOnDelete) {
+        idManager.deletePartitions(pm)
+        runLog.commitDeletedDays(runLog.state(), pm)
+      }
     }
-    if (clearOnDelete) idManager.deletePartitions(pm)
   }
 }
 
@@ -198,7 +250,7 @@ object Main {
     }
     val opts = pairs.toMap ++ args.filter(bareFlags.contains).map(_ -> "true").toMap
     val preexisting = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).isDefined
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+    val cpus = graft.Host.cpus
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .config("spark.sql.shuffle.partitions", cpus)

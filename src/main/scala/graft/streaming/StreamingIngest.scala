@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.io.PartitionedReader
+import graft.io.{PartitionedReader, RunLog}
 import graft.job.{GraftConfig, GraftJob}
 
 /** Structured-Streaming front-end for the incremental load pipeline.
@@ -19,21 +19,34 @@ import graft.job.{GraftConfig, GraftJob}
   * that [[graft.job.GraftJob.process]] runs after its partition-pruned read,
   * with one system of record. A micro-batch joins against full history.
   *
+  * Exactly once per `batchId`: `foreachBatch` is at-least-once (a batch
+  * whose sink commit did not reach the checkpoint is delivered again after
+  * a restart), so each micro-batch is one run of the stores' run log
+  * ([[graft.io.RunLog]]), its id the query's id — kept in the checkpoint,
+  * so it survives restarts — plus the `batchId`. A re-delivered batch whose
+  * run committed is a no-op; one that crashed before its commit left no
+  * trace and is loaded again.
+  *
   * Scale notes: `foreachBatch` (not a streaming sink per rule) because the
   * pipeline needs multi-output fan-out (vertex table + one edge table per
   * rule) and the id assignment is inherently sequential-per-batch — the
-  * max-id scalar is the only cross-batch state, carried by the vertex
-  * table itself, which also makes the query restart-safe (ids continue
-  * from the stored max after checkpoint recovery).
+  * last id is the only cross-batch state, carried by the run log, which
+  * also makes the query restart-safe.
   */
-class StreamingIngest(spark: SparkSession, config: GraftConfig) {
+class StreamingIngest(spark: SparkSession, config: GraftConfig, hooks: RunLog.Hooks = RunLog.NoHooks) {
 
   private val reader = new PartitionedReader(spark, config.reader)
-  private val job    = new GraftJob(spark, config)
+  private val job    = new GraftJob(spark, config, hooks)
 
-  /** Runs one micro-batch through the load pipeline. */
+  /** Runs one micro-batch through the load pipeline, as the run
+    * [[RunLog.streamId]] of the query running it (an anonymous run when
+    * called outside a streaming query).
+    */
   def ingestBatch(batch: DataFrame, batchId: Long): Unit =
-    if (!batch.isEmpty) job.load(reader.project(batch), loadedRange = None)
+    if (!batch.isEmpty) {
+      val query = Option(spark.sparkContext.getLocalProperty(StreamingIngest.QueryIdKey))
+      job.load(reader.project(batch), loadedRange = None, runId = query.map(RunLog.streamId(_, batchId)))
+    }
 
   /** Starts the streaming ingest over the reader base path (file source —
     * new alert files are discovered per trigger).
@@ -50,6 +63,14 @@ class StreamingIngest(spark: SparkSession, config: GraftConfig) {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .start()
+}
+
+object StreamingIngest {
+
+  /** The local property Spark sets to the running query's id on the thread
+    * that runs its micro-batches (`StreamExecution.QUERY_ID_KEY`).
+    */
+  val QueryIdKey = "sql.streaming.queryId"
 }
 
 /** Watermarked event-time operators over a streaming events table —

@@ -12,8 +12,8 @@ object HitsProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[${graft.Host.cpus}]")
+      .config("spark.sql.shuffle.partitions", graft.Host.cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

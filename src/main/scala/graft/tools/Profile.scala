@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * (guide §1.1/§7.1; the UI is disabled in the bench harness).
   *
   * Usage: runMain graft.tools.Profile <sfDir> <queryName> [queryName ...]
-  * Env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_PROFILE_RUNS (default 2 —
+  * Env: SPARK_GRAFT_CPUS (default: the host's processors), SPARK_GRAFT_PROFILE_RUNS (default 2 —
   * run 1 pays codegen, run 2 is reported; stages of earlier runs are
   * discarded between runs).
   */
@@ -48,7 +48,7 @@ object Profile {
     if (!sys.props.contains("graft.mode")) System.setProperty("graft.mode", "bench")
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.tail.toSeq
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus  = graft.Host.cpus
     val runs  = sys.env.getOrElse("SPARK_GRAFT_PROFILE_RUNS", "2").toInt.max(1)
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")

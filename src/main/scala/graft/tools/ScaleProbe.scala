@@ -63,8 +63,8 @@ object ScaleGen {
     val sf01 = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out  = args.lift(1).getOrElse("scale_probe/sf1.0")
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[${graft.Host.cpus}]")
+      .config("spark.sql.shuffle.partitions", graft.Host.cpus)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -168,8 +168,8 @@ object ScaleProbe {
     val runsPerScale = sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "2").toInt
     require(runsPerScale >= 1, s"SPARK_GRAFT_PROBE_RUNS must be >= 1, got $runsPerScale")
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[${graft.Host.cpus}]")
+      .config("spark.sql.shuffle.partitions", graft.Host.cpus)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -17,7 +17,7 @@ object TimeQuery {
     sys.env.get("SPARK_GRAFT_MODE").foreach(System.setProperty("graft.mode", _))
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = args.tail.toSeq
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus  = graft.Host.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

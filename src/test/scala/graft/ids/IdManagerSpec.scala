@@ -1,5 +1,6 @@
 package graft.ids
 
+import org.apache.spark.graft.TestSparkInternals.jobsStarted
 import org.apache.spark.sql.functions._
 
 import graft.{Alert, SparkSpec}
@@ -30,13 +31,18 @@ class IdManagerSpec extends SparkSpec {
     assert(withIds.columns.count(_ == "id") == 1)
   }
 
-  test("fetchId returns reservedIdSpace for an empty table") {
+  test("empty store: first ids follow reservedIdSpace, no table read") {
     import spark.implicits._
-    val mgr = new IdManager(spark, IdManagerConfig(tempDir("idm"), "t", reservedIdSpace = 200))
+    val dir = tempDir("idm")
+    val mgr = new IdManager(spark, IdManagerConfig(dir, "t", reservedIdSpace = 200))
     val loaded = mgr.readAll(alerts(1).toDF().drop("id").schema)
     assert(loaded.isEmpty)
     assert(loaded.columns.head == "id")
-    assert(mgr.fetchId(loaded) == 200L)
+    val log = new graft.io.RunLog(spark, IdManagerConfig(dir, "t", reservedIdSpace = 200), None)
+    assert(jobsStarted(spark.sparkContext)(assert(log.recover().hi == 200L)).isEmpty)
+    val r = mgr.process(alerts(2).toDF().drop("id"))
+    assert(r.current.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(201L, 202L))
+    assert(log.state().hi == 202L)
   }
 
   test("process stamps ids, appends partitioned, and continues across runs") {
@@ -99,71 +105,71 @@ class IdManagerSpec extends SparkSpec {
     assert(r.current.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(5L, 6L))
   }
 
-  test("steady-state id continuation comes from the sidecar, not a table scan") {
+  private def fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+
+  test("steady-state id continuation comes from the run log, not a table scan") {
     import spark.implicits._
-    val dir = tempDir("idm-sidecar")
+    val dir = tempDir("idm-log")
     val mgr = new IdManager(spark, IdManagerConfig(dir, "t", reservedIdSpace = 0))
     mgr.process(alerts(4).toDF().drop("id")) // ids 1..4
-    assert(mgr.readMaxIdSidecar().contains(4L))
-    // remove the DATA (keep the sidecar): if the next run still continues
-    // at 5, the max came from the sidecar — no table scan happened
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val log = new graft.io.RunLog(spark, IdManagerConfig(dir, "t", reservedIdSpace = 0), None)
+    assert(jobsStarted(spark.sparkContext)(assert(log.recover().hi == 4L)).isEmpty)
+    // remove the DATA (keep the log): if the next run still continues at 5,
+    // the last id came from the log — no table scan happened
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/t/year=2019"), true)
     val r = mgr.process(alerts(2).toDF().drop("id"))
     assert(r.current.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(5L, 6L))
   }
 
-  test("stale sidecar below the table max is overridden by the scan — ids never reused") {
+  /** A store as the sidecar-era code left it: Parquet rows with ids
+    * `ids`, and a `_last_id` file holding `sidecar` (None: no file).
+    */
+  private def legacyStore(tag: String, ids: Seq[Long], sidecar: Option[String]): String = {
     import spark.implicits._
-    val dir = tempDir("idm-sidecar-stale")
-    val mgr = new IdManager(spark, IdManagerConfig(dir, "t", reservedIdSpace = 0))
-    mgr.process(alerts(4).toDF().drop("id")) // ids 1..4, sidecar = 4
-    // simulate an out-of-band writer: rewind the sidecar to 2 while the
-    // table's real max stays 4 — trusting it would reassign ids 3 and 4
-    val fs  = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$dir/t/_last_id"), true)
-    out.write("2".getBytes("UTF-8")); out.close()
-    val r = mgr.process(alerts(2).toDF().drop("id"))
-    assert(r.current.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(5L, 6L))
-    assert(mgr.readMaxIdSidecar().contains(6L)) // healed forward
+    val dir = tempDir(tag)
+    alerts(ids.size).zip(ids).map { case (a, id) => a.copy(id = id) }.toDF()
+      .write.partitionBy("year", "month", "day").parquet(s"$dir/t")
+    sidecar.foreach { v =>
+      val out = fs.create(new org.apache.hadoop.fs.Path(s"$dir/t/_last_id"), true)
+      out.write(v.getBytes("UTF-8")); out.close()
+    }
+    dir
   }
 
-  test("sidecar fallback: absent or corrupt sidecar re-derives the max from the table") {
+  private def nextIds(dir: String, n: Int): Seq[Long] = {
     import spark.implicits._
-    val dir = tempDir("idm-sidecar2")
-    val mgr = new IdManager(spark, IdManagerConfig(dir, "t", reservedIdSpace = 0))
-    mgr.process(alerts(4).toDF().drop("id")) // ids 1..4
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val sidecar = new org.apache.hadoop.fs.Path(s"$dir/t/_last_id")
-    // absent → scan fallback yields the same continuation the sidecar would
-    fs.delete(sidecar, false)
-    val r2 = mgr.process(alerts(2).toDF().drop("id"))
-    assert(r2.current.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(5L, 6L))
-    // corrupt → same
-    val out = fs.create(sidecar, true)
-    out.write("not-a-number".getBytes("UTF-8")); out.close()
-    val r3 = mgr.process(alerts(1).toDF().drop("id"))
-    assert(r3.current.select("id").collect().map(_.getLong(0)).toSeq == Seq(7L))
-    // and the write path healed the sidecar
-    assert(mgr.readMaxIdSidecar().contains(7L))
+    new IdManager(spark, IdManagerConfig(dir, "t", reservedIdSpace = 0))
+      .process(alerts(n).toDF().drop("id").withColumn("day", lit(2)))
+      .current.select("id").collect().map(_.getLong(0)).sorted.toSeq
   }
 
-  test("no sidecar, no range: ids continue from the loaded table, as the full-table scan gave") {
+  test("legacy adoption continues ids from the larger of sidecar and max(id)") {
+    // sidecar below the table max (an out-of-band writer): the scan wins
+    assert(nextIds(legacyStore("idm-legacy-low", Seq(1L, 2L, 3L, 4L), Some("2")), 2) == Seq(5L, 6L))
+    // sidecar above the table max (a crash after the sidecar advanced
+    // left a gap): the sidecar wins, so no id is ever issued twice
+    val gap = legacyStore("idm-legacy-high", Seq(1L, 2L, 3L, 4L), Some("9"))
+    assert(nextIds(gap, 2) == Seq(10L, 11L))
+    // adopted once: the table scan is not repeated, ids go on from the log
+    assert(nextIds(gap, 1) == Seq(12L))
+  }
+
+  test("legacy adoption with absent or corrupt sidecar scans max(id)") {
+    assert(nextIds(legacyStore("idm-legacy-none", Seq(3L, 7L), None), 2) == Seq(8L, 9L))
+    assert(nextIds(legacyStore("idm-legacy-bad", Seq(3L, 7L), Some("not-a-number")), 1) == Seq(8L))
+  }
+
+  test("a delete never lowers the high-water: ids are never reused") {
     import spark.implicits._
-    val dir = tempDir("idm-no-sidecar")
+    val dir = tempDir("idm-highwater")
     val mgr = new IdManager(spark, IdManagerConfig(dir, "t", reservedIdSpace = 10))
-    val fs  = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val sidecar = new org.apache.hadoop.fs.Path(s"$dir/t/_last_id")
-    // first day: no table, no sidecar
-    val r1 = mgr.process(alerts(3).toDF().drop("id"))
-    assert(r1.current.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(11L, 12L, 13L))
-    assert(mgr.readMaxIdSidecar().contains(13L))
-    // a later day whose sidecar is gone: the max comes from the loaded frame
-    fs.delete(sidecar, false)
-    val r2 = mgr.process(alerts(2).toDF().drop("id").withColumn("day", lit(2)))
-    assert(r2.current.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(14L, 15L))
-    assert(r2.loaded.count() == 3 && r2.currentCount == 2)
-    assert(mgr.readMaxIdSidecar().contains(15L))
+    mgr.process(alerts(3).toDF().drop("id")) // ids 11..13, day 1
+    mgr.process(alerts(2).toDF().drop("id").withColumn("day", lit(2))) // 14..15, day 2
+    // drop the latest day: max(id) over the table falls back to 13
+    mgr.deletePartitions(graft.io.PartitionManager.forRange("2019-02-02", 1))
+    val r = mgr.process(alerts(2).toDF().drop("id").withColumn("day", lit(2)))
+    assert(r.current.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(16L, 17L))
+    assert(r.loaded.count() == 3 && r.currentCount == 2)
   }
 
   test("deletePartitions drops matching partition dirs") {

@@ -5,12 +5,13 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
+import org.apache.spark.graft.TestSparkInternals.jobsStarted
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import graft.SparkSpec
 import graft.ids.IdManagerConfig
-import graft.io.ReaderConfig
+import graft.io.{ReaderConfig, RunLog}
 import graft.meta.SchemaInfo
 import graft.rules.{SameValueSimilarityConfig, SimilarityConfig}
 
@@ -150,10 +151,130 @@ class JobSpec extends SparkSpec {
         s"$date: each rule must add exactly one execution, got ${execs.size} vs ${execs0.size} without rules:\n" +
           execs.map(_.description).mkString("\n"))
       assert(labelWrites(execs).sorted == List("exactmatch", "similarity"), date)
-      assert(counts(execs) == 1 && counts(execs0) == 1,
-        s"$date: the batch is counted once and no rule's edges are counted apart from their write")
+      assert(counts(execs) == 0 && counts(execs0) == 0,
+        s"$date: the batch is counted by its write and no rule's edges are counted apart from their write")
       assert(pinned.isEmpty && pinned0.isEmpty, s"$date: process left RDDs persisted: $pinned $pinned0")
     }
+    // the latest day is one whole run: its delete only unlinks its files
+    val deleteJobs = jobsStarted(spark.sparkContext)(new GraftJob(spark, config(withRules)).delete("2019-02-02", 1, clearOnDelete = true))
+    assert(deleteJobs.isEmpty, s"deleting the latest day started Spark jobs: $deleteJobs")
+  }
+
+  // ---- the run log: re-runs and crashes -------------------------------------
+
+  private class Boom extends RuntimeException("injected crash")
+
+  /** Hooks that crash at `point`: `vertexWrite`, `rule:<label>` (after that
+    * rule's write), `commit` (before the entry is written) or `publish`
+    * (after the first file is published).
+    */
+  private def crashAt(point: String): RunLog.Hooks = new RunLog.Hooks {
+    override def afterVertexWrite(): Unit          = if (point == "vertexWrite") throw new Boom
+    override def afterRule(label: String): Unit    = if (point == s"rule:$label") throw new Boom
+    override def beforeCommit(): Unit              = if (point == "commit") throw new Boom
+    override def published(f: RunLog.FileRef): Unit = if (point == "publish") throw new Boom
+  }
+
+  /** Every stored row, ids included: the vertex table and each label. */
+  private def snapshot(work: String): (Seq[String], Map[String, Seq[String]]) = {
+    def rows(dir: String): Seq[String] =
+      if (new java.io.File(dir).exists) spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq else Nil
+    (rows(s"$work/ids/vertices"), List("similarity", "exactmatch").map(l => l -> rows(s"$work/edges/label=$l")).toMap)
+  }
+
+  /** A fresh store with the two-day input, and a job over it. */
+  private def store(tag: String, hooks: RunLog.Hooks = RunLog.NoHooks): (String, GraftJob) = {
+    val work = tempDir(tag)
+    writeAlerts(s"$work/raw")
+    (work, new GraftJob(spark, config(work), hooks))
+  }
+
+  private def cleanRun(ops: GraftJob => Unit): (Seq[String], Map[String, Seq[String]]) = {
+    val (work, job) = store("graft-clean")
+    ops(job)
+    snapshot(work)
+  }
+
+  test("a re-run of a committed range is a no-op that returns the recorded result") {
+    val want = cleanRun { j => j.process("2019-02-01", 1); j.process("2019-02-02", 1) }
+    val (work, job) = store("graft-rerun")
+    val r1 = job.process("2019-02-01", 1)
+    val r2 = job.process("2019-02-02", 1)
+    assert(job.process("2019-02-02", 1) == r2)
+    assert(new GraftJob(spark, config(work)).process("2019-02-01", 1) == r1) // a new job reads the log
+    assert(snapshot(work) == want)
+    val overlap = intercept[IllegalStateException](job.process("2019-02-01", 2))
+    assert(overlap.getMessage.contains("range 2019-02-01 1"), overlap.getMessage)
+    assert(snapshot(work) == want)
+  }
+
+  Seq(
+    "after the vertex write"   -> "vertexWrite",
+    "between two rules"        -> "rule:similarity",
+    "before the commit"        -> "commit",
+    "after the commit, before publish completes" -> "publish"
+  ).foreach { case (when, point) =>
+    test(s"a load that crashes $when ends, once re-run, as one clean run") {
+      val want = cleanRun { j => j.process("2019-02-01", 1); j.process("2019-02-02", 1) }
+      val (work, job) = store("graft-crash")
+      job.process("2019-02-01", 1)
+      val day1 = snapshot(work)
+      intercept[Boom](new GraftJob(spark, config(work), crashAt(point)).process("2019-02-02", 1))
+      // nothing of the run is visible before its commit
+      if (point != "publish") assert(snapshot(work) == day1, point)
+      val r = new GraftJob(spark, config(work)).process("2019-02-02", 1)
+      assert(r.vertexCount == 2)
+      assert(snapshot(work) == want, point)
+      val dirs = new java.io.File(s"$work/ids/vertices").list() ++ new java.io.File(s"$work/edges").list()
+      assert(!dirs.exists(_.startsWith(".stage-")), s"staging left behind: ${dirs.mkString(" ")}")
+    }
+  }
+
+  // the latest day is one run (unlinked); day 1 is older (day 2's edge
+  // files are rewritten without its rows)
+  Seq("2019-02-02" -> "commit", "2019-02-02" -> "publish", "2019-02-01" -> "commit", "2019-02-01" -> "publish")
+    .foreach { case (day, point) =>
+      test(s"a delete of the run of $day that crashes at $point ends, once re-run, as one clean delete") {
+        def ops(j: GraftJob): Unit = { j.process("2019-02-01", 1); j.process("2019-02-02", 1) }
+        val want = cleanRun { j => ops(j); j.delete(day, 1, clearOnDelete = true); j.process(day, 1) }
+        val (work, job) = store("graft-del-crash")
+        ops(job)
+        intercept[Boom](new GraftJob(spark, config(work), crashAt(point)).delete(day, 1, clearOnDelete = true))
+        val again = new GraftJob(spark, config(work))
+        again.delete(day, 1, clearOnDelete = true)
+        again.process(day, 1)
+        assert(snapshot(work) == want)
+      }
+    }
+
+  test("delete the latest day, then re-process it: the new ids are above the old high-water") {
+    val (work, job) = store("graft-del-ids")
+    job.process("2019-02-01", 1)
+    val r2 = job.process("2019-02-02", 1)
+    job.delete("2019-02-02", 1, clearOnDelete = true)
+    assert(snapshot(work)._1.size == 2)
+    assert(job.process("2019-02-02", 1) == r2)
+    val ids = spark.read.parquet(s"$work/ids/vertices").select("id", "day").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toSet
+    assert(ids == Set(101L -> 1, 102L -> 1, 105L -> 2, 106L -> 2))
+    // the cross-day edge is back, on the new ids
+    val sim = spark.read.parquet(s"$work/edges/label=similarity").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(sim.exists { case (s, d) => s >= 105L && d <= 102L })
+    assert(!sim.exists { case (s, d) => Set(103L, 104L)(s) || Set(103L, 104L)(d) })
+  }
+
+  test("a run that loads 0 vertices neither blocks nor throws") {
+    import spark.implicits._
+    val (work, job) = store("graft-job-0v")
+    Seq.empty[(String, Double, String)].toDF("objectId", "rfscore", "cdsxmatch")
+      .coalesce(1).write.parquet(s"$work/raw/year=2019/month=2/day=3")
+    job.process("2019-02-01", 1)
+    val r = Await.result(Future(job.process("2019-02-03", 1)), 2.minutes)
+    assert(r == JobResult(0L, Map("similarity" -> 0L, "exactmatch" -> 0L)))
+    job.process("2019-02-02", 1)
+    val ids = spark.read.parquet(s"$work/ids/vertices").select("id").collect().map(_.getLong(0)).toSet
+    assert(ids == Set(101L, 102L, 103L, 104L)) // the empty run used no id
+    assert(Await.result(Future(job.process("2019-02-03", 1)), 2.minutes) == r) // and re-runs as a no-op
   }
 
   test("loadedDays covering all history produces identical edges to a full re-read") {

@@ -100,6 +100,70 @@ class StreamingSpec extends SparkSpec {
     assert(batchEdges.values.forall(_.nonEmpty))
   }
 
+  /** Two one-day alert files, day 1 older than day 2, and a load config
+    * over them that takes one file per micro-batch.
+    */
+  private def twoDayInput(tag: String): (String, String => GraftConfig) = {
+    import spark.implicits._
+    val raw = tempDir(tag) + "/raw"
+    Seq(
+      Seq(("objA", 0.95, "C*", 2019, 2, 1), ("objB", 0.20, "Unknown", 2019, 2, 1)),
+      Seq(("objA", 0.99, "C*", 2019, 2, 2), ("objC", 0.10, "C*", 2019, 2, 2))
+    ).zipWithIndex.foreach { case (day, i) =>
+      val dir = s"$raw/year=2019/month=2/day=${i + 1}"
+      day.toDF("objectId", "rfscore", "cdsxmatch", "year", "month", "day")
+        .drop("year", "month", "day").coalesce(1).write.parquet(dir)
+      new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+        .foreach(_.setLastModified(1000000000000L + i * 60000L))
+    }
+    (raw, work => GraftConfig(
+      reader = ReaderConfig(raw, options = Map("maxFilesPerTrigger" -> "1")),
+      idManager = IdManagerConfig(s"$work/ids", "vertices", reservedIdSpace = 100),
+      edgeBasePath = s"$work/edges",
+      rules = RulesConfig(
+        rulesToApply = List("similarityClassifier", "sameValueClassifier"),
+        similarity = Some(SimilarityConfig("objectId OR cdsxmatch")),
+        sameValue = Some(SameValueSimilarityConfig(List("cdsxmatch"))))))
+  }
+
+  /** Every stored row, ids included. */
+  private def storedRows(work: String): Seq[Seq[String]] =
+    Seq(s"$work/ids/vertices", s"$work/edges/label=similarity", s"$work/edges/label=exactmatch")
+      .map(d => spark.read.parquet(d).collect().map(_.toString).sorted.toSeq)
+
+  test("a re-delivered batchId is a no-op") {
+    val (raw, config) = twoDayInput("graft-redeliver")
+    val batch = spark.read.parquet(raw)
+    val (once, twice) = (tempDir("graft-redeliver-1"), tempDir("graft-redeliver-2"))
+    spark.sparkContext.setLocalProperty(StreamingIngest.QueryIdKey, "spec-query")
+    try {
+      new StreamingIngest(spark, config(once)).ingestBatch(batch, 0L)
+      val ingest = new StreamingIngest(spark, config(twice))
+      ingest.ingestBatch(batch, 0L)
+      ingest.ingestBatch(batch, 0L) // foreachBatch delivers a batch again after a restart
+    } finally spark.sparkContext.setLocalProperty(StreamingIngest.QueryIdKey, null)
+    assert(storedRows(twice) == storedRows(once))
+    assert(storedRows(twice).forall(_.nonEmpty))
+  }
+
+  test("a micro-batch that crashes after its commit is published on restart, and its re-delivery is a no-op") {
+    val (raw, config) = twoDayInput("graft-stream-crash")
+    val schema = spark.read.parquet(raw).schema
+    val clean = tempDir("graft-stream-clean")
+    new StreamingIngest(spark, config(clean)).start(schema, s"$clean/ckpt").awaitTermination(60000)
+
+    val work = tempDir("graft-stream-crashed")
+    val crash = new graft.io.RunLog.Hooks {
+      override def published(f: graft.io.RunLog.FileRef): Unit = throw new IllegalStateException("injected crash")
+    }
+    val failed = new StreamingIngest(spark, config(work), crash).start(schema, s"$work/ckpt")
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](failed.awaitTermination(60000))
+    // restart from the checkpoint: batch 0 is delivered again
+    new StreamingIngest(spark, config(work)).start(schema, s"$work/ckpt").awaitTermination(60000)
+    assert(storedRows(work) == storedRows(clean))
+    assert(storedRows(work).head.size == 4)
+  }
+
   test("windowed type counts aggregate by tumbling event-time windows") {
     import spark.implicits._
     val stream = MemoryStream[(Timestamp, String, Double)](spark)
