@@ -1,6 +1,6 @@
 package graft.ids
 
-import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -33,6 +33,10 @@ case class VertexData(loaded: DataFrame, current: DataFrame, currentCount: Long)
   * re-reads the full history each run and acknowledges the cost
   * (IDManagerSparkService.scala:135 TODO); at 100 TB restrict the loaded
   * side with partition predicates via `readRange` instead.
+  *
+  * The manager only reads the table and writes into dirs it is given (a
+  * run's staging dir): loads, compaction and deletes commit through the
+  * run log, which renames files in and unlinks the ones they replace.
   */
 class IdManager(spark: SparkSession, config: IdManagerConfig) {
 
@@ -118,48 +122,11 @@ class IdManager(spark: SparkSession, config: IdManagerConfig) {
     vertexData
   }
 
-  /** Rewrites the date range's partition directories into size-targeted
-    * files, preserving the partition layout. Maintenance for the
-    * append-only vertex table: re-runs and multi-batch days append small
-    * files per partition dir; at scale the scan becomes file-open-bound
-    * (see [[graft.graph.EdgeStore.compact]]). Crash-safe per partition via
-    * the rename-aside protocol of [[graft.io.AtomicSwap]].
+  /** Rewrites `files`, the files of one partition dir of the table, into
+    * `nFiles` files in `dir`: the vertex side of compaction
+    * ([[graft.job.GraftJob.compact]]). Partition values live in the dir
+    * name, not the files, so the rows are rewritten as they are.
     */
-  def compactPartitions(
-      pm: PartitionManager,
-      targetFileBytes: Long = 128L * 1024 * 1024,
-      hooks: graft.io.AtomicSwap.Hooks = graft.io.AtomicSwap.NoHooks
-  ): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    // a partition whose previous swap died between renames is missing under
-    // its live name — heal every candidate dir BEFORE the existence probe,
-    // or the crashed partition would be skipped forever
-    pm.relativePaths.foreach { r =>
-      val dir = new org.apache.hadoop.fs.Path(s"$tablePath/$r")
-      graft.io.AtomicSwap.heal(dir.getFileSystem(conf), dir)
-    }
-    pm.existingPaths(spark, tablePath).foreach { d =>
-      val dir = new org.apache.hadoop.fs.Path(d)
-      val fs  = dir.getFileSystem(conf)
-      graft.io.AtomicSwap.withMaintenanceLock(fs, dir) {
-        val bytes  = fs.getContentSummary(dir).getLength
-        val nFiles = math.max(1, (bytes / targetFileBytes).toInt)
-        // partition values live in the dir name, not the files — rewrite the
-        // leaf dir's row set as-is
-        Parquet.read(spark, d).coalesce(nFiles)
-          .write.mode(SaveMode.Overwrite).parquet(graft.io.AtomicSwap.scratch(dir).toString)
-        graft.io.AtomicSwap.swapIn(fs, dir, hooks)
-      }
-    }
-  }
-
-  /** Deletes the date range's table partitions, in either directory
-    * spelling — the delete-mode analogue of `ALTER TABLE DROP PARTITION`.
-    * Ref: PartitionManager.scala:100-112 (deletePartitions), Job.scala:128-133.
-    */
-  def deletePartitions(pm: PartitionManager): Unit =
-    pm.existingPaths(spark, tablePath).foreach { d =>
-      val dir = new org.apache.hadoop.fs.Path(d)
-      dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
-    }
+  def compactPartitions(files: Seq[String], nFiles: Int, dir: String): Unit =
+    Parquet.read(spark, files: _*).coalesce(nFiles).write.parquet(dir)
 }

@@ -2,9 +2,11 @@ package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Crash-safe directory replacement for maintenance rewrites (edge-label
-  * compaction, delete-mode cleanup, vertex-partition compaction):
-  * write-new-to-scratch → rename-old-aside → rename-new-in → delete-old.
+/** Crash-safe directory replacement for maintenance rewrites of whole
+  * directories (the clustered layout, the streaming state tables, the
+  * index stores): write-new-to-scratch → rename-old-aside → rename-new-in
+  * → delete-old. The load job's stores commit through [[RunLog]] instead;
+  * its maintenance lock is [[withMaintenanceLock]] on `_runs`.
   *
   * NOT atomic — a plain filesystem cannot swap a directory name in one
   * operation — but crash-SAFE: a complete copy of the store's rows exists

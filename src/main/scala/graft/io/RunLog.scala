@@ -25,13 +25,19 @@ import graft.ids.IdManagerConfig
   *  - publish: the staged files are renamed into the live dirs and the
   *    staging dirs removed.
   *
+  * Compaction and every delete go through the same three steps
+  * ([[rewrite]], [[deleteRun]]): the rewritten files are staged, one
+  * entry lists them with the files they replace, and publishing renames
+  * them in and unlinks the replaced ones. There is no other commit
+  * protocol for these stores.
+  *
   * [[recover]] runs at the start of every load, delete and compaction:
   * staging with no entry is dropped, and a committed entry whose staging
   * is still there is published again (publishing is idempotent). So a
-  * crash anywhere leaves either no trace of the run or the whole run, and
+  * crash anywhere leaves either no trace of the change or all of it, and
   * readers never consult the log: uncommitted files never reach a live
-  * dir. Only the publish window keeps the single-writer caveat of
-  * [[AtomicSwap]].
+  * dir. A reader that lists a dir during a publish may see a rewritten
+  * row twice (the new file is in, the old one not yet unlinked).
   *
   * The log also knows which files hold which run's rows, which makes the
   * delete of a whole run cheap ([[deleteRun]]), and its largest `hi` is
@@ -82,7 +88,7 @@ final class RunLog(
     }.distinct.sorted
     staged.foreach { seq =>
       if (seq <= st.seq) publish(read(seq))
-      else roots.keys.foreach(s => fs.delete(stageDir(s, seq), true))
+      else dropStaging(seq)
     }
     st
   }
@@ -98,30 +104,54 @@ final class RunLog(
     commitAndPublish(Entry(seq, Load, run, lastId + 1, lastId + vertexCount, vertexCount, counts,
       adds = staged(seq).map(_ -> Set(seq)).toMap))
 
-  /** Marks every run from `from` on as merged: their files are no longer
-    * the ones the log lists, so [[deleteRun]] leaves them to the full
-    * delete. Always safe; commits nothing when there is nothing to mark.
+  /** Rewrites files of the stores as one committed change: a compaction
+    * ([[Compact]]) or a delete that is not one whole run ([[Delete]]).
+    *
+    * Holds the log's maintenance lock ([[AtomicSwap.withMaintenanceLock]]
+    * on `_runs`), so a second compaction or delete fails fast instead of
+    * interleaving; recovers; then `body(seq)` writes the new files under
+    * `seq`'s staging dirs ([[stageDir]]), at the same relative dir as the
+    * files they replace, and returns the replaced files and the days whose
+    * vertices are gone. One entry commits it all, and publishing renames
+    * the new files in and unlinks the replaced ones.
+    *
+    * A new file holds the rows of the files it replaces in its dir, so it
+    * is owned by the union of their owners; a file the log does not list
+    * counts as the first run's. So [[deleteRun]] still finds every file
+    * that holds a run's rows after a rewrite. Commits nothing when `body`
+    * replaces nothing and deletes no day.
     */
-  def markMerged(st: State, from: Option[Long]): Unit =
-    from.filter(f => st.runs.exists { case (s, r) => s >= f && !r.merged })
-      .foreach(f => commit(Entry(st.seq + 1, Merge, target = Some(f))))
+  def rewrite(kind: String)(body: Long => (Seq[FileRef], Seq[LocalDate])): Unit =
+    AtomicSwap.withMaintenanceLock(fs, logDir) {
+      val st  = recover()
+      val seq = st.seq + 1
+      val (removes, days) = body(seq)
+      if (removes.isEmpty && days.isEmpty) dropStaging(seq)
+      else {
+        val first = st.runs.headOption.map(_._1).toSet
+        def dirOf(f: FileRef) = (f.store, f.path.take(f.path.lastIndexOf('/') + 1))
+        val owners = removes.groupMapReduce(dirOf)(st.files.getOrElse(_, first))(_ ++ _)
+        commitAndPublish(Entry(seq, kind, days = days, removes = removes,
+          adds = staged(seq).map(f => f -> owners.getOrElse(dirOf(f), first)).toMap))
+      }
+    }
 
-  /** The earliest run that may hold a vertex of `pm`'s days, per the files
-    * of those days; the first run when a file there is not in the log.
-    */
-  def earliestIn(st: State, pm: PartitionManager): Option[Long] = {
-    val files = liveVertexFiles(pm)
-    val owners = files.map(f => st.files.get(FileRef(Vertices, f)))
-    if (files.isEmpty) None
-    else if (owners.exists(_.isEmpty)) st.runs.headOption.map(_._1)
-    else Some(owners.flatten.flatten.min)
+  /** The data files now in `pm`'s vertex partition dirs (either spelling). */
+  def vertexFiles(pm: PartitionManager): Seq[FileRef] = pm.relativePaths.flatMap(liveFiles(Vertices, _))
+
+  /** The data files now in `rel` (a partition or label dir) of `store`. */
+  def liveFiles(store: String, rel: String): Seq[FileRef] = {
+    val dir = new Path(roots(store), rel)
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).filter(s => s.isFile && visible(s.getPath.getName))
+      .map(s => FileRef(store, s"$rel/${s.getPath.getName}")).toSeq
   }
 
-  /** Records that `pm`'s days were deleted outside [[deleteRun]], so their
-    * range can be loaded again.
-    */
-  def commitDeletedDays(st: State, pm: PartitionManager): Unit =
-    if (st.runs.nonEmpty) commit(Entry(st.seq + 1, Delete, days = pm.dates))
+  /** The live path of `f`. */
+  def pathOf(f: FileRef): String = live(f).toString
+
+  /** The total size of `files` in bytes. */
+  def bytes(files: Seq[FileRef]): Long = files.map(f => fs.getFileStatus(live(f)).getLen).sum
 
   /** Deletes the run loaded for exactly `pm`'s range, with its vertices
     * and every edge incident to them, through the log; false (nothing
@@ -140,19 +170,19 @@ final class RunLog(
     * published.
     *
     * Falls back (returns false) for a range that is not one whole run, a
-    * run some part of which was already deleted, a run with a merged run
-    * at or after it, or when a file the log lists is missing or a file in
-    * the range's partition dirs is not the run's.
+    * run some part of which was already deleted, or when a file the log
+    * lists is missing or a file in the range's partition dirs is not the
+    * run's (a store rewritten outside the log).
     */
   def deleteRun(st: State, pm: PartitionManager)(
       rewrite: (Seq[String], Long, Long, String) => Unit): Boolean =
     st.runs.values.find(r => r.id.contains(rangeId(pm)) && r.goneDays.isEmpty) match {
-      case Some(run) if st.runs.valuesIterator.forall(r => r.seq < run.seq || !r.merged) =>
+      case Some(run) =>
         // its own files, and the edge files that hold other runs' rows too
         val mine   = st.files.filter { case (_, o) => o == Set(run.seq) }.keySet
-        val shared = st.files.filter { case (f, o) => f.store == Edges && o.max >= run.seq && o != Set(run.seq) }
+        val shared = st.files.filter { case (f, o) => f.store == Edges && o.exists(_ >= run.seq) && o != Set(run.seq) }
         val vertex = mine.filter(_.store == Vertices)
-        val known  = liveVertexFiles(pm).map(FileRef(Vertices, _)).toSet == vertex &&
+        val known  = vertexFiles(pm).toSet == vertex &&
           (mine ++ shared.keySet).forall(f => fs.exists(live(f)))
         if (known) {
           val seq = st.seq + 1
@@ -229,8 +259,10 @@ final class RunLog(
         hooks.published(f)
       }
     }
-    roots.keys.foreach(s => fs.delete(stageDir(s, e.seq), true))
+    dropStaging(e.seq)
   }
+
+  private def dropStaging(seq: Long): Unit = roots.keys.foreach(s => fs.delete(stageDir(s, seq), true))
 
   /** The data files staged for `seq`, relative to their store's root. */
   private def staged(seq: Long): Seq[FileRef] = roots.keys.toSeq.flatMap { store =>
@@ -246,13 +278,7 @@ final class RunLog(
     }
   }
 
-  /** The data files now in `pm`'s vertex partition dirs (either spelling). */
-  private def liveVertexFiles(pm: PartitionManager): Seq[String] =
-    pm.relativePaths.flatMap { rel =>
-      val dir = new Path(roots(Vertices), rel)
-      if (!fs.exists(dir)) Nil
-      else fs.listStatus(dir).map(_.getPath.getName).filter(n => !n.startsWith(".") && !n.startsWith("_")).map(n => s"$rel/$n")
-    }
+  private def visible(name: String) = !name.startsWith(".") && !name.startsWith("_")
 
   /** Adopts a store written before the log existed: one legacy run whose
     * `hi` is the larger of the old `_last_id` sidecar and `max(id)`.
@@ -284,10 +310,10 @@ object RunLog {
   private val StagePrefix = ".stage-"
 
   // entry kinds
-  val Load   = "load"
-  val Legacy = "legacy"
-  val Merge  = "merge"
-  val Delete = "delete"
+  val Load    = "load"
+  val Legacy  = "legacy"
+  val Delete  = "delete"
+  val Compact = "compact"
 
   /** The run id of a batch load of `pm`'s range. */
   def rangeId(pm: PartitionManager): String = s"range ${pm.startDate} ${pm.duration}"
@@ -311,7 +337,7 @@ object RunLog {
     * @param run    load: the run's id; delete: the id of the run deleted
     * @param adds   files published by this entry, with the runs whose rows
     *               each holds
-    * @param target merge: the first run merged; delete: the run deleted
+    * @param target delete of a whole run: the run deleted
     * @param days   delete: days whose vertices are gone
     */
   final case class Entry(
@@ -359,11 +385,10 @@ object RunLog {
 
   /** A committed run that has not been deleted.
     *
-    * @param merged   its files are no longer the ones the log lists
     * @param goneDays days of its range deleted since it was loaded
     */
   final case class Run(seq: Long, id: Option[String], lo: Long, hi: Long, vertexCount: Long,
-      counts: Map[String, Long], merged: Boolean, goneDays: Set[LocalDate] = Set.empty) {
+      counts: Map[String, Long], goneDays: Set[LocalDate] = Set.empty) {
 
     /** The days of a range run that still hold its vertices. */
     def liveDays: Seq[LocalDate] = id.flatMap(rangeOf).fold(Seq.empty[LocalDate])(_.dates).filterNot(goneDays)
@@ -381,11 +406,12 @@ object RunLog {
     def apply(e: Entry): State = e.kind match {
       case Load | Legacy =>
         copy(seq = e.seq, hi = math.max(hi, e.hi),
-          runs = runs + (e.seq -> Run(e.seq, e.run, e.lo, e.hi, e.vertexCount, e.counts, merged = e.kind == Legacy)),
+          runs = runs + (e.seq -> Run(e.seq, e.run, e.lo, e.hi, e.vertexCount, e.counts)),
           files = files ++ e.adds)
-      case Merge =>
-        copy(seq = e.seq, runs = runs.map { case (s, r) => s -> (if (s >= e.target.get) r.copy(merged = true) else r) })
-      case Delete =>
+      // older logs marked the runs a compaction or delete was about to
+      // rewrite outside the log; [[deleteRun]]'s file checks cover them
+      case "merge" => copy(seq = e.seq)
+      case Delete | Compact =>
         copy(seq = e.seq, runs = (runs -- e.target).map { case (s, r) => s -> r.copy(goneDays = r.goneDays ++ e.days) },
           files = files -- e.removes ++ e.adds)
       case other => throw new IllegalStateException(s"run log entry ${e.seq}: unknown kind '$other'")
@@ -407,9 +433,8 @@ object RunLog {
     def empty(reservedIdSpace: Long): State = State(0L, reservedIdSpace, SortedMap.empty, Map.empty)
   }
 
-  /** Crash-injection points for specs, in the style of [[AtomicSwap.Hooks]]:
-    * each is invoked where it names; a spec subclass throws to simulate
-    * dying there.
+  /** Crash-injection points for specs: each is invoked where it names; a
+    * spec subclass throws to simulate dying there.
     */
   trait Hooks {
     def afterVertexWrite(): Unit           = ()

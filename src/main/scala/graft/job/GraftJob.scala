@@ -50,7 +50,7 @@ case class JobResult(vertexCount: Long, edgeCounts: Map[String, Long])
   * becomes implicit Parquet schema-on-write + [[graft.meta.SchemaInfo]].
   *
   * Every load, delete and compaction goes through the stores' run log
-  * ([[RunLog]]): a load run is staged, committed by one entry and then
+  * ([[RunLog]]): its files are staged, committed by one entry and then
   * published, so re-running a range and crashing at any point are safe.
   * `hooks` are crash-injection points for specs.
   *
@@ -88,6 +88,8 @@ class GraftJob(spark: SparkSession, config: GraftConfig, hooks: RunLog.Hooks = R
       case other =>
         throw new IllegalArgumentException(s"Unknown rule: $other")
     }
+
+  private def edgeLabels(): List[String] = buildRules().map(_.getEdgeLabel).distinct
 
   /** One incremental load run over `[startDate, startDate + duration)`:
     * [[PartitionedReader.readAndProcess]] then [[load]], with the range as
@@ -160,19 +162,31 @@ class GraftJob(spark: SparkSession, config: GraftConfig, hooks: RunLog.Hooks = R
   }
 
   /** Maintenance mode: compacts the date range's vertex partitions and
-    * every configured rule's edge label (see [[IdManager.compactPartitions]]
-    * / [[EdgeStore.compact]] for why append-only stores need this at scale).
-    * The rewrite replaces the files the run log lists, so it first marks
-    * every run as merged: a later delete of one of them takes the full
-    * path of [[delete]].
+    * every configured rule's edge label into size-targeted files, as one
+    * change of the run log ([[RunLog.rewrite]]). Append-only stores need
+    * this at scale: every run adds at least one file per partition and per
+    * label, so after thousands of runs a scan is dominated by file opens,
+    * not bytes. Each partition dir ([[IdManager.compactPartitions]]) and
+    * each label ([[EdgeStore.compact]]) is rewritten from exactly the files
+    * listed in it, sized from their bytes; the new files keep the runs that
+    * own their rows, so a later delete of a whole run still takes
+    * [[RunLog.deleteRun]]. Fails fast while another compaction or delete
+    * holds the log's maintenance lock.
     */
   def compact(startDate: String, duration: Int, targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
     val pm = PartitionManager.forRange(startDate, duration)
-    val st = runLog.recover()
-    runLog.markMerged(st, st.runs.headOption.map(_._1))
-    idManager.compactPartitions(pm, targetFileBytes)
-    if (config.rules.rulesToApply.nonEmpty)
-      buildRules().map(_.getEdgeLabel).distinct.foreach(edgeStore.compact(_, targetFileBytes))
+    val labels = edgeLabels()
+    runLog.rewrite(RunLog.Compact) { seq =>
+      def rewritten(store: String, rel: String)(write: (Seq[String], Int, String) => Unit): Seq[RunLog.FileRef] = {
+        val files = runLog.liveFiles(store, rel)
+        if (files.nonEmpty)
+          write(files.map(runLog.pathOf), math.max(1, (runLog.bytes(files) / targetFileBytes).toInt),
+            s"${runLog.stageDir(store, seq)}/$rel")
+        files
+      }
+      (pm.relativePaths.flatMap(rewritten(RunLog.Vertices, _)(idManager.compactPartitions)) ++
+        labels.flatMap(l => rewritten(RunLog.Edges, s"label=$l")(edgeStore.compact)), Nil)
+    }
   }
 
   /** Delete mode: removes the date range's vertices and their incident
@@ -182,34 +196,36 @@ class GraftJob(spark: SparkSession, config: GraftConfig, hooks: RunLog.Hooks = R
     * log ([[RunLog.deleteRun]]): the latest run's files are unlinked with
     * no Spark job, and an older run's deletion also rewrites the later
     * runs' edge files by id interval. Anything else — part of a run, a
-    * day spanning several runs, a run whose files a compaction merged, or
-    * `clearOnDelete = false` — takes the full path: it marks the runs
-    * from the earliest affected one as merged, then rewrites only the
-    * edge files holding incident edges
+    * day spanning several runs, a store rewritten outside the log, or
+    * `clearOnDelete = false` — takes the full path, one change of the log
+    * ([[RunLog.rewrite]]): every label's edge files holding an incident
+    * edge are rewritten without those edges
     * ([[EdgeStore.deleteForVerticesRestricted]], the relational analogue
-    * of per-vertex `remove()`) and drops the range's vertex partitions.
-    * Without `clearOnDelete` the vertices stay, and so does their run:
-    * re-processing the range is then a no-op.
+    * of per-vertex `remove()`) and, with `clearOnDelete`, the range's
+    * vertex files are unlinked and its days recorded as deleted. Without
+    * `clearOnDelete` the vertices stay, and so does their run:
+    * re-processing the range is then a no-op. A range whose vertex
+    * partitions hold no file (nothing loaded, or already deleted) starts
+    * no Spark job.
     */
   def delete(startDate: String, duration: Int, clearOnDelete: Boolean): Unit = {
     val pm = PartitionManager.forRange(startDate, duration)
     val st = runLog.recover()
-    if (!(clearOnDelete && runLog.deleteRun(st, pm)(edgeStore.writeWithout))) {
-      val vertexTable = s"${config.idManager.dataPath}/${config.idManager.tableName}"
-      val doomed: DataFrame =
-        try Parquet.read(spark, vertexTable).where(pm.partitionPredicate).select(col("id"))
-        catch { case _: org.apache.spark.sql.AnalysisException => return } // nothing ever loaded
-
-      runLog.markMerged(st, runLog.earliestIn(st, pm))
-      buildRules().map(_.getEdgeLabel).distinct.foreach { label =>
-        try edgeStore.deleteForVerticesRestricted(label, doomed)
-        catch { case _: org.apache.spark.sql.AnalysisException => () } // label never written
+    if (!(clearOnDelete && runLog.deleteRun(st, pm)(edgeStore.writeWithout)))
+      runLog.rewrite(RunLog.Delete) { seq =>
+        val vertices = runLog.vertexFiles(pm)
+        if (vertices.isEmpty) (Nil, Nil)
+        else {
+          val doomed = Parquet.read(spark, vertices.map(runLog.pathOf): _*).select(col("id"))
+          val edges = edgeLabels().flatMap { label =>
+            val dir = s"label=$label"
+            if (runLog.liveFiles(RunLog.Edges, dir).isEmpty) Nil
+            else edgeStore.deleteForVerticesRestricted(label, doomed, s"${runLog.stageDir(RunLog.Edges, seq)}/$dir")
+              .map(name => RunLog.FileRef(RunLog.Edges, s"$dir/$name"))
+          }
+          if (clearOnDelete) (edges ++ vertices, pm.dates) else (edges, Nil)
+        }
       }
-      if (clearOnDelete) {
-        idManager.deletePartitions(pm)
-        runLog.commitDeletedDays(runLog.state(), pm)
-      }
-    }
   }
 }
 

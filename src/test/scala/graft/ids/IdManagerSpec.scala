@@ -13,6 +13,11 @@ class IdManagerSpec extends SparkSpec {
   private def alerts(n: Int, startId: Long = 0): Seq[Alert] =
     (1 to n).map(i => Alert.gen(startId + i, s"obj$i", 0.1, 0.1, 0, 0.5f, "Unknown", None, None))
 
+  /** Delete mode of the load job over the table `t` under `dir`, with no rule. */
+  private def deleteDays(dir: String, config: IdManagerConfig, startDate: String): Unit =
+    new graft.job.GraftJob(spark, graft.job.GraftConfig(graft.io.ReaderConfig(s"$dir/raw"), config,
+      s"$dir/edges", graft.job.RulesConfig(Nil))).delete(startDate, 1, clearOnDelete = true)
+
   test("zipWithIndex assigns dense contiguous ids from offset+1") {
     import spark.implicits._
     val df = alerts(5).toDF().repartition(3)
@@ -162,11 +167,12 @@ class IdManagerSpec extends SparkSpec {
   test("a delete never lowers the high-water: ids are never reused") {
     import spark.implicits._
     val dir = tempDir("idm-highwater")
-    val mgr = new IdManager(spark, IdManagerConfig(dir, "t", reservedIdSpace = 10))
+    val cfg = IdManagerConfig(dir, "t", reservedIdSpace = 10)
+    val mgr = new IdManager(spark, cfg)
     mgr.process(alerts(3).toDF().drop("id")) // ids 11..13, day 1
     mgr.process(alerts(2).toDF().drop("id").withColumn("day", lit(2))) // 14..15, day 2
     // drop the latest day: max(id) over the table falls back to 13
-    mgr.deletePartitions(graft.io.PartitionManager.forRange("2019-02-02", 1))
+    deleteDays(dir, cfg, "2019-02-02")
     val r = mgr.process(alerts(2).toDF().drop("id").withColumn("day", lit(2)))
     assert(r.current.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(16L, 17L))
     assert(r.loaded.count() == 3 && r.currentCount == 2)
@@ -175,10 +181,14 @@ class IdManagerSpec extends SparkSpec {
   test("deletePartitions drops matching partition dirs") {
     import spark.implicits._
     val dir = tempDir("idm3")
-    val mgr = new IdManager(spark, IdManagerConfig(dir, "t"))
+    val cfg = IdManagerConfig(dir, "t")
+    val mgr = new IdManager(spark, cfg)
     mgr.process(alerts(4).toDF().drop("id"))
     assert(mgr.readAll(alerts(1).toDF().drop("id").schema).count() == 4)
-    mgr.deletePartitions(graft.io.PartitionManager.forRange("2019-02-01", 1))
+    val pm = graft.io.PartitionManager.forRange("2019-02-01", 1)
+    assert(pm.existingPaths(spark, s"$dir/t").nonEmpty)
+    deleteDays(dir, cfg, "2019-02-01")
+    assert(pm.existingPaths(spark, s"$dir/t").isEmpty)
     assert(mgr.readAll(alerts(1).toDF().drop("id").schema).isEmpty)
   }
 }

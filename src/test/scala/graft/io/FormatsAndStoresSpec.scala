@@ -50,25 +50,13 @@ class FormatsAndStoresSpec extends SparkSpec {
     assert(store.read().count() == 3)
   }
 
-  test("EdgeStore parallelism matches the reference's calculation (300000 -> 121)") {
-    val store = new EdgeStore(spark, tempDir("edges"))
-    // Ref: EdgeProcessorSpec getParallelism(300000) == 121 (SURVEY §5)
-    assert(store.getParallelism(300000, taskSize = 2500, minParallelism = 100) == 121)
-    assert(store.getParallelism(10, taskSize = 25000, minParallelism = 100) == 100)
-  }
-
-  test("bucketed edge table: src-keyed aggregation plans without an Exchange") {
-    import spark.implicits._
-    val store = new EdgeStore(spark, tempDir("edges-bucketed"))
-    val edges = Seq((1L, 2L, 1), (1L, 3L, 1), (2L, 3L, 2)).toDF("src", "dst", "propVal")
-    store.writeBucketed(edges, "edges_bucket_spec", buckets = 4)
-    val t = store.readBucketed("edges_bucket_spec")
-    assert(t.count() == 3)
-    val agg  = t.groupBy("src").count()
-    val plan = agg.queryExecution.executedPlan.toString()
-    assert(!plan.contains("Exchange"), s"bucketed agg should not shuffle:\n$plan")
-    assert(plan.contains("Bucketed: true"), plan)
-    spark.sql("DROP TABLE IF EXISTS edges_bucket_spec")
+  /** Asserts every Parquet file under `dir` is sorted by `src`. */
+  private def assertSortedBySrc(dir: String): Unit = {
+    val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+    files.foreach { f =>
+      val src = spark.read.parquet(f.getPath).select("src").collect().map(_.getLong(0)).toSeq
+      assert(src == src.sorted, s"${f.getName} is not sorted by src")
+    }
   }
 
   test("EdgeStore.write returns the rows it appends (2n bidirectional) and sorts each file by src") {
@@ -93,30 +81,28 @@ class FormatsAndStoresSpec extends SparkSpec {
       assert(store.write(edges.where($"src" < 0), "sim") == 0)
       assert(stored() == 600)
     } finally spark.conf.set(coalesceKey, prev)
-    val files = new java.io.File(s"$base/label=sim").listFiles().filter(_.getName.endsWith(".parquet"))
-    assert(files.length > 2, files.map(_.getName).mkString(", "))
-    files.foreach { f =>
-      val src = spark.read.parquet(f.getPath).select("src").collect().map(_.getLong(0)).toSeq
-      assert(src == src.sorted, s"${f.getName} is not sorted by src")
-    }
+    assert(new java.io.File(s"$base/label=sim").listFiles().count(_.getName.endsWith(".parquet")) > 2)
+    assertSortedBySrc(s"$base/label=sim")
   }
 
   test("EdgeStore.compact collapses appended small files, preserving rows") {
     import spark.implicits._
     val base  = tempDir("edges-compact")
     val store = new EdgeStore(spark, base)
-    // three appends -> at least 3 files in the label dir
-    (1 to 3).foreach { i =>
-      store.write(Seq((i.toLong, i + 10L, 1)).toDF("src", "dst", "propVal"), "similarity")
+    // three appends -> at least 3 files in the label dir, each sorted by
+    // src, their concatenation not
+    Seq(Seq(5L, 50L, 500L), Seq(1L, 40L, 400L), Seq(3L, 30L, 300L)).foreach { srcs =>
+      store.write(srcs.map(s => (s, s + 1, 1)).toDF("src", "dst", "propVal"), "similarity")
     }
-    def files(): Int = new java.io.File(s"$base/label=similarity")
-      .listFiles().count(f => f.getName.endsWith(".parquet"))
+    def files(dir: String): Seq[String] = new java.io.File(dir)
+      .listFiles().map(_.getPath).filter(_.endsWith(".parquet")).toSeq
     val before = store.read("similarity").collect().toSet
-    assert(files() >= 3)
-    store.compact("similarity") // tiny data -> 1 target file
-    assert(files() == 1, "compaction should produce a single file here")
-    assert(store.read("similarity").collect().toSet == before)
-    store.compact("no_such_label") // missing label: no-op
+    assert(files(s"$base/label=similarity").size >= 3)
+    val out = s"$base/compacted"
+    store.compact(files(s"$base/label=similarity"), 1, out) // tiny data -> 1 target file
+    assert(files(out).size == 1, "compaction should produce a single file here")
+    assert(spark.read.parquet(out).collect().toSet == before)
+    assertSortedBySrc(out)
   }
 
   test("IdManager.compactPartitions collapses per-partition files, preserving rows") {
@@ -131,52 +117,13 @@ class FormatsAndStoresSpec extends SparkSpec {
     val schema = Seq(alert(1)).toDF().drop("id").schema
     val before = mgr.readAll(schema).collect().map(_.getLong(0)).toSet
     val dir = pm.existingPaths(spark, s"$dataPath/t").head
-    def files(): Int = new java.io.File(dir.stripPrefix("file:"))
-      .listFiles().count(f => f.getName.endsWith(".parquet"))
-    assert(files() >= 2)
-    mgr.compactPartitions(pm)
-    assert(files() == 1)
-    assert(mgr.readAll(schema).collect().map(_.getLong(0)).toSet == before)
-  }
-
-  test("writeBucketed derives the bucket count from getParallelism when unset") {
-    import spark.implicits._
-    val store = new EdgeStore(spark, tempDir("edges-bucketed-auto"))
-    val edges = Seq((1L, 2L, 1), (2L, 3L, 1)).toDF("src", "dst", "propVal")
-    store.writeBucketed(edges, "edges_bucket_auto_spec") // buckets derived
-    try {
-      val catalog = spark.sessionState.catalog
-        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier("edges_bucket_auto_spec"))
-      // 2 edges, taskSize 25000 -> max(2/25000+1, 100) = 100 buckets
-      assert(catalog.bucketSpec.exists(_.numBuckets == store.getParallelism(2)))
-    } finally spark.sql("DROP TABLE IF EXISTS edges_bucket_auto_spec")
-  }
-
-  test("bucketed edge table: src-keyed JOIN plans without an Exchange on the edge side") {
-    import spark.implicits._
-    val store = new EdgeStore(spark, tempDir("edges-bucketed-join"))
-    val edges = Seq((1L, 2L, 1), (1L, 3L, 1), (2L, 3L, 2)).toDF("src", "dst", "propVal")
-    store.writeBucketed(edges, "edges_bucket_join_spec", buckets = 4)
-    val t = store.readBucketed("edges_bucket_join_spec")
-    val vertices = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("src", "name")
-    // force a shuffle join (broadcast would hide the bucketing benefit)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = t.join(vertices, "src")
-      val p = joined.queryExecution.executedPlan.toString()
-      // exactly one Exchange: the probe (vertices) side shuffles to match the
-      // bucketing; the edge corpus itself is read in place — at 100 TB that
-      // is the entire point of the bucketed layout
-      val exchanges = p.linesIterator.count(_.trim.stripPrefix("+- ").stripPrefix(": ")
-        .contains("Exchange hashpartitioning"))
-      assert(exchanges == 1, s"expected 1 Exchange (probe side only), plan:\n$p")
-      assert(p.contains("Bucketed: true"), p)
-      assert(joined.count() == 3)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.sql("DROP TABLE IF EXISTS edges_bucket_join_spec")
-    }
+    def files(dir: String): Seq[String] = new java.io.File(dir.stripPrefix("file:"))
+      .listFiles().map(_.getPath).filter(_.endsWith(".parquet")).toSeq
+    assert(files(dir).size >= 2)
+    val out = s"$dataPath/compacted"
+    mgr.compactPartitions(files(dir), 1, out)
+    assert(files(out).size == 1)
+    assert(spark.read.parquet(out).select("id").collect().map(_.getLong(0)).toSet == before)
   }
 
   test("mixed AND/OR expression: disjunct rewrite matches the literal theta-join") {

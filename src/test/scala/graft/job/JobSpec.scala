@@ -225,8 +225,7 @@ class JobSpec extends SparkSpec {
       val r = new GraftJob(spark, config(work)).process("2019-02-02", 1)
       assert(r.vertexCount == 2)
       assert(snapshot(work) == want, point)
-      val dirs = new java.io.File(s"$work/ids/vertices").list() ++ new java.io.File(s"$work/edges").list()
-      assert(!dirs.exists(_.startsWith(".stage-")), s"staging left behind: ${dirs.mkString(" ")}")
+      assertNoStaging(work)
     }
   }
 
@@ -246,6 +245,108 @@ class JobSpec extends SparkSpec {
         assert(snapshot(work) == want)
       }
     }
+
+  /** The number of entries committed to the store's run log. */
+  private def entries(work: String): Int =
+    Option(new java.io.File(s"$work/ids/_runs").list()).fold(0)(_.count(!_.startsWith(".")))
+
+  private def assertNoStaging(work: String): Unit = {
+    val dirs = new java.io.File(s"$work/ids/vertices").list() ++ new java.io.File(s"$work/edges").list()
+    assert(!dirs.exists(_.startsWith(".stage-")), s"staging left behind: ${dirs.mkString(" ")}")
+  }
+
+  // a compaction, and a delete of part of a run (its own second day), are
+  // each one change of the log: one entry, and a crash before or during its
+  // publish leaves either nothing of it or, once re-run, all of it
+  Seq[(String, GraftJob => Unit, GraftJob => Unit)](
+    ("a compaction", { j => j.process("2019-02-01", 1); j.process("2019-02-02", 1) }, _.compact("2019-02-01", 2)),
+    ("a delete of one day of a two-day run", _.process("2019-02-01", 2), _.delete("2019-02-02", 1, clearOnDelete = true))
+  ).foreach { case (what, setup, op) =>
+    test(s"$what commits one log entry") {
+      val (work, job) = store("graft-one-entry")
+      setup(job)
+      val before = entries(work)
+      op(job)
+      assert(entries(work) == before + 1)
+    }
+    Seq("commit", "publish").foreach { point =>
+      test(s"$what that crashes at $point ends, once re-run, as one clean run") {
+        val (work, job) = store("graft-rewrite-crash")
+        setup(job)
+        val before = snapshot(work)
+        // the clean run starts from a copy: a multi-day run's ids follow
+        // the order its input files are read in, which two stores need not share
+        val clean = tempDir("graft-rewrite-clean")
+        org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(work), new java.io.File(clean))
+        op(new GraftJob(spark, config(clean)))
+        val want = snapshot(clean)
+        intercept[Boom](op(new GraftJob(spark, config(work), crashAt(point))))
+        if (point == "commit") assert(snapshot(work) == before, "nothing of an uncommitted change is visible")
+        op(new GraftJob(spark, config(work)))
+        assert(snapshot(work) == want)
+        assertNoStaging(work)
+      }
+    }
+  }
+
+  private def liveRuns(work: String): Seq[String] =
+    new RunLog(spark, config(work).idManager, Some(config(work).edgeBasePath)).state().runs.values.flatMap(_.id).toSeq
+
+  test("after a compaction, deleting the latest whole run goes through the log and equals a clean delete") {
+    def ops(j: GraftJob): Unit = { j.process("2019-02-01", 1); j.process("2019-02-02", 1) }
+    val want = cleanRun { j => ops(j); j.delete("2019-02-02", 1, clearOnDelete = true) }
+    val (work, job) = store("graft-compact-del")
+    ops(job)
+    job.compact("2019-02-01", 2)
+    job.delete("2019-02-02", 1, clearOnDelete = true)
+    // a whole-run delete drops the run from the log; the full path would
+    // keep it with its day marked deleted
+    assert(liveRuns(work) == Seq("range 2019-02-01 1"))
+    assert(snapshot(work) == want)
+  }
+
+  test("a log with a merge entry of an earlier version still replays; a delete after it equals a clean delete") {
+    def ops(j: GraftJob): Unit = { j.process("2019-02-01", 1); j.process("2019-02-02", 1) }
+    val want = cleanRun { j => ops(j); j.delete("2019-02-02", 1, clearOnDelete = true) }
+    val (work, job) = store("graft-merge-log")
+    ops(job)
+    // what that version did before compacting: mark the runs merged, then
+    // rewrite the label dirs outside the log
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(f"$work/ids/_runs/${entries(work) + 1}%020d"),
+      "kind\tmerge\ntarget\t1\n")
+    List("similarity", "exactmatch").foreach { l =>
+      val (dir, tmp) = (s"$work/edges/label=$l", s"$work/edges-tmp/label=$l")
+      spark.read.parquet(dir).coalesce(1).write.parquet(tmp)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+      assert(new java.io.File(tmp).renameTo(new java.io.File(dir)))
+    }
+    val again = new GraftJob(spark, config(work))
+    again.delete("2019-02-02", 1, clearOnDelete = true)
+    assert(snapshot(work) == want)
+    assert(entries(work) == 4)
+  }
+
+  test("a compaction fails fast while another caller holds the log's maintenance lock") {
+    val (work, job) = store("graft-compact-lock")
+    job.process("2019-02-01", 1)
+    val before = (snapshot(work), entries(work))
+    val runs = new org.apache.hadoop.fs.Path(s"$work/ids/_runs")
+    graft.io.AtomicSwap.withMaintenanceLock(runs.getFileSystem(spark.sparkContext.hadoopConfiguration), runs) {
+      intercept[graft.io.AtomicSwap.ConcurrentMaintenanceException](job.compact("2019-02-01", 1))
+    }
+    assert((snapshot(work), entries(work)) == before)
+    job.compact("2019-02-01", 1)
+    assert(snapshot(work) == before._1 && entries(work) == before._2 + 1)
+  }
+
+  test("repeating a completed delete starts no Spark job") {
+    val (_, job) = store("graft-del-again")
+    job.process("2019-02-01", 1)
+    job.process("2019-02-02", 1)
+    job.delete("2019-02-02", 1, clearOnDelete = true)
+    val again = jobsStarted(spark.sparkContext)(job.delete("2019-02-02", 1, clearOnDelete = true))
+    assert(again.isEmpty, s"repeating a delete started Spark jobs: $again")
+  }
 
   test("delete the latest day, then re-process it: the new ids are above the old high-water") {
     val (work, job) = store("graft-del-ids")
@@ -420,6 +521,12 @@ class JobSpec extends SparkSpec {
   test("delete on a never-loaded store is a no-op") {
     val work = tempDir("graft-del")
     new GraftJob(spark, config(work)).delete("2019-02-01", 1, clearOnDelete = true)
+  }
+
+  test("compact on a never-loaded store is a no-op that commits nothing") {
+    val work = tempDir("graft-compact-empty")
+    new GraftJob(spark, config(work)).compact("2019-02-01", 1)
+    assert(entries(work) == 0)
   }
 
   test("CLI bare flags parse positionally: --delete before value options") {
