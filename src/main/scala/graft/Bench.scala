@@ -198,18 +198,10 @@ object Bench {
     }
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = Host.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // driver heap: set at JVM start via build.sbt's forked -Xmx (the
-      // SPARK_DRIVER_MEM env var) — a spark.driver.memory conf here would
-      // be a silent no-op on an already-launched local JVM
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // driver heap: set at JVM start via build.sbt's forked -Xmx (the
+    // SPARK_DRIVER_MEM env var) — a spark.driver.memory conf here would
+    // be a silent no-op on an already-launched local JVM
+    val spark = GraftSession()
 
     spark.range(1000000).selectExpr("sum(id)").collect() // JVM/codegen warmup
 

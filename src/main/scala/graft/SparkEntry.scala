@@ -109,7 +109,7 @@ object SparkEntry {
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ------------------------------------------------- eval / weighting drawer 2
 
@@ -3718,8 +3718,8 @@ object SparkEntry {
       val e = T(s, dir, "lineitem").select(
         col("l_partkey").cast("long").as("src"),
         (col("l_suppkey").cast("long") + lit(10000000L)).as("dst"))
-      // iters pinned by tools.HitsProbe: residual 1.4e-13 (sf0.01) /
-      // 1.4e-13 (sf0.1) at 8 rounds — seven orders inside the 1e-6 gate
+      // 8 rounds leave a half-step residual of 1.4e-13 at sf0.01 and at
+      // sf0.1 — seven orders inside the 1e-6 gate below
       val res = graft.graph.GraphQueries.hits(s, e, iters = 8)
       val eD = e.distinct()
       val aRaw = eD.join(res.select(col("id").as("src"), col("hub")), Seq("src"))
@@ -5182,7 +5182,7 @@ object SparkEntry {
        |)
        |SELECT new_id, old_id, round(jac, 6) AS jaccard FROM j WHERE jac >= 0.7""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Map(
     // the generated six-leg union mirrors the Spark face's union legs
     "q238_fd_discover" -> fdDiscoverSql(Seq("lang", "source", "n_chars")),
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,18 +10,7 @@ object Verify {
     System.setProperty("graft.hash", "md5")
     System.clearProperty("graft.mode")
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events ts unit is driver-owned (changed nanos → µs at round 8);
-      // nanosAsLong makes a NANOS file arrive as a long and SparkEntry.E()
-      // normalizes whatever unit actually arrives
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // Per-query watchdog: one pathological query must not consume the whole
     // correctness run. On timeout the query's job group is cancelled and the

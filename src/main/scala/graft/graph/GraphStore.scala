@@ -157,12 +157,9 @@ class FixedVertexStore(spark: SparkSession, path: String) {
     * (anti-join on id — `MERGE`-style upsert without Delta).
     */
   def load(fixedVertices: DataFrame): Unit = {
-    val existing =
-      try Parquet.read(spark, path).select("id")
-      catch { case _: org.apache.spark.sql.AnalysisException => null }
-    val toWrite =
-      if (existing == null) fixedVertices
-      else fixedVertices.join(broadcast(existing), Seq("id"), "left_anti")
+    val toWrite = Parquet.readIfAny(spark, path).fold(fixedVertices) { existing =>
+      fixedVertices.join(broadcast(existing.select("id")), Seq("id"), "left_anti")
+    }
     toWrite.write.mode(SaveMode.Append).parquet(path)
   }
 

@@ -42,18 +42,14 @@ class IdManager(spark: SparkSession, config: IdManagerConfig) {
 
   private def tablePath: String = s"${config.dataPath}/${config.tableName}"
 
-  /** Reads the accumulated vertex table; on a missing/empty path returns an
-    * empty DataFrame with `id` prepended to the supplied schema.
-    * Ref: IDManagerSparkService.scala:88-100 (readAll).
+  /** Reads the accumulated vertex table; where it holds no data file (a
+    * fresh store, or every loaded day deleted) returns an empty DataFrame
+    * with `id` prepended to the supplied schema, without starting Spark's
+    * reader. Ref: IDManagerSparkService.scala:88-100 (readAll).
     */
   def readAll(schema: StructType): DataFrame =
-    try {
-      val df = Parquet.read(spark, tablePath)
-      if (df.schema.fieldNames.contains("id")) df
-      else emptyWithId(schema)
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException => emptyWithId(schema)
-    }
+    Parquet.readIfAny(spark, tablePath).filter(_.schema.fieldNames.contains("id"))
+      .getOrElse(emptyWithId(schema))
 
   /** Partition-pruned read of the vertex table: only the `year/month/day`
     * partitions of `pm`'s date range are scanned (Catalyst partition

@@ -26,8 +26,9 @@ import org.apache.spark.sql.types.StructType
   * skipped as Spark's file index skips them. The stores write no summary
   * files (`_metadata`), which inference would read first.
   *
-  * Falls back to Spark's inference when no data file is found, so a
-  * missing path still raises `AnalysisException`, and when the read merges
+  * [[read]] falls back to Spark's inference when no data file is found,
+  * so a missing path still raises `AnalysisException` ([[readIfAny]]
+  * answers None there instead), and when the read merges
   * schemas (the `mergeSchema` option or `spark.sql.parquet.mergeSchema`),
   * which needs every footer.
   */
@@ -37,29 +38,47 @@ object Parquet {
     read(spark, Map.empty[String, String], paths)
 
   def read(spark: SparkSession, options: Map[String, String], paths: Seq[String]): DataFrame = {
-    val reader = spark.read.options(options)
-    footerSchema(spark, options, paths).fold(reader)(reader.schema).parquet(paths: _*)
+    val conf = spark.sessionState.newHadoopConfWithOptions(options)
+    load(spark, options, paths, conf, if (mergesSchema(spark, options)) None else firstDataFile(paths, conf))
   }
 
-  /** The data schema (no partition columns) of the first visible data file
-    * under `paths`, from its footer; None where Spark must infer it.
+  /** [[read]], or None when no path holds a visible data file (a missing
+    * path, an empty dir, a table whose every file was deleted). Spark's
+    * reader is not started then, so nothing fails and nothing is logged.
+    * The probe is the listing [[read]] makes for its footer anyway.
     */
-  private def footerSchema(spark: SparkSession, options: Map[String, String], paths: Seq[String]): Option[StructType] = {
-    val sqlConf = spark.sessionState.conf
-    if (new ParquetOptions(options, sqlConf).mergeSchema) None
-    else {
-      val conf = spark.sessionState.newHadoopConfWithOptions(options)
-      paths.iterator.map(p => firstDataFile(new Path(p), conf)).collectFirst { case Some(f) => f }.map { file =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
-        val footer = try reader.getFooter finally reader.close()
-        ParquetFileFormat.readSchemaFromFooter(
-          new Footer(file.getPath, footer), new ParquetToSparkSchemaConverter(sqlConf))
-      }
+  def readIfAny(spark: SparkSession, paths: String*): Option[DataFrame] = {
+    val conf = spark.sessionState.newHadoopConf()
+    firstDataFile(paths, conf).map { file =>
+      load(spark, Map.empty, paths, conf, if (mergesSchema(spark, Map.empty)) None else Some(file))
     }
+  }
+
+  private def mergesSchema(spark: SparkSession, options: Map[String, String]): Boolean =
+    new ParquetOptions(options, spark.sessionState.conf).mergeSchema
+
+  /** Spark's reader over `paths`, with the data schema (no partition
+    * columns) of `footer`'s file where one is given, else inferred.
+    */
+  private def load(spark: SparkSession, options: Map[String, String], paths: Seq[String],
+      conf: Configuration, footer: Option[FileStatus]): DataFrame = {
+    val reader = spark.read.options(options)
+    footer.map(schemaOf(spark, conf, _)).fold(reader)(reader.schema).parquet(paths: _*)
+  }
+
+  private def schemaOf(spark: SparkSession, conf: Configuration, file: FileStatus): StructType = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    val footer = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file.getPath, footer), new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   private def visible(name: String): Boolean =
     !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") || name.endsWith("._COPYING_"))
+
+  /** The first visible data file under `paths`, in path order. */
+  private def firstDataFile(paths: Seq[String], conf: Configuration): Option[FileStatus] =
+    paths.iterator.map(p => firstDataFile(new Path(p), conf)).collectFirst { case Some(f) => f }
 
   /** Depth-first, children in name order, down to the first visible file. */
   private def firstDataFile(path: Path, conf: Configuration): Option[FileStatus] = {

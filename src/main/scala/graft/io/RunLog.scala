@@ -6,7 +6,7 @@ import java.time.LocalDate
 import scala.collection.immutable.SortedMap
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, max}
 
 import graft.ids.IdManagerConfig
@@ -285,10 +285,8 @@ final class RunLog(
     */
   private def adoptLegacy(): Unit = {
     val table = roots(Vertices)
-    val scanned =
-      if (!fs.exists(table)) None
-      else try Option(Parquet.read(spark, table.toString).agg(max(col("id"))).head().get(0)).map(_.asInstanceOf[Long])
-      catch { case _: AnalysisException => None } // no data file in the table
+    val scanned = Parquet.readIfAny(spark, table.toString)
+      .flatMap(df => Option(df.agg(max(col("id"))).head().get(0)).map(_.asInstanceOf[Long]))
     scanned.foreach { m =>
       val sidecar =
         try {

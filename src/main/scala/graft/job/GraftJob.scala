@@ -266,13 +266,7 @@ object Main {
     }
     val opts = pairs.toMap ++ args.filter(bareFlags.contains).map(_ -> "true").toMap
     val preexisting = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).isDefined
-    val cpus = graft.Host.cpus
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(sys.env.get("SPARK_MASTER").map("spark.master" -> _).toSeq: _*)
 
     // --config loads the HOCON file (the reference's UX); explicit flags
     // override its values, so a file can hold the stable parts and the

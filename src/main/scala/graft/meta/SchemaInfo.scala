@@ -57,9 +57,7 @@ object SchemaInfo {
       edgeBasePath: String,
       vertexLabel: String = "alert"
   ): SchemaInfo = {
-    val vertexProps =
-      try props(Parquet.read(spark, vertexTablePath).schema)
-      catch { case _: org.apache.spark.sql.AnalysisException => Nil }
+    val vertexProps = Parquet.readIfAny(spark, vertexTablePath).map(df => props(df.schema)).getOrElse(Nil)
     val labels = edgeLabels(spark, edgeBasePath)
     val edgeProps = labels.map { l =>
       l -> props(Parquet.read(spark, s"$edgeBasePath/label=$l").schema)

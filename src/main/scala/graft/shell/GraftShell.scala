@@ -31,8 +31,7 @@ final case class GraftShell(spark: SparkSession, config: GraftConfig) {
 
   /** The accumulated id-stamped vertex table (empty-safe). */
   def vertices: DataFrame =
-    try Parquet.read(spark, vertexTablePath)
-    catch { case _: org.apache.spark.sql.AnalysisException => spark.emptyDataFrame }
+    Parquet.readIfAny(spark, vertexTablePath).getOrElse(spark.emptyDataFrame)
 
   /** One edge label's stored edge set. */
   def edges(label: String): DataFrame =

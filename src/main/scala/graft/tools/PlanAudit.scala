@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Automated physical-plan audit over the whole driver-contract query
   * surface — the per-round "is every plan still the plan we want" sweep,
   * as a tool instead of a by-hand Explain loop. For every
@@ -218,18 +216,10 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val only = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE defers stage compilation, so a pre-execution plan reports zero
-      // codegen subtrees and hides join strategy in AdaptiveSparkPlan —
-      // the audit wants the STATIC plan shape (prod runs keep AQE on)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // AQE defers stage compilation, so a pre-execution plan reports zero
+    // codegen subtrees and hides join strategy in AdaptiveSparkPlan —
+    // the audit wants the STATIC plan shape (prod runs keep AQE on)
+    val spark = graft.GraftSession("spark.sql.adaptive.enabled" -> "false")
     spark.sparkContext.setLogLevel("ERROR")
     var findings = 0
     val names = graft.SparkEntry.queries.keys.toSeq.sorted

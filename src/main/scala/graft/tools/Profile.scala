@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage profiler for one or more SparkEntry queries: runs each query
   * (bench face, count-forced, like Bench) and prints every completed stage's
@@ -12,7 +11,14 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.tools.Profile <sfDir> <queryName> [queryName ...]
   * Env: SPARK_GRAFT_CPUS (default: the host's processors), SPARK_GRAFT_PROFILE_RUNS (default 2 —
   * run 1 pays codegen, run 2 is reported; stages of earlier runs are
-  * discarded between runs).
+  * discarded between runs), SPARK_GRAFT_MODE (default `bench`; `verify`
+  * profiles the verify face).
+  *
+  * Each run's `[profile] <query> runN <seconds> s rows=<n>` line times the
+  * query's construction and its count together, so it also times the
+  * operators that materialize while the frame is built (iterative loops,
+  * index builds). `SPARK_GRAFT_MODE=verify SPARK_GRAFT_PROFILE_RUNS=3` is
+  * the construction-inclusive stopwatch for the verify face.
   */
 object Profile {
   private final class StageAgg extends SparkListener {
@@ -48,23 +54,13 @@ object Profile {
     if (!sys.props.contains("graft.mode")) System.setProperty("graft.mode", "bench")
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.tail.toSeq
-    val cpus  = graft.Host.cpus
     val runs  = sys.env.getOrElse("SPARK_GRAFT_PROFILE_RUNS", "2").toInt.max(1)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // measurement-only conf overrides for A/B experiments, e.g.
     // SPARK_GRAFT_CONF="spark.sql.adaptive.enabled=false;spark.foo=bar"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").map(_.trim).filter(_.nonEmpty)
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val conf = sys.env.get("SPARK_GRAFT_CONF").toSeq
+      .flatMap(_.split(";").map(_.trim).filter(_.nonEmpty))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    val spark = graft.GraftSession(conf: _*)
     val agg = new StageAgg
     spark.sparkContext.addSparkListener(agg)
     spark.range(1000000).selectExpr("sum(id)").collect()

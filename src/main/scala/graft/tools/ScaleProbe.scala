@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1.0 scale-probe data generator: replicates the sf0.1 tables 10× with
@@ -62,14 +62,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val sf01 = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out  = args.lift(1).getOrElse("scale_probe/sf1.0")
-    val spark = SparkSession.builder()
-      .master(s"local[${graft.Host.cpus}]")
-      .config("spark.sql.shuffle.partitions", graft.Host.cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     val tables = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
     tables.foreach { t =>
@@ -167,21 +160,13 @@ object ScaleProbe {
       else DefaultQueries
     val runsPerScale = sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "2").toInt
     require(runsPerScale >= 1, s"SPARK_GRAFT_PROBE_RUNS must be >= 1, got $runsPerScale")
-    val spark = SparkSession.builder()
-      .master(s"local[${graft.Host.cpus}]")
-      .config("spark.sql.shuffle.partitions", graft.Host.cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // shuffle files of FINISHED queries are only reclaimed when their
-      // RDDs are GC'd, and a probe heap big enough for the 100× tier GCs
-      // rarely — the first sf10 sweep filled the disk with 40+ GB of dead
-      // spill from EARLIER queries before q304's own shuffle even peaked.
-      // An aggressive periodic GC keeps the local dirs bounded to the
-      // running query's working set.
-      .config("spark.cleaner.periodicGC.interval", "90s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // shuffle files of FINISHED queries are only reclaimed when their
+    // RDDs are GC'd, and a probe heap big enough for the 100× tier GCs
+    // rarely — the first sf10 sweep filled the disk with 40+ GB of dead
+    // spill from EARLIER queries before q304's own shuffle even peaked.
+    // An aggressive periodic GC keeps the local dirs bounded to the
+    // running query's working set.
+    val spark = graft.GraftSession("spark.cleaner.periodicGC.interval" -> "90s")
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     // A failed attempt contributes NEITHER its wall-clock nor its row

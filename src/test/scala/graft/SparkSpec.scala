@@ -6,17 +6,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs (one per JVM; tests fork once).
   * Mirrors the reference's SparkTestEnv (utils/SparkTestEnv.scala:11-30).
+  * Four cores and four shuffle partitions on any host; every other
+  * setting is the mains' own ([[GraftSession.settings]]).
   */
 object SparkTestEnv {
   lazy val spark: SparkSession = SparkSession
     .builder()
     .master("local[4]")
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    // events.parquet carries TIMESTAMP(NANOS) — match Verify/Bench sessions
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    .config((GraftSession.settings :+ ("spark.sql.shuffle.partitions" -> "4")).toMap)
     .getOrCreate()
 }
 

@@ -364,6 +364,35 @@ class JobSpec extends SparkSpec {
     assert(!sim.exists { case (s, d) => Set(103L, 104L)(s) || Set(103L, 104L)(d) })
   }
 
+  /** The ERROR lines Spark's `ExecutionListenerBus` logs while `body` runs. */
+  private def listenerErrors(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("listener-errors", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName.endsWith("ExecutionListenerBus") && e.getLevel.isMoreSpecificThan(Level.ERROR))
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    appender.start()
+    root.addAppender(appender)
+    try { body; org.apache.spark.graft.TestSparkInternals.flushListenerBus(spark.sparkContext) }
+    finally root.removeAppender(appender)
+    scala.jdk.CollectionConverters.CollectionHasAsScala(seen).asScala.toList
+  }
+
+  test("a load onto a vertex table with no data file starts no failing Parquet read") {
+    val (_, fresh) = store("graft-first-load")
+    assert(listenerErrors(assert(fresh.process("2019-02-01", 1).vertexCount == 2)).isEmpty)
+    val (_, emptied) = store("graft-emptied-load")
+    emptied.process("2019-02-01", 1)
+    emptied.delete("2019-02-01", 1, clearOnDelete = true)
+    assert(listenerErrors(assert(emptied.process("2019-02-02", 1).vertexCount == 2)).isEmpty)
+  }
+
   test("a run that loads 0 vertices neither blocks nor throws") {
     import spark.implicits._
     val (work, job) = store("graft-job-0v")
